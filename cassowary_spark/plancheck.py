@@ -65,34 +65,26 @@ def single_partition_corpus_windows(df: DataFrame) -> int:
     return _sp_corpus_windows_from_text(formatted_plan(df))
 
 
-def _sp_corpus_windows_from_text(text: str) -> int:
-    """Count Window nodes that rank a CORPUS frame in ONE task.
+def _plan_tree(
+    text: str,
+) -> tuple[dict[int, str], dict[int, list[int]], dict[int, str], dict[int, int]]:
+    """Parse ``explain("formatted")`` text into per-node-id
+    ``(names, children, args, reuse)``.
 
-    The r9-verdict "weak" plan class, made machine-checkable: a
-    Window whose required child distribution is SinglePartition (the
-    ``Exchange SinglePartition`` on its input chain) AND whose input
-    subtree reaches a source scan without passing a
-    cardinality-bounding node (aggregate / limit / TakeOrdered).
-    Partitioned windows over corpus frames are fine (parallel);
-    unpartitioned windows over aggregated frames are fine (bounded);
-    only the combination — every corpus row through one task — is the
-    scale-killer this counts.
-
-    Parses the tree header of ``explain("formatted")`` (node ids +
-    parentage from indentation, 3 chars per level — the ``* ``
-    whole-stage-codegen marker of non-AQE plans adds 2 chars within
-    the same level and is consumed by the prefix class) joined with
-    each node's Arguments from the detail section (which names the
-    exchange's partitioning). ReusedExchange nodes are resolved to
-    the exchange they mirror (``[Reuses operator id: N]`` in the
-    detail section) and the mirrored subtree is walked. Subquery
-    trees are not walked — their windows run per subquery execution
-    and are audited by the budgets' total window/exchange counts
-    instead (empirically vacuous: an r10 full-registry scan found
-    ZERO Window nodes in any query's subquery section).
+    Names and parentage come from the tree header (indentation, 3 chars
+    per level — the ``* `` whole-stage-codegen marker of non-AQE plans
+    adds 2 chars within the same level and is consumed by the prefix
+    class). ``args`` holds each node's Arguments line from the detail
+    section (which names an exchange's partitioning), and ``reuse`` maps
+    a ReusedExchange to the exchange it mirrors (``[Reuses operator id:
+    N]``). All four are empty when the text has no physical plan.
     """
     import re
 
+    names: dict[int, str] = {}
+    children: dict[int, list[int]] = {}
+    args: dict[int, str] = {}
+    reuse: dict[int, int] = {}
     lines = text.splitlines()
     try:
         start = (
@@ -104,10 +96,8 @@ def _sp_corpus_windows_from_text(text: str) -> int:
             + 1
         )
     except StopIteration:
-        return 0
+        return names, children, args, reuse
     head = re.compile(r"^([ :+\-*]*)([A-Za-z][A-Za-z]*)[^(]*\((\d+)\)\s*$")
-    names: dict[int, str] = {}
-    children: dict[int, list[int]] = {}
     by_depth: dict[int, int] = {}
     for l in lines[start:]:
         if not l.strip():
@@ -122,10 +112,6 @@ def _sp_corpus_windows_from_text(text: str) -> int:
         if depth > 0 and (depth - 1) in by_depth:
             children[by_depth[depth - 1]].append(nid)
         by_depth[depth] = nid
-    # Arguments + ReusedExchange references per node id from the
-    # detail section
-    args: dict[int, str] = {}
-    reuse: dict[int, int] = {}
     cur = None
     detail = re.compile(r"^\((\d+)\) ")
     reuse_re = re.compile(
@@ -140,6 +126,31 @@ def _sp_corpus_windows_from_text(text: str) -> int:
                 reuse[cur] = int(r.group(2))
         elif cur is not None and l.startswith("Arguments:"):
             args[cur] = l
+    return names, children, args, reuse
+
+
+def _sp_corpus_windows_from_text(text: str) -> int:
+    """Count Window nodes that rank a CORPUS frame in ONE task.
+
+    The r9-verdict "weak" plan class, made machine-checkable: a
+    Window whose required child distribution is SinglePartition (the
+    ``Exchange SinglePartition`` on its input chain) AND whose input
+    subtree reaches a source scan without passing a
+    cardinality-bounding node (aggregate / limit / TakeOrdered).
+    Partitioned windows over corpus frames are fine (parallel);
+    unpartitioned windows over aggregated frames are fine (bounded);
+    only the combination — every corpus row through one task — is the
+    scale-killer this counts.
+
+    Walks the ``_plan_tree`` of ``explain("formatted")``.
+    ReusedExchange nodes are resolved to the exchange they mirror and
+    the mirrored subtree is walked. Subquery trees are not walked —
+    their windows run per subquery execution and are audited by the
+    budgets' total window/exchange counts instead (empirically vacuous:
+    an r10 full-registry scan found ZERO Window nodes in any query's
+    subquery section).
+    """
+    names, children, args, reuse = _plan_tree(text)
 
     def reaches_corpus(nid: int) -> bool:
         name = names.get(nid, "")
@@ -209,53 +220,7 @@ def _sp_windows_total_from_text(text: str) -> int:
     cardinality-bounding nodes — a window over an aggregated counts
     frame is scale-FINE but still warns, and this counter exists to
     explain warnings."""
-    import re
-
-    lines = text.splitlines()
-    try:
-        start = (
-            next(
-                i
-                for i, l in enumerate(lines)
-                if l.startswith("== Physical Plan ==")
-            )
-            + 1
-        )
-    except StopIteration:
-        return 0
-    head = re.compile(r"^([ :+\-*]*)([A-Za-z][A-Za-z]*)[^(]*\((\d+)\)\s*$")
-    names: dict[int, str] = {}
-    children: dict[int, list[int]] = {}
-    by_depth: dict[int, int] = {}
-    for l in lines[start:]:
-        if not l.strip():
-            break
-        m = head.match(l)
-        if not m:
-            continue
-        prefix, name, nid = m.group(1), m.group(2), int(m.group(3))
-        depth = len(prefix) // 3
-        names[nid] = name
-        children.setdefault(nid, [])
-        if depth > 0 and (depth - 1) in by_depth:
-            children[by_depth[depth - 1]].append(nid)
-        by_depth[depth] = nid
-    args: dict[int, str] = {}
-    reuse: dict[int, int] = {}
-    cur = None
-    detail = re.compile(r"^\((\d+)\) ")
-    reuse_re = re.compile(
-        r"^\((\d+)\) ReusedExchange \[Reuses operator id: (\d+)\]"
-    )
-    for l in lines:
-        m = detail.match(l)
-        if m:
-            cur = int(m.group(1))
-            r = reuse_re.match(l)
-            if r:
-                reuse[cur] = int(r.group(2))
-        elif cur is not None and l.startswith("Arguments:"):
-            args[cur] = l
+    names, children, args, reuse = _plan_tree(text)
 
     def dist_is_single(nid: int) -> bool:
         for c in children.get(nid, []):

@@ -22,7 +22,11 @@ InputFormat + RecordReader + SerDe (SURVEY.md §2 A1-A5, reconstruction
   TTL-expired cells (``local_expiration <= read_ts``) are dropped.
   Rows with no live cells disappear.
 - **SerDe decode** (A4): validators from Statistics.db map cell bytes
-  to Spark-typed values (sources/validators.py).
+  to Spark-typed values (sources/validators.py). One rule: the raw
+  fields of the reader's field table (flat columns, wide
+  ``column_name``/``value``) leave the scan as wire bytes and are
+  decoded a column at a time for Arrow and a value at a time for tuple
+  consumers; every other field is decoded as its row is built.
 - **Pushdown** (§4): ``pushFilters`` consumes partition-key predicates.
   EqualTo/In prune sstables via min/max key + bloom filter and scan
   only the matching index slots; range predicates narrow the scanned
@@ -490,14 +494,9 @@ class SSTableDataSourceReader(DataSourceReader):
         # applied on the decoded clustering value before any field
         # decode — Cassandra's column-slice read, evaluated cell-side.
         self._cluster_preds: list[tuple[str, Any]] = []
-        # flat-schema decode state: column names encoded ONCE (the old
-        # per-row name.encode() was 6 calls/row on a 6-column table),
-        # and a flag flipping _emit into raw-bytes mode for the
-        # vectorized Arrow path in read()
-        self._flat_cols: list[tuple[bytes, Validator]] = [
-            (n.encode("utf-8"), v) for n, v in self.schema.columns
-        ]
-        self._raw_emit = False
+        # flat-schema cell names, encoded ONCE (the old per-row
+        # name.encode() was 6 calls/row on a 6-column table)
+        self._flat_cols: list[bytes] = [n.encode("utf-8") for n, _ in self.schema.columns]
 
     # -- pushdown ------------------------------------------------------
 
@@ -724,31 +723,18 @@ class SSTableDataSourceReader(DataSourceReader):
         return self.schema.ddl()
 
     def _emit(self, key: bytes, cells: dict[bytes, Cell]) -> Iterator[tuple]:
-        """Decode one reconciled partition → output row(s)."""
+        """One reconciled partition → output row(s) in ``_fields()``
+        order: raw fields as wire bytes (None = missing or empty cell =
+        NULL), every other field decoded."""
         key_val = self.schema.key_validator.decode(key)
         if not self._key_ok(key_val):
             return
         if self.wide:
-            if self._raw_emit:
-                # vectorized wide path: raw cell-name/value bytes; the
-                # Arrow batcher (_read_wide) decodes whole columns at
-                # once and casts names binary→string JVM-side of Python
-                for name in sorted(cells):
-                    if name == ROW_MARKER:
-                        continue
-                    cell = cells[name]
-                    yield (key_val, name, cell.value or None, cell.timestamp)
-                return
             for name in sorted(cells):
                 if name == ROW_MARKER:
                     continue
                 cell = cells[name]
-                yield (
-                    key_val,
-                    name.decode("utf-8"),
-                    self.wide_validator.decode(cell.value) if cell.value else None,
-                    cell.timestamp,
-                )
+                yield (key_val, name, cell.value or None, cell.timestamp)
             return
         if self.clustering:
             # Group cells by clustering prefix → one row per CQL3 row.
@@ -849,21 +835,9 @@ class SSTableDataSourceReader(DataSourceReader):
                 yield tuple(row)
             return
         out: list[Any] = [key_val] if self.schema.key_in_output else []
-        if self._raw_emit:
-            # vectorized flat path: raw wire bytes per column (None =
-            # missing/empty = NULL); the Arrow batcher decodes whole
-            # columns at once
-            for ename, _v in self._flat_cols:
-                cell = cells.get(ename)
-                out.append(cell.value if cell is not None and cell.value else None)
-            yield tuple(out)
-            return
-        for ename, validator in self._flat_cols:
+        for ename in self._flat_cols:
             cell = cells.get(ename)
-            if cell is None or not cell.value:
-                out.append(None)
-            else:
-                out.append(validator.decode(cell.value))
+            out.append(cell.value if cell is not None and cell.value else None)
         yield tuple(out)
 
     def _scan_ranges(
@@ -885,8 +859,8 @@ class SSTableDataSourceReader(DataSourceReader):
             vnames = tuple(v.name for _, v in self.clustering)
             name_key = lambda nm: composite_cmp_key(nm, vnames)  # noqa: E731
         if (
-            self._raw_emit
-            and not self.wide
+            not self.wide
+            and not self.clustering
             and self.merge
             and len(slices) == 1
             and name_lo is None
@@ -919,7 +893,7 @@ class SSTableDataSourceReader(DataSourceReader):
                     if check_keys and not self._key_ok(key_val):
                         continue
                     out = [key_val] if key_in else []
-                    for ename, _v in flat_cols:
+                    for ename in flat_cols:
                         v = payload.get(ename)
                         out.append(v if v else None)
                     yield tuple(out)
@@ -984,174 +958,95 @@ class SSTableDataSourceReader(DataSourceReader):
         elif partition.ranges:
             yield from self._scan_ranges(self._slices(partition.ranges), lo, hi)
 
-    def _arrow_fields(self):
+    def _fields(self) -> list[tuple[str, Any, bool]]:
+        """The output fields in row order, as ``(name, validator, raw)``.
+
+        Raw fields (flat columns, wide ``column_name``/``value``) leave
+        ``_emit`` as wire bytes; keys, ``cell_ts``, clustered and
+        collection fields arrive already decoded. A collection field's
+        "validator" only carries the nested Arrow type and its element
+        validator names.
+        """
+        key = (self.schema.key_name, self.schema.key_validator, False)
         if self.wide:
             return [
-                (self.schema.key_name, self.schema.key_validator),
-                ("column_name", get_validator("UTF8Type")),
-                ("value", self.wide_validator),
-                ("cell_ts", get_validator("LongType")),
+                key,
+                ("column_name", get_validator("UTF8Type"), True),
+                ("value", self.wide_validator, True),
+                ("cell_ts", get_validator("LongType"), False),
             ]
         if self.clustering:
+            import types
+
             import pyarrow as pa
 
-            class _CollField:
-                """Arrow-field shim for a collection column: carries the
-                nested arrow type plus the inner validator names (so the
-                TimestampType tuple-fallback check still sees them)."""
-
-                def __init__(self, names: str, arrow_type):
-                    self.name = names
-                    self.arrow_type = arrow_type
-
-            coll_fields = []
+            fields = [key] + [(n, v, False) for n, v in self.clustering + self.schema.columns]
             for cname, kind, v1, v2 in self.collections:
                 if kind == "map":
-                    at = pa.map_(v1.arrow_type, v2.arrow_type)
-                    names = f"{v1.name},{v2.name}"
+                    coll = types.SimpleNamespace(
+                        name=f"{v1.name},{v2.name}",
+                        arrow_type=pa.map_(v1.arrow_type, v2.arrow_type),
+                    )
                 else:
-                    at = pa.list_(v1.arrow_type)
-                    names = v1.name
-                coll_fields.append((cname, _CollField(names, at)))
-            return (
-                [(self.schema.key_name, self.schema.key_validator)]
-                + list(self.clustering)
-                + list(self.schema.columns)
-                + coll_fields
-            )
-        fields = []
-        if self.schema.key_in_output:
-            fields.append((self.schema.key_name, self.schema.key_validator))
-        fields += self.schema.columns
-        return fields
+                    coll = types.SimpleNamespace(name=v1.name, arrow_type=pa.list_(v1.arrow_type))
+                fields.append((cname, coll, False))
+            return fields
+        fields = [key] if self.schema.key_in_output else []
+        return fields + [(n, v, True) for n, v in self.schema.columns]
+
+    def _decode_rows(self, rows: Iterator[tuple]) -> Iterator[tuple]:
+        """``_emit``'s rows for tuple consumers: each raw field decoded a
+        value at a time by its validator (None stays NULL)."""
+        raw = [(i, v.decode) for i, (_, v, is_raw) in enumerate(self._fields()) if is_raw]
+        for row in rows:
+            out = list(row)
+            for i, decode in raw:
+                if out[i] is not None:
+                    out[i] = decode(out[i])
+            yield tuple(out)
 
     def read(self, partition: SSTablePartition) -> Iterator:
         """Emit pyarrow RecordBatches (vectorized Python→JVM transfer).
 
+        Raw fields are decoded a column at a time: fixed-width
+        validators as one numpy frombuffer per batch, strings and binary
+        straight into Arrow (``_raw_column_array``); decoded fields build
+        through ``_array_nopandas``.
+
         Row-tuple fallback when the schema holds timestamps: Arrow
         tz-naive timestamps are interpreted in the session time zone,
         so tuple conversion (which goes through Spark's own
-        datetime handling) is the semantics-safe path there.
+        datetime handling) is the semantics-safe path there. Its raw
+        fields are decoded a value at a time (``_decode_rows``).
         """
         import pyarrow as pa
 
         _stat_gate_zip_invalidation()
-        fields = self._arrow_fields()
-        if any("TimestampType" in v.name for _, v in fields):
-            yield from self._rows(partition)
+        fields = self._fields()
+        rows = self._rows(partition)
+        if any("TimestampType" in v.name for _, v, _ in fields):
+            yield from self._decode_rows(rows)
             return
-        if not self.wide and not self.clustering and not self.collections:
-            yield from self._read_flat(partition, fields)
-            return
-        if self.wide:
-            yield from self._read_wide(partition, fields)
-            return
-        arrow_schema = pa.schema([(n, v.arrow_type) for n, v in fields])
-        buf: list[tuple] = []
-
-        def flush():
-            cols = list(zip(*buf)) if buf else [[] for _ in fields]
-            return pa.RecordBatch.from_arrays(
-                [
-                    _array_nopandas(list(c), f.type)
-                    for c, f in zip(cols, arrow_schema)
-                ],
-                schema=arrow_schema,
-            )
-
-        any_out = False
-        for row in self._rows(partition):
-            buf.append(row)
-            if len(buf) >= self.ARROW_BATCH_ROWS:
-                any_out = True
-                yield flush()
-                buf.clear()
-        if buf or not any_out:
-            yield flush()
-
-    def _read_wide(self, partition: SSTablePartition, fields) -> Iterator:
-        """Vectorized Arrow batching for wide (dynamic-column) mode:
-        _emit yields RAW cell-name and value bytes; per batch the value
-        column decodes as one numpy frombuffer (fixed-width validators)
-        and cell names build one binary Arrow array cast to utf8 —
-        per-cell Python work drops to dict/sort traversal only. The
-        fields are fixed: (key, column_name, value, cell_ts)."""
-        import pyarrow as pa
-
-        arrow_schema = pa.schema([(n, v.arrow_type) for n, v in fields])
-        key_v, _name_v, val_v, ts_v = (v for _, v in fields)
-
-        def flush(buf):
-            cols = list(zip(*buf)) if buf else [(), (), (), ()]
-            return pa.RecordBatch.from_arrays(
-                [
-                    _array_nopandas(list(cols[0]), key_v.arrow_type),
-                    _array_nopandas(list(cols[1]), pa.binary()).cast(pa.string()),
-                    _raw_column_array(cols[2], val_v),
-                    _array_nopandas(list(cols[3]), ts_v.arrow_type),
-                ],
-                schema=arrow_schema,
-            )
-
-        buf: list[tuple] = []
-        any_out = False
-        self._raw_emit = True
-        try:
-            for row in self._rows(partition):
-                buf.append(row)
-                if len(buf) >= self.ARROW_BATCH_ROWS:
-                    any_out = True
-                    yield flush(buf)
-                    buf = []
-        finally:
-            self._raw_emit = False
-        if buf or not any_out:
-            yield flush(buf)
-
-    def _read_flat(self, partition: SSTablePartition, fields) -> Iterator:
-        """Vectorized Arrow batching for flat (non-wide, non-clustered)
-        schemas: _emit yields RAW cell bytes and each fixed-width
-        column decodes as ONE numpy frombuffer per batch instead of a
-        struct.unpack per cell — the scan's Python cost becomes
-        per-row, not per-row-times-per-numeric-column. Strings/binary
-        pass to Arrow as bytes (utf8-validated by Arrow); validators
-        without a numpy dtype (uuid/inet/decimal/varint) fall back to
-        per-value decode within the batch.
-        """
-        import numpy as np
-        import pyarrow as pa
-
-        arrow_schema = pa.schema([(n, v.arrow_type) for n, v in fields])
-        vals = [v for _, v in fields]
-        key_in = self.schema.key_in_output
-
-        def build(col, v, is_key):
-            if is_key:  # key is decoded row-side (needed for _key_ok)
-                return _array_nopandas(list(col), v.arrow_type)
-            return _raw_column_array(col, v)
+        arrow_schema = pa.schema([(n, v.arrow_type) for n, v, _ in fields])
 
         def flush(buf):
             cols = list(zip(*buf)) if buf else [() for _ in fields]
             return pa.RecordBatch.from_arrays(
                 [
-                    build(c, v, key_in and i == 0)
-                    for i, (c, v) in enumerate(zip(cols, vals))
+                    _raw_column_array(c, v) if raw else _array_nopandas(list(c), v.arrow_type)
+                    for c, (_, v, raw) in zip(cols, fields)
                 ],
                 schema=arrow_schema,
             )
 
         buf: list[tuple] = []
         any_out = False
-        self._raw_emit = True
-        try:
-            for row in self._rows(partition):
-                buf.append(row)
-                if len(buf) >= self.ARROW_BATCH_ROWS:
-                    any_out = True
-                    yield flush(buf)
-                    buf = []
-        finally:
-            self._raw_emit = False
+        for row in rows:
+            buf.append(row)
+            if len(buf) >= self.ARROW_BATCH_ROWS:
+                any_out = True
+                yield flush(buf)
+                buf.clear()
         if buf or not any_out:
             yield flush(buf)
 
@@ -1550,11 +1445,14 @@ class SSTableStreamReader(SimpleDataSourceStreamReader):
         ]
 
     def _rows(self, readers) -> Iterator[tuple]:
-        for r in readers:
-            for part in r.scan():
-                live = live_unmerged(part, self._batch.read_ts)
-                if live:
-                    yield from self._batch._emit(part.key, live)
+        def emitted():
+            for r in readers:
+                for part in r.scan():
+                    live = live_unmerged(part, self._batch.read_ts)
+                    if live:
+                        yield from self._batch._emit(part.key, live)
+
+        return self._batch._decode_rows(emitted())
 
     def read(self, start: dict):
         # a picklable iterator (list_iterator, not a generator): the

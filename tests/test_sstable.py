@@ -443,6 +443,64 @@ def test_wide_row_merge_and_cell_updates(tmp_path):
     assert rows == [(1, "b", 9.0, 200)]  # a deleted, b updated LWW
 
 
+def test_timestamp_tables_read_as_decoded_row_tuples(tmp_path):
+    """TimestampType tables leave read() as row tuples, not Arrow: the
+    batch read, the stream reader and a per-value validator decode
+    agree, with NULL for missing and empty cells (flat and wide)."""
+    from cassowary_spark.sources.sstable_datasource import SSTableStreamReader
+
+    ts_v, utf8, dbl, lng = (
+        get_validator(n) for n in ("TimestampType", "UTF8Type", "DoubleType", "LongType")
+    )
+    flat_cols = ((b"ts", ts_v), (b"name", utf8), (b"score", dbl))
+    flat_cells = {
+        0: {b"ts": ts_v.encode(1_600_000_000_000), b"name": b"a", b"score": dbl.encode(1.5)},
+        1: {b"ts": b"", b"name": b"b"},  # empty ts, missing score
+        2: {b"name": b"", b"score": dbl.encode(-2.0)},  # missing ts, empty name
+        3: {b"ts": ts_v.encode(0)},
+        4: {b"score": b""},  # a live row of NULLs
+    }
+    wide_cells = {
+        7: {b"c1": ts_v.encode(1_500_000_000_123), b"c2": b""},
+        8: {b"c0": b"", b"c3": ts_v.encode(86_400_000)},
+    }
+
+    def dec(v, raw):
+        return v.decode(raw) if raw else None
+
+    cases = [
+        (
+            {"key": ["id", "LongType"],
+             "columns": [["ts", "TimestampType"], ["name", "UTF8Type"], ["score", "DoubleType"]]},
+            flat_cells,
+            [(k,) + tuple(dec(v, cells.get(n)) for n, v in flat_cols)
+             for k, cells in flat_cells.items()],
+        ),
+        (
+            {"key": ["uid", "LongType"], "columns": [],
+             "wide": True, "wide_validator": "TimestampType"},
+            wide_cells,
+            [(k, n.decode(), dec(ts_v, raw), 5)
+             for k, cells in wide_cells.items() for n, raw in cells.items()],
+        ),
+    ]
+    for i, (schema, parts, expected) in enumerate(cases):
+        d = str(tmp_path / f"snap{i}")
+        w = SSTableWriter(d, "ks", "cf", 1, schema)
+        for k, cells in parts.items():
+            w.append(Partition(lng.encode(k), cells=[
+                Cell(n, raw, 5) for n, raw in sorted(cells.items())]))
+        w.close()
+        assert any(None in row for row in expected)
+
+        r = SSTableDataSourceReader({"path": d}, None)
+        items = [item for p in r.partitions() for item in r.read(p)]
+        assert all(isinstance(item, tuple) for item in items)
+        assert sorted(items) == sorted(expected)
+        stream = SSTableStreamReader({"path": d})
+        assert sorted(stream.readBetweenOffsets({"gen": 0}, {"gen": 1})) == sorted(expected)
+
+
 def test_wide_snapshot_roundtrip(spark, tmp_path):
     import pyarrow.parquet as pq
 
