@@ -518,7 +518,7 @@ def build_collections_snapshot(sf_dir: str) -> str:
             SELECT l_orderkey,
                    CAST(count(*) AS INT) AS n_items,
                    list(l_extendedprice ORDER BY l_linenumber, l_extendedprice) AS prices,
-                   list(DISTINCT l_suppkey) AS supp_set
+                   list(DISTINCT l_suppkey ORDER BY l_suppkey) AS supp_set
             FROM src GROUP BY 1
         )
         SELECT b.l_orderkey, b.n_items, b.prices, b.supp_set, m.qk, m.qv

@@ -23,8 +23,12 @@ from cassowary_spark.sources.sstable_format import (
     Cell,
     Partition,
     SSTableWriter,
+    collapse_keys,
+    discover_sstables,
     encode_composite,
+    merge_versions,
     range_tombstone,
+    write_generation,
 )
 from cassowary_spark.sources.validators import get_validator
 
@@ -83,19 +87,9 @@ def rows_to_partitions(
                 continue
             cells.append(Cell(name.encode(), col_enc[name](v), timestamp))
         parts.append(Partition(key, cells=cells))
-    parts.sort(key=lambda p: p.key)
-    # Merge same-key rows into one partition (later row's cells append,
-    # winning LWW ties by list order) — the distributed sink does the
-    # same; without it SSTableWriter.append raises "ascending key
-    # order" on the second duplicate, a confusing crash for a fixture
-    # generator fed un-deduplicated rows.
-    merged: list[Partition] = []
-    for p in parts:
-        if merged and merged[-1].key == p.key:
-            merged[-1].cells.extend(p.cells)
-        else:
-            merged.append(p)
-    return merged
+    # same-key rows merge into one partition, exactly as in the
+    # distributed sink
+    return collapse_keys(parts)
 
 
 def write_snapshot(
@@ -117,7 +111,6 @@ def write_snapshot(
     """
     schema = infer_schema(table, key_col)
     parts = rows_to_partitions(table, key_col, schema, base_timestamp)
-    os.makedirs(out_dir, exist_ok=True)
     n = len(parts)
     slices: list[tuple[int, list[Partition]]] = []
     if generations <= 1 or n < generations * 2:
@@ -142,13 +135,9 @@ def write_snapshot(
             slices.append((g + 1, sl))
 
     for gen, sl in slices:
-        w = SSTableWriter(
-            out_dir, keyspace, name, gen, schema, compression=compression,
-            expected_keys=len(sl),
+        write_generation(
+            out_dir, keyspace, name, gen, schema, sl, compression=compression
         )
-        for p in sl:
-            w.append(p)
-        w.close()
     return out_dir
 
 
@@ -164,24 +153,18 @@ def write_tombstone_generation(
 ) -> None:
     """Append a generation containing only row tombstones for ``keys``."""
     key_enc = get_validator(schema["key"][1]).encode
-    parts = sorted(
-        (
-            Partition(
-                key_enc(k),
-                local_deletion_time=LIVE_LDT - 1,
-                marked_for_delete_at=marked_for_delete_at,
-            )
-            for k in keys
-        ),
-        key=lambda p: p.key,
+    parts = [
+        Partition(
+            key_enc(k),
+            local_deletion_time=LIVE_LDT - 1,
+            marked_for_delete_at=marked_for_delete_at,
+        )
+        for k in keys
+    ]
+    write_generation(
+        out_dir, keyspace, name, generation, schema, collapse_keys(parts),
+        compression=compression,
     )
-    w = SSTableWriter(
-        out_dir, keyspace, name, generation, schema, compression=compression,
-        expected_keys=len(parts),
-    )
-    for p in parts:
-        w.append(p)
-    w.close()
 
 
 def composite_slice_bounds(
@@ -222,18 +205,14 @@ def write_range_tombstone_generation(
     produces; merged reads suppress covered cells in older generations.
     """
     key_enc = get_validator(schema["key"][1]).encode
-    by_key: dict[bytes, list[Cell]] = {}
-    for key_val, start, end in deletes:
-        by_key.setdefault(key_enc(key_val), []).append(
-            range_tombstone(start, end, timestamp)
-        )
-    w = SSTableWriter(
-        out_dir, keyspace, name, generation, schema, compression=compression,
-        expected_keys=len(by_key),
+    parts = [
+        Partition(key_enc(key_val), cells=[range_tombstone(start, end, timestamp)])
+        for key_val, start, end in deletes
+    ]
+    write_generation(
+        out_dir, keyspace, name, generation, schema, collapse_keys(parts),
+        compression=compression,
     )
-    for key in sorted(by_key):
-        w.append(Partition(key, cells=by_key[key]))
-    w.close()
 
 
 def write_wide_snapshot(
@@ -269,9 +248,8 @@ def write_wide_snapshot(
         "wide": True,
         "wide_validator": value_validator,
     }
-    os.makedirs(out_dir, exist_ok=True)
     for g in range(generations):
-        by_key: dict[bytes, list[Cell]] = {}
+        parts: list[Partition] = []
         for i in range(g, n, generations):
             key = key_v.encode(_to_python(data[key_col][i]))
             ts = 1
@@ -287,16 +265,12 @@ def write_wide_snapshot(
                     ts = int(tsv)
             cname = str(_to_python(data[name_col][i])).encode("utf-8")
             v = _to_python(data[value_col][i])
-            by_key.setdefault(key, []).append(
-                Cell(cname, b"" if v is None else val_v.encode(v), ts)
-            )
-        w = SSTableWriter(
-            out_dir, keyspace, name, g + 1, schema,
-            compression=compression, expected_keys=len(by_key),
+            cell = Cell(cname, b"" if v is None else val_v.encode(v), ts)
+            parts.append(Partition(key, cells=[cell]))
+        write_generation(
+            out_dir, keyspace, name, g + 1, schema, collapse_keys(parts),
+            compression=compression,
         )
-        for key in sorted(by_key):
-            w.append(Partition(key, cells=by_key[key]))
-        w.close()
     return out_dir
 
 
@@ -344,15 +318,13 @@ def write_clustered_snapshot(
     }
     data = table.to_pydict()
     n = table.num_rows
-    os.makedirs(out_dir, exist_ok=True)
     for g in range(generations):
-        by_key: dict[bytes, list[Cell]] = {}
+        parts: list[Partition] = []
         ts = base_timestamp + g if ts_per_generation else base_timestamp
         for i in range(g, n, generations):
             key = key_v.encode(_to_python(data[key_col][i]))
             prefix = [v.encode(_to_python(data[c][i])) for c, v in cluster_vs]
-            cells = by_key.setdefault(key, [])
-            cells.append(Cell(encode_composite(prefix + [b""]), b"", ts))
+            cells = [Cell(encode_composite(prefix + [b""]), b"", ts)]
             for c in field_cols:
                 v = _to_python(data[c][i])
                 if v is None:
@@ -364,13 +336,11 @@ def write_clustered_snapshot(
                         ts,
                     )
                 )
-        w = SSTableWriter(
-            out_dir, keyspace, name, g + 1, schema,
-            compression=compression, expected_keys=len(by_key),
+            parts.append(Partition(key, cells=cells))
+        write_generation(
+            out_dir, keyspace, name, g + 1, schema, collapse_keys(parts),
+            compression=compression,
         )
-        for key in sorted(by_key):
-            w.append(Partition(key, cells=by_key[key]))
-        w.close()
     return out_dir
 
 
@@ -440,7 +410,6 @@ def write_collections_snapshot(
     }
     data = table.to_pydict()
     n = table.num_rows
-    os.makedirs(out_dir, exist_ok=True)
     ts = base_timestamp
 
     def row_cells(i: int) -> list[Cell]:
@@ -486,25 +455,22 @@ def write_collections_snapshot(
         return cells
 
     for g in range(generations):
-        by_key: dict[bytes, list[Cell]] = {}
+        parts: list[Partition] = []
         for i in range(n):
             key = key_v.encode(_to_python(data[key_col][i]))
             prefix = [v.encode(_to_python(data[c][i])) for c, v in cluster_vs]
-            cells = by_key.setdefault(key, [])
             # row marker in every generation (idempotent under merge)
-            cells.append(Cell(encode_composite(prefix + [b""]), b"", ts))
+            cells = [Cell(encode_composite(prefix + [b""]), b"", ts)]
             # deal element cells round-robin: each generation holds an
             # interleaved slice of every collection
             cells.extend(
                 c for j, c in enumerate(row_cells(i)) if j % generations == g
             )
-        w = SSTableWriter(
-            out_dir, keyspace, name, g + 1, schema,
-            compression=compression, expected_keys=len(by_key),
+            parts.append(Partition(key, cells=cells))
+        write_generation(
+            out_dir, keyspace, name, g + 1, schema, collapse_keys(parts),
+            compression=compression,
         )
-        for key in sorted(by_key):
-            w.append(Partition(key, cells=by_key[key]))
-        w.close()
     return out_dir
 
 
@@ -538,11 +504,6 @@ def compact_snapshot(
     with a range repartition. Don't compact a directory a streaming
     reader is tailing — the new generation would re-emit as a delta.
     """
-    import heapq
-
-    from cassowary_spark.sources.sstable_datasource import reconcile
-    from cassowary_spark.sources.sstable_format import SSTableReader, discover_sstables
-
     readers = discover_sstables(path)
     if len(readers) <= 1:
         return path
@@ -564,34 +525,14 @@ def compact_snapshot(
                 f"fresh directory, not the input snapshot ({path!r}); "
                 "pass a different out_dir or delete_inputs=True"
             )
-        os.makedirs(dest, exist_ok=True)
 
-    def stream(r: SSTableReader):
-        gen = r.generation
-        for part in r.scan(None, None):
-            yield (part.key, gen, part)
-
-    merged = heapq.merge(*(stream(r) for r in readers), key=lambda t: (t[0], t[1]))
     w = SSTableWriter(
         dest, ks, tbl, out_gen, schema,
         expected_keys=max(1, sum(r.stats["rows"] for r in readers)),
     )
-    group: list[tuple[int, Partition]] = []
-    group_key: bytes | None = None
-
-    def flush() -> None:
-        cells = reconcile(group, 0)  # read_ts=0: TTL cells stay live
-        if cells:
-            w.append(Partition(group_key, cells=list(cells.values())))
-
-    for key, gen, part in merged:
-        if key != group_key and group:
-            flush()
-            group = []
-        group_key = key
-        group.append((gen, part))
-    if group:
-        flush()
+    # read_ts=0: TTL cells stay live (expiry is decided at read time)
+    for key, cells in merge_versions([(r.generation, r.scan()) for r in readers], 0):
+        w.append(Partition(key, cells=list(cells.values())))
     w.close()
     if delete_inputs:
         for r in readers:

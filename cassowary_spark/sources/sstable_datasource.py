@@ -13,7 +13,9 @@ InputFormat + RecordReader + SerDe (SURVEY.md §2 A1-A5, reconstruction
 - **Merge + reconcile** (A2): within a partition, a k-way heap merge
   over the per-sstable sorted scans groups rows by key; cells reconcile
   last-write-wins (timestamp, then tombstone-beats-live, then value
-  bytes, then generation — Cassandra's reconcile order). The reference
+  bytes, then generation — Cassandra's reconcile order). Both live in
+  ``sstable_format`` (``merge_versions``, ``reconcile``), shared with
+  ``convert.compact_snapshot``. The reference
   actually surfaced each sstable's rows unmerged and left
   reconciliation to the query layer; ``merge=false`` reproduces that,
   ``merge=true`` (default) does it at scan time.
@@ -37,13 +39,14 @@ InputFormat + RecordReader + SerDe (SURVEY.md §2 A1-A5, reconstruction
 
 Options: ``path`` (snapshot dir), ``merge`` (default true),
 ``read_ts`` (epoch seconds for TTL evaluation; default: far future so
-results are deterministic), ``splits`` (target input partitions,
-default 16), ``columns`` (projection).
+results are deterministic), ``splits`` (target input partitions;
+default: one per ``MIN_ROWS_PER_SPLIT`` index rows or per
+``SPLIT_BYTES`` of data, at most 16 from the byte floor, capped at
+64), ``columns`` (projection).
 """
 
 from __future__ import annotations
 
-import heapq
 import os
 import sys
 from dataclasses import dataclass
@@ -68,24 +71,21 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from cassowary_spark.sources.sstable_format import (
-    FLAG_COUNTER,
-    FLAG_CTX,
-    FLAG_EXPIRING,
-    FLAG_RANGE,
     FORMAT_VERSION,
     ROW_MARKER,
     Cell,
     Partition,
     SSTableReader,
-    SSTableWriter,
     cmp_component,
+    collapse_keys,
     composite_cmp_key,
-    counter_context_shards,
     decode_composite,
     discover_sstables,
     encode_composite,
     live_unmerged,
-    rt_floor,
+    merge_versions,
+    reconcile,
+    write_generation,
 )
 from cassowary_spark.sources.validators import Validator, get_validator
 
@@ -202,123 +202,6 @@ class TableSchema:
             parts.append(f"{self.key_name} {self.key_validator.spark_type}")
         parts += [f"{n} {v.spark_type}" for n, v in self.columns]
         return ", ".join(parts)
-
-
-# -------------------------------------------------------------- merge
-
-
-def reconcile(versions: list[tuple[int, Partition]], read_ts: int) -> dict[bytes, Cell] | None:
-    """Merge one key's partitions from N sstables → live cells by name.
-
-    Cassandra's reconcile: highest timestamp wins; on a timestamp tie a
-    tombstone beats a live cell, then greater value bytes, then newer
-    generation. Row tombstones suppress cells written at or before
-    ``marked_for_delete_at``; range tombstones (DeletionInfo slices,
-    pooled across all versions) suppress covered cells the same way.
-    Returns None when nothing survives.
-    """
-    import struct as _struct
-
-    if len(versions) == 1:
-        # Single-version fast path — the overwhelmingly common shape
-        # (one generation holds the key, or post-compaction snapshots).
-        # No cross-file LWW to rank: a live cell survives iff it beats
-        # the row tombstone and its own TTL. Counter / range-tombstone
-        # cells (rare kinds) drop to the general path below.
-        _, part = versions[0]
-        m = part.marked_for_delete_at
-        live_fast: dict[bytes, Cell | None] = {}
-        ncells = 0
-        ok = True
-        for c in part.cells:
-            f = c.flags
-            if f & 0x0C:  # FLAG_COUNTER | FLAG_RANGE
-                ok = False
-                break
-            ncells += 1
-            if (
-                f & 0x01
-                or (f & FLAG_EXPIRING and c.local_expiration <= read_ts)
-                or c.timestamp <= m
-            ):
-                live_fast[c.name] = None  # dead — kept so dup detection sees it
-            else:
-                live_fast[c.name] = c
-        # duplicate cell names within one sstable (no real memtable
-        # flush produces them, but the format tolerates them) need the
-        # full LWW rank — detected as a count mismatch, fall through
-        if ok and len(live_fast) == ncells:
-            live = {n: c for n, c in live_fast.items() if c is not None}
-            return live or None
-
-    mfda = max(p.marked_for_delete_at for _, p in versions)
-    rts: list[tuple[bytes, bytes, int]] = []
-    best: dict[bytes, tuple[tuple, Cell]] = {}
-    counters: dict[bytes, list[Cell]] = {}
-    get = best.get
-    for gen, part in versions:
-        for cell in part.cells:
-            flags = cell.flags
-            if flags & 0x0C:  # FLAG_COUNTER | FLAG_RANGE — the rare kinds
-                if flags & FLAG_RANGE:
-                    if cell.timestamp > mfda:  # row delete supersedes slices
-                        rts.append((cell.name, cell.value, cell.timestamp))
-                    continue
-                if not flags & 0x01:
-                    counters.setdefault(cell.name, []).append(cell)
-                    continue
-            # hot path: LWW rank (flags & 0x01 is the tombstone bit —
-            # 0/1 compares identically to the old bool)
-            name = cell.name
-            rank = (cell.timestamp, flags & 0x01, cell.value, gen)
-            cur = get(name)
-            if cur is None or rank > cur[0]:
-                best[name] = (rank, cell)
-    live = {
-        name: cell
-        for name, (_, cell) in best.items()
-        if cell.timestamp > mfda
-        and (not rts or cell.timestamp > rt_floor(rts, name))
-        and cell.live_at(read_ts)
-    }
-    # Counter columns: SUM live deltas newer than any delete of the
-    # column (cell tombstone resets the counter; row/range delete too).
-    # Real-snapshot cells (FLAG_CTX) carry whole CounterContexts whose
-    # shards are CUMULATIVE — merge per counter_id by max clock
-    # (Cassandra's context merge) and only then sum distinct shards;
-    # summing per-file totals would double-count shards present in
-    # more than one generation. Plain i64 deltas (our writer,
-    # COUNTER_UPDATE cells) still add on top.
-    for name, deltas in counters.items():
-        floor_ts = mfda if not rts else max(mfda, rt_floor(rts, name))
-        tomb = best.get(name)
-        if tomb is not None and tomb[1].is_tombstone:
-            floor_ts = max(floor_ts, tomb[1].timestamp)
-            live.pop(name, None)
-        alive = [c for c in deltas if c.timestamp > floor_ts]
-        if alive:
-            shards: dict[bytes, tuple[int, int]] = {}
-            total = 0
-            for c in alive:
-                if c.flags & FLAG_CTX:
-                    for cid, clock, count in counter_context_shards(c.value):
-                        cur = shards.get(cid)
-                        # Cassandra's context merge: higher clock wins;
-                        # equal clocks resolve to the LARGER count, so
-                        # iteration order can't pick the smaller side
-                        # of an anomalous equal-clock conflict
-                        if cur is None or clock > cur[0] or (
-                            clock == cur[0] and count > cur[1]
-                        ):
-                            shards[cid] = (clock, count)
-                else:
-                    total += _struct.unpack(">q", c.value)[0]
-            total += sum(count for _, count in shards.values())
-            live[name] = Cell(
-                name, _struct.pack(">q", total),
-                max(c.timestamp for c in alive), FLAG_COUNTER,
-            )
-    return live or None
 
 
 # ----------------------------------------------------------- partitions
@@ -866,7 +749,7 @@ class SSTableDataSourceReader(DataSourceReader):
             and name_lo is None
             and name_hi is None
             # real snapshots use Cassandra's serialization masks —
-            # only the general scan_offsets_real path decodes them
+            # only scan_offsets' real cell parser decodes them
             and not slices[0][0].stats.get("binary_stats")
         ):
             # Fused flat fast path: a single-sstable slice is the only
@@ -903,33 +786,12 @@ class SSTableDataSourceReader(DataSourceReader):
                         yield from self._emit(key, cells)
             return
         if self.merge:
-
-            def stream(reader: SSTableReader, so: int, eo: int):
-                # explicit binding — a genexp here would late-bind the
-                # loop variable and mislabel every stream with the last
-                # reader's generation, silently breaking the LWW
-                # generation tiebreak (caught by the property tests)
-                gen = reader.generation
-                for part in reader.scan_slices(so, eo, name_lo, name_hi, name_key):
-                    yield (part.key, gen, part)
-
-            merged = heapq.merge(
-                *(stream(r, so, eo) for r, so, eo in slices), key=lambda t: (t[0], t[1])
+            sources = (
+                (r.generation, r.scan_slices(so, eo, name_lo, name_hi, name_key))
+                for r, so, eo in slices
             )
-            group_key: bytes | None = None
-            group: list[tuple[int, Partition]] = []
-            for key, gen, part in merged:
-                if key != group_key and group:
-                    cells = reconcile(group, self.read_ts)
-                    if cells:
-                        yield from self._emit(group_key, cells)
-                    group = []
-                group_key = key
-                group.append((gen, part))
-            if group:
-                cells = reconcile(group, self.read_ts)
-                if cells:
-                    yield from self._emit(group_key, cells)
+            for key, cells in merge_versions(sources, self.read_ts):
+                yield from self._emit(key, cells)
         else:
             # Reference parity: one row per sstable version, unmerged
             # (cassowary's InputFormat emitted per-sstable rows and left
@@ -1318,7 +1180,6 @@ class SSTableDataSourceWriter(DataSourceWriter):
         gen = (ctx.taskAttemptId() if ctx else 0) + 1
         key_enc = get_validator(self.table_schema["key"][1]).encode
         col_enc = {n: get_validator(v).encode for n, v in self.table_schema["columns"]}
-        col_names = [n for n, _ in self.table_schema["columns"]]
 
         parts: list = []
         for row in iterator:
@@ -1335,27 +1196,12 @@ class SSTableDataSourceWriter(DataSourceWriter):
             parts.append(Partition(key, cells=cells))
         if not parts:
             return SSTableCommitMessage(None, 0, part_id)
-        parts.sort(key=lambda p: p.key)
-        w = SSTableWriter(
+        parts = collapse_keys(parts)
+        prefix = write_generation(
             self.staging, self.keyspace, self.table, gen, self.table_schema,
-            compression=self.compression, expected_keys=len(parts),
-            layout=self.layout,
+            parts, compression=self.compression, layout=self.layout,
         )
-        last = None
-        n = 0
-        for p in parts:
-            if last is not None and p.key == last.key:
-                last.cells.extend(p.cells)  # same key in one task: merge cells
-                continue
-            if last is not None:
-                w.append(last)
-                n += 1
-            last = p
-        if last is not None:
-            w.append(last)
-            n += 1
-        prefix = w.close()
-        return SSTableCommitMessage(prefix, n, part_id)
+        return SSTableCommitMessage(prefix, len(parts), part_id)
 
     def commit(self, messages) -> None:
         import glob
@@ -1387,12 +1233,10 @@ class SSTableDataSourceWriter(DataSourceWriter):
             # Overwrite-with-empty must leave a READABLE empty
             # snapshot (schema-bearing components, zero rows) — not a
             # bare directory that read_sstable refuses to open.
-            w = SSTableWriter(
-                self.path, self.keyspace, self.table, 1,
-                self.table_schema, compression=self.compression,
-                expected_keys=0, layout=self.layout,
+            write_generation(
+                self.path, self.keyspace, self.table, 1, self.table_schema,
+                [], compression=self.compression, layout=self.layout,
             )
-            w.close()
         for i, prefix in enumerate(staged):
             final_gen = base + i + 1
             for comp in glob.glob(prefix + "-*"):

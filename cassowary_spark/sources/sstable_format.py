@@ -44,12 +44,16 @@ Cassandra's exact index derivation, so point-lookup pruning works on
 genuine snapshots instead of failing open.
 
 Snapshots whose ``Statistics.db`` is Cassandra's binary jb metadata
-are treated as REAL-layout throughout: ``scan_offsets_real`` decodes
-Cassandra's ColumnSerializer masks (DELETION 0x01 / EXPIRATION 0x02 /
-COUNTER 0x04 with CounterContext values / COUNTER_UPDATE 0x08 /
-RANGE_TOMBSTONE 0x10) onto the internal Cell flags, so merge,
-tombstone and TTL semantics downstream are identical
-(tests/test_sstable_real.py drives full real-layout snapshot dirs).
+are treated as REAL-layout throughout: ``scan_offsets`` parses their
+cells with ``_parse_cells_real``, which decodes Cassandra's
+ColumnSerializer masks (DELETION 0x01 / EXPIRATION 0x02 / COUNTER 0x04
+with CounterContext values / COUNTER_UPDATE 0x08 / RANGE_TOMBSTONE
+0x10) onto the internal Cell flags, so merge, tombstone and TTL
+semantics downstream are identical (tests/test_sstable_real.py drives
+full real-layout snapshot dirs).
+
+The merge (``merge_versions`` + ``reconcile``) and the generation write
+(``collapse_keys`` + ``write_generation``) live here too.
 
 ``Statistics.db`` — the writer emits JSON metadata (row count, min/max
 key hex, min/max cell timestamp, and the schema — key alias +
@@ -72,6 +76,7 @@ the DataSource (see ``parse_statistics``).
 from __future__ import annotations
 
 import hashlib
+import heapq
 import io
 import json
 import math
@@ -80,6 +85,7 @@ import struct
 import zlib
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
+from itertools import starmap
 
 FORMAT_VERSION = "jb"
 LIVE_LDT = 0x7FFFFFFF  # local_deletion_time of a live row
@@ -258,6 +264,145 @@ def live_unmerged(part: Partition, read_ts: int) -> dict[bytes, Cell]:
             )
         out[c.name] = c
     return out
+
+
+def reconcile(versions: list[tuple[int, Partition]], read_ts: int) -> dict[bytes, Cell] | None:
+    """Merge one key's partitions from N sstables → live cells by name.
+
+    Cassandra's reconcile: highest timestamp wins; on a timestamp tie a
+    tombstone beats a live cell, then greater value bytes, then newer
+    generation. Row tombstones suppress cells written at or before
+    ``marked_for_delete_at``; range tombstones (DeletionInfo slices,
+    pooled across all versions) suppress covered cells the same way.
+    Returns None when nothing survives.
+    """
+    if len(versions) == 1:
+        # Single-version fast path — the overwhelmingly common shape
+        # (one generation holds the key, or post-compaction snapshots).
+        # No cross-file LWW to rank: a live cell survives iff it beats
+        # the row tombstone and its own TTL. Counter / range-tombstone
+        # cells (rare kinds) drop to the general path below.
+        _, part = versions[0]
+        m = part.marked_for_delete_at
+        live_fast: dict[bytes, Cell | None] = {}
+        ncells = 0
+        ok = True
+        for c in part.cells:
+            f = c.flags
+            if f & 0x0C:  # FLAG_COUNTER | FLAG_RANGE
+                ok = False
+                break
+            ncells += 1
+            if (
+                f & 0x01
+                or (f & FLAG_EXPIRING and c.local_expiration <= read_ts)
+                or c.timestamp <= m
+            ):
+                live_fast[c.name] = None  # dead — kept so dup detection sees it
+            else:
+                live_fast[c.name] = c
+        # duplicate cell names within one sstable (no real memtable
+        # flush produces them, but the format tolerates them) need the
+        # full LWW rank — detected as a count mismatch, fall through
+        if ok and len(live_fast) == ncells:
+            live = {n: c for n, c in live_fast.items() if c is not None}
+            return live or None
+
+    mfda = max(p.marked_for_delete_at for _, p in versions)
+    rts: list[tuple[bytes, bytes, int]] = []
+    best: dict[bytes, tuple[tuple, Cell]] = {}
+    counters: dict[bytes, list[Cell]] = {}
+    get = best.get
+    for gen, part in versions:
+        for cell in part.cells:
+            flags = cell.flags
+            if flags & 0x0C:  # FLAG_COUNTER | FLAG_RANGE — the rare kinds
+                if flags & FLAG_RANGE:
+                    if cell.timestamp > mfda:  # row delete supersedes slices
+                        rts.append((cell.name, cell.value, cell.timestamp))
+                    continue
+                if not flags & 0x01:
+                    counters.setdefault(cell.name, []).append(cell)
+                    continue
+            # hot path: LWW rank (flags & 0x01 is the tombstone bit —
+            # 0/1 compares identically to the old bool)
+            name = cell.name
+            rank = (cell.timestamp, flags & 0x01, cell.value, gen)
+            cur = get(name)
+            if cur is None or rank > cur[0]:
+                best[name] = (rank, cell)
+    live = {
+        name: cell
+        for name, (_, cell) in best.items()
+        if cell.timestamp > mfda
+        and (not rts or cell.timestamp > rt_floor(rts, name))
+        and cell.live_at(read_ts)
+    }
+    # Counter columns: SUM live deltas newer than any delete of the
+    # column (cell tombstone resets the counter; row/range delete too).
+    # Real-snapshot cells (FLAG_CTX) carry whole CounterContexts whose
+    # shards are CUMULATIVE — merge per counter_id by max clock
+    # (Cassandra's context merge) and only then sum distinct shards;
+    # summing per-file totals would double-count shards present in
+    # more than one generation. Plain i64 deltas (our writer,
+    # COUNTER_UPDATE cells) still add on top.
+    for name, deltas in counters.items():
+        floor_ts = mfda if not rts else max(mfda, rt_floor(rts, name))
+        tomb = best.get(name)
+        if tomb is not None and tomb[1].is_tombstone:
+            floor_ts = max(floor_ts, tomb[1].timestamp)
+            live.pop(name, None)
+        alive = [c for c in deltas if c.timestamp > floor_ts]
+        if alive:
+            shards: dict[bytes, tuple[int, int]] = {}
+            total = 0
+            for c in alive:
+                if c.flags & FLAG_CTX:
+                    for cid, clock, count in counter_context_shards(c.value):
+                        cur = shards.get(cid)
+                        # Cassandra's context merge: higher clock wins;
+                        # equal clocks resolve to the LARGER count, so
+                        # iteration order can't pick the smaller side
+                        # of an anomalous equal-clock conflict
+                        if cur is None or clock > cur[0] or (
+                            clock == cur[0] and count > cur[1]
+                        ):
+                            shards[cid] = (clock, count)
+                else:
+                    total += struct.unpack(">q", c.value)[0]
+            total += sum(count for _, count in shards.values())
+            live[name] = Cell(
+                name, struct.pack(">q", total),
+                max(c.timestamp for c in alive), FLAG_COUNTER,
+            )
+    return live or None
+
+
+def merge_versions(sources, read_ts: int):
+    """K-way merge of ``(generation, partitions)`` streams, each sorted
+    by key → ``(key, live cells)`` for every key with live cells at
+    ``read_ts``. Each stream's generation is bound here, by argument:
+    reconcile's last LWW tiebreak reads it."""
+
+    def stream(gen: int, parts):
+        for part in parts:
+            yield (part.key, gen, part)
+
+    merged = heapq.merge(*starmap(stream, sources), key=lambda t: (t[0], t[1]))
+    group_key: bytes | None = None
+    group: list[tuple[int, Partition]] = []
+    for key, gen, part in merged:
+        if key != group_key and group:
+            cells = reconcile(group, read_ts)
+            if cells:
+                yield group_key, cells
+            group = []
+        group_key = key
+        group.append((gen, part))
+    if group:
+        cells = reconcile(group, read_ts)
+        if cells:
+            yield group_key, cells
 
 
 # ---------------------------------------------------------------- bloom
@@ -518,7 +663,7 @@ class SSTableWriter:
 
     def _write_cell_real(self, w, cell: Cell) -> None:
         """One cell body (after the name) in Cassandra 2.0's
-        ColumnSerializer layout — the inverse of scan_offsets_real."""
+        ColumnSerializer layout — the inverse of _parse_cells_real."""
         if cell.flags & FLAG_RANGE:
             # RANGE_TOMBSTONE_MASK: max bound, localDeletionTime,
             # markedForDeleteAt (internal: name=min bound, value=max)
@@ -680,6 +825,35 @@ class SSTableWriter:
         with open(self._component("TOC.txt"), "w") as f:
             f.write("\n".join(components) + "\n")
         return os.path.join(self.directory, self.prefix[:-1])
+
+
+def collapse_keys(parts: list[Partition]) -> list[Partition]:
+    """Sort ``parts`` by key (in place) and merge partitions sharing a
+    key: later cells append, and reconcile ranks duplicate names on
+    read (SSTableWriter.append rejects a repeated key)."""
+    parts.sort(key=lambda p: p.key)
+    out: list[Partition] = []
+    for p in parts:
+        if out and out[-1].key == p.key:
+            out[-1].cells.extend(p.cells)
+        else:
+            out.append(p)
+    return out
+
+
+def write_generation(
+    directory: str, keyspace: str, table: str, generation: int, schema: dict,
+    parts: list[Partition], **writer_options,
+) -> str:
+    """Write key-sorted, key-unique ``parts`` as one sstable generation
+    (bloom sized to the partition count); returns the sstable prefix."""
+    w = SSTableWriter(
+        directory, keyspace, table, generation, schema,
+        expected_keys=len(parts), **writer_options,
+    )
+    for p in parts:
+        w.append(p)
+    return w.close()
 
 
 # ------------------------------------------------- Statistics.db codecs
@@ -970,35 +1144,40 @@ class SSTableReader:
             path = self.prefix + "-Index.db"
             st = os.stat(path)
             cache_key = (path, st.st_mtime_ns, st.st_size)
-            cached = _INDEX_CACHE.get(cache_key)
-            if cached is not None:
-                self._index = cached
-                return cached
-            entries = []
-            with open(path, "rb") as f:
-                raw = f.read()
-            pos = 0
-            unpack = struct.unpack_from
-            append = entries.append
-            n = len(raw)
-            real = bool(self.stats.get("binary_stats"))
-            while pos < n:
-                (klen,) = unpack(">H", raw, pos)
-                key = raw[pos + 2 : pos + 2 + klen]
-                (off,) = unpack(">Q", raw, pos + 2 + klen)
-                append((key, off))
-                pos += 2 + klen + 8
-                if real:
-                    # real jb entries carry the promoted index inline:
-                    # u32 size + blob (we serve slices from our own
-                    # ColumnIndex.db component instead — skip it)
-                    (psize,) = unpack(">I", raw, pos)
-                    pos += 4 + psize
-            # generations are immutable; cache per (path, mtime, size)
-            # so repeated queries in one process parse the index once
-            if len(_INDEX_CACHE) > 64:
-                _INDEX_CACHE.clear()
-            _INDEX_CACHE[cache_key] = entries
+            entries = _INDEX_CACHE.get(cache_key)
+            if entries is None:
+                entries = []
+                with open(path, "rb") as f:
+                    raw = f.read()
+                pos = 0
+                unpack = struct.unpack_from
+                append = entries.append
+                n = len(raw)
+                real = bool(self.stats.get("binary_stats"))
+                while pos < n:
+                    (klen,) = unpack(">H", raw, pos)
+                    key = raw[pos + 2 : pos + 2 + klen]
+                    (off,) = unpack(">Q", raw, pos + 2 + klen)
+                    append((key, off))
+                    pos += 2 + klen + 8
+                    if real:
+                        # real jb entries carry the promoted index inline:
+                        # u32 size + blob (we serve slices from our own
+                        # ColumnIndex.db component instead — skip it)
+                        (psize,) = unpack(">I", raw, pos)
+                        pos += 4 + psize
+                # generations are immutable; cache per (path, mtime, size)
+                # so repeated queries in one process parse the index once
+                if len(_INDEX_CACHE) > 64:
+                    _INDEX_CACHE.clear()
+                _INDEX_CACHE[cache_key] = entries
+            # a Data.db cut at a partition boundary still parses as
+            # whole partitions — only the index shows rows are missing
+            if entries and entries[-1][1] >= self._data.total:
+                raise IOError(
+                    f"{self._data.data_path} is truncated: Index.db places a "
+                    f"partition at offset {entries[-1][1]} of {self._data.total}"
+                )
             self._index = entries
         return self._index
 
@@ -1122,131 +1301,29 @@ class SSTableReader:
         """Yield Partitions from uncompressed byte range [start, end).
 
         Offsets come from Index.db (driver-side planning ships them in
-        the InputPartition, so executors never parse the index).
-
-        Hot loop (per-cell work × every scanned cell): header fields
-        come from direct byte indexing / one fused unpack per cell —
-        measured ~2× over naive per-field unpack_from at 1M+ cells.
+        the InputPartition, so executors never parse the index). One
+        row-header loop for both on-disk layouts, with a cell parser per
+        layout; a stream cut inside a partition raises IOError.
         """
-        if self.stats.get("binary_stats"):
-            # real snapshot: Cassandra's ColumnSerializer masks differ
-            # (RANGE=0x10, COUNTER_UPDATE=0x08) and counter / range-
-            # tombstone cells carry extra fields — separate parser
-            yield from self.scan_offsets_real(start, end)
-            return
-        buf = self._data.read_range(start, end)
+        parse = _parse_cells_real if self.stats.get("binary_stats") else _parse_cells
         pos = 0
-        n = len(buf)
-        unpack_from = struct.unpack_from
-        expiring = FLAG_EXPIRING
-        no_expiry = NO_EXPIRY
-        while pos < n:
-            klen = (buf[pos] << 8) | buf[pos + 1]
-            pos += 2
-            key = buf[pos : pos + klen]
-            pos += klen
-            ldt, mfda = unpack_from(">Iq", buf, pos)
-            pos += 12
-            cells: list[Cell] = []
-            append = cells.append
-            while True:
-                nlen = (buf[pos] << 8) | buf[pos + 1]
+        try:
+            buf = self._data.read_range(start, end)
+            n = len(buf)
+            unpack_from = struct.unpack_from
+            while pos < n:
+                klen = (buf[pos] << 8) | buf[pos + 1]
                 pos += 2
-                if nlen == 0:
-                    break
-                name = buf[pos : pos + nlen]
-                pos += nlen
-                flags = buf[pos]
-                pos += 1
-                ttl, lexp = 0, no_expiry
-                if flags & expiring:
-                    ttl, lexp = unpack_from(">II", buf, pos)
-                    pos += 8
-                ts, vlen = unpack_from(">qi", buf, pos)
-                pos += 12
-                value = buf[pos : pos + vlen]
-                pos += vlen
-                append(Cell(name, value, ts, flags, ttl, lexp))
-            yield Partition(key, ldt, mfda, cells)
-
-    def scan_offsets_real(self, start: int, end: int):
-        """Real jb row decoder (Cassandra 2.0's ``ColumnSerializer``,
-        public source): same row header and end-of-row marker as the
-        stand-in, but real serialization masks — DELETION 0x01,
-        EXPIRATION 0x02, COUNTER 0x04 (extra i64 timestampOfLastDelete
-        and a CounterContext value, collapsed here to its shard-count
-        sum), COUNTER_UPDATE 0x08 (plain i64 delta), RANGE_TOMBSTONE
-        0x10 (u16-prefixed max bound + u32 ldt + i64 markedAt).
-        Everything maps onto the internal Cell flags, so merge /
-        reconcile / tombstone semantics downstream are unchanged.
-        """
-        buf = self._data.read_range(start, end)
-        pos = 0
-        n = len(buf)
-        unpack_from = struct.unpack_from
-        while pos < n:
-            klen = (buf[pos] << 8) | buf[pos + 1]
-            pos += 2
-            key = buf[pos : pos + klen]
-            pos += klen
-            ldt, mfda = unpack_from(">Iq", buf, pos)
-            pos += 12
-            cells: list[Cell] = []
-            append = cells.append
-            while True:
-                nlen = (buf[pos] << 8) | buf[pos + 1]
-                pos += 2
-                if nlen == 0:
-                    break
-                name = buf[pos : pos + nlen]
-                pos += nlen
-                mask = buf[pos]
-                pos += 1
-                if mask & 0x10:  # range tombstone column
-                    (blen,) = unpack_from(">H", buf, pos)
-                    pos += 2
-                    bound = buf[pos : pos + blen]
-                    pos += blen
-                    _rt_ldt, marked = unpack_from(">Iq", buf, pos)
-                    pos += 12
-                    append(Cell(name, bound, marked, FLAG_TOMBSTONE | FLAG_RANGE))
-                    continue
-                if mask & 0x04:  # counter column (context value)
-                    pos += 8  # timestampOfLastDelete
-                    ts, vlen = unpack_from(">qi", buf, pos)
-                    pos += 12
-                    # keep the RAW context: shards are cumulative, so
-                    # cross-generation merge must be per-shard max-
-                    # clock (FLAG_CTX), not a sum of per-file totals
-                    append(
-                        Cell(
-                            name,
-                            buf[pos : pos + vlen],
-                            ts,
-                            FLAG_COUNTER | FLAG_CTX,
-                        )
-                    )
-                    pos += vlen
-                    continue
-                ttl, lexp = 0, NO_EXPIRY
-                flags = 0
-                if mask & 0x02:
-                    ttl, lexp = unpack_from(">II", buf, pos)
-                    pos += 8
-                    flags = FLAG_EXPIRING
-                ts, vlen = unpack_from(">qi", buf, pos)
-                pos += 12
-                value = buf[pos : pos + vlen]
-                pos += vlen
-                if mask & 0x01:
-                    # cell tombstone: value is the 4-byte local
-                    # deletion time, irrelevant to merge semantics
-                    append(Cell(name, b"", ts, FLAG_TOMBSTONE))
-                elif mask & 0x08:
-                    append(Cell(name, value, ts, FLAG_COUNTER))
-                else:
-                    append(Cell(name, value, ts, flags, ttl, lexp))
-            yield Partition(key, ldt, mfda, cells)
+                key = buf[pos : pos + klen]
+                pos += klen
+                ldt, mfda = unpack_from(">Iq", buf, pos)
+                cells, pos = parse(buf, pos + 12)
+                yield Partition(key, ldt, mfda, cells)
+        except (IndexError, struct.error) as exc:
+            raise IOError(
+                f"truncated or corrupt {self._data.data_path}: partition at "
+                f"or after uncompressed offset {start + pos} does not parse"
+            ) from exc
 
     def scan_rows_fast(self, start: int, end: int, read_ts: int):
         """Fused single-version row scan: yield ``(0, key, raw)`` where
@@ -1393,33 +1470,108 @@ class SSTableReader:
                 continue
             region_start = boffs[lo_i]
             region_end = boffs[hi_i + 1] if hi_i + 1 < len(boffs) else part_end - 2
-            buf = self._data.read_range(region_start, region_end)
-            cells: list[Cell] = []
-            append = cells.append
-            pos = 0
-            n = len(buf)
-            unpack_from = struct.unpack_from
-            expiring = FLAG_EXPIRING
-            no_expiry = NO_EXPIRY
-            while pos < n:
-                nlen = (buf[pos] << 8) | buf[pos + 1]
-                pos += 2
-                name = buf[pos : pos + nlen]
-                pos += nlen
-                flags = buf[pos]
-                pos += 1
-                ttl, lexp = 0, no_expiry
-                if flags & expiring:
-                    ttl, lexp = unpack_from(">II", buf, pos)
-                    pos += 8
-                ts, vlen = unpack_from(">qi", buf, pos)
-                pos += 12
-                value = buf[pos : pos + vlen]
-                pos += vlen
-                append(Cell(name, value, ts, flags, ttl, lexp))
+            # the region ends at a cell boundary; the appended
+            # end-of-partition marker lets the one cell parser run it
+            buf = self._data.read_range(region_start, region_end) + b"\x00\x00"
+            cells, _ = _parse_cells(buf, 0)
             yield Partition(key, ldt, mfda, cells)
         if run_start is not None:
             yield from self.scan_offsets(run_start, end)
+
+
+def _parse_cells(buf: bytes, pos: int) -> tuple[list[Cell], int]:
+    """Stand-in layout cells from ``pos`` through the end-of-partition
+    marker → (cells, offset past the marker). Stops only at the marker:
+    a cut buffer raises IndexError or struct.error.
+
+    Hot loop (per-cell work × every scanned cell): header fields come
+    from direct byte indexing / one fused unpack per cell — measured
+    ~2× over naive per-field unpack_from at 1M+ cells.
+    """
+    cells: list[Cell] = []
+    append = cells.append
+    unpack_from = struct.unpack_from
+    expiring = FLAG_EXPIRING
+    no_expiry = NO_EXPIRY
+    while True:
+        nlen = (buf[pos] << 8) | buf[pos + 1]
+        pos += 2
+        if nlen == 0:
+            return cells, pos
+        name = buf[pos : pos + nlen]
+        pos += nlen
+        flags = buf[pos]
+        pos += 1
+        ttl, lexp = 0, no_expiry
+        if flags & expiring:
+            ttl, lexp = unpack_from(">II", buf, pos)
+            pos += 8
+        ts, vlen = unpack_from(">qi", buf, pos)
+        pos += 12
+        value = buf[pos : pos + vlen]
+        pos += vlen
+        append(Cell(name, value, ts, flags, ttl, lexp))
+
+
+def _parse_cells_real(buf: bytes, pos: int) -> tuple[list[Cell], int]:
+    """Real jb cells (Cassandra 2.0's ``ColumnSerializer``, public
+    source), same contract as ``_parse_cells``: real serialization
+    masks — DELETION 0x01, EXPIRATION 0x02, COUNTER 0x04 (extra i64
+    timestampOfLastDelete and a CounterContext value), COUNTER_UPDATE
+    0x08 (plain i64 delta), RANGE_TOMBSTONE 0x10 (u16-prefixed max
+    bound + u32 ldt + i64 markedAt). Everything maps onto the internal
+    Cell flags, so merge / reconcile / tombstone semantics downstream
+    are unchanged.
+    """
+    cells: list[Cell] = []
+    append = cells.append
+    unpack_from = struct.unpack_from
+    while True:
+        nlen = (buf[pos] << 8) | buf[pos + 1]
+        pos += 2
+        if nlen == 0:
+            return cells, pos
+        name = buf[pos : pos + nlen]
+        pos += nlen
+        mask = buf[pos]
+        pos += 1
+        if mask & 0x10:  # range tombstone column
+            (blen,) = unpack_from(">H", buf, pos)
+            pos += 2
+            bound = buf[pos : pos + blen]
+            pos += blen
+            _rt_ldt, marked = unpack_from(">Iq", buf, pos)
+            pos += 12
+            append(Cell(name, bound, marked, FLAG_TOMBSTONE | FLAG_RANGE))
+            continue
+        if mask & 0x04:  # counter column (context value)
+            pos += 8  # timestampOfLastDelete
+            ts, vlen = unpack_from(">qi", buf, pos)
+            pos += 12
+            # keep the RAW context: shards are cumulative, so
+            # cross-generation merge must be per-shard max-clock
+            # (FLAG_CTX), not a sum of per-file totals
+            append(Cell(name, buf[pos : pos + vlen], ts, FLAG_COUNTER | FLAG_CTX))
+            pos += vlen
+            continue
+        ttl, lexp = 0, NO_EXPIRY
+        flags = 0
+        if mask & 0x02:
+            ttl, lexp = unpack_from(">II", buf, pos)
+            pos += 8
+            flags = FLAG_EXPIRING
+        ts, vlen = unpack_from(">qi", buf, pos)
+        pos += 12
+        value = buf[pos : pos + vlen]
+        pos += vlen
+        if mask & 0x01:
+            # cell tombstone: value is the 4-byte local deletion
+            # time, irrelevant to merge semantics
+            append(Cell(name, b"", ts, FLAG_TOMBSTONE))
+        elif mask & 0x08:
+            append(Cell(name, value, ts, FLAG_COUNTER))
+        else:
+            append(Cell(name, value, ts, flags, ttl, lexp))
 
 
 def discover_sstables(directory: str) -> list[SSTableReader]:

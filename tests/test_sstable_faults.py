@@ -30,8 +30,10 @@ SCHEMA = {
 _LONG = get_validator("LongType").encode
 
 
-def _write_snapshot(tmp_path, n=200) -> str:
-    w = SSTableWriter(str(tmp_path), "ks", "cf", 1, SCHEMA, chunk_len=4096)
+def _write_snapshot(tmp_path, n=200, compression="deflate") -> str:
+    w = SSTableWriter(
+        str(tmp_path), "ks", "cf", 1, SCHEMA, chunk_len=4096, compression=compression
+    )
     for i in range(n):
         w.append(
             Partition(
@@ -68,11 +70,23 @@ def test_corrupt_chunk_payload_raises(tmp_path):
         _scan_all(prefix)
 
 
-def test_truncated_data_file_raises(tmp_path):
-    prefix = _write_snapshot(tmp_path)
+@pytest.mark.parametrize("cut", ["half", "last-partition"])
+@pytest.mark.parametrize("compression", ["deflate", None], ids=["deflate", "none"])
+def test_truncated_data_file_raises(tmp_path, compression, cut):
+    """A Data.db cut mid-file or exactly where the last partition
+    starts (for deflate: where the chunk holding it starts, so no
+    checksum sees a partial chunk) must raise, never scan short."""
+    prefix = _write_snapshot(tmp_path, compression=compression)
     path = prefix + "-Data.db"
+    size = os.path.getsize(path)
+    if cut == "half":
+        size //= 2
+    else:
+        r = SSTableReader(prefix)
+        last = r.index()[-1][1]
+        size = r._data.offsets[last // r._data.chunk_len] if compression else last
     with open(path, "r+b") as f:
-        f.truncate(os.path.getsize(path) // 2)
+        f.truncate(size)
     with pytest.raises((IOError, ValueError)):
         _scan_all(prefix)
 
