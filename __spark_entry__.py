@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).
 
 Implementation lives in ``cassowary_spark``; this module only adapts
 the registry to the driver's shape.
@@ -31,16 +31,16 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, ordered so
-    the driver's 50-query adjudication window covers the queries that
-    most need a hard correctness row this round: manual overrides
-    (registry.DRIVER_PRIORITY), then every never-adjudicated key
-    oldest-first (derived from the committed CORRECTNESS_r*.json)."""
+    """One ``(spark, sf_dir) -> DataFrame`` callable per implemented
+    operator from SURVEY.md §2, keyed by query name in registration
+    order. Each call returns a fresh dict."""
     registry.load_all()
-    return registry.ordered(registry.QUERIES)
+    return dict(registry.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL per query key (omitted ⇒ rows-only)."""
+    """DuckDB-runnable ANSI SQL per query key, in registration order;
+    a key of ``queries()`` with no entry here is checked rows-only.
+    Each call returns a fresh dict."""
     registry.load_all()
-    return registry.ordered(registry.ORACLES)
+    return dict(registry.ORACLES)

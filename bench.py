@@ -41,7 +41,7 @@ HEADLINE_QUERIES: tuple[str, ...] = (
     "q_shortest_path", "q_theil_sen", "q_bootstrap_ci",
     "q_corpus_pipeline_e2e", "q_freq_itemsets", "q_hard_negatives",
     "q_raking", "q_zonemap_skip", "q_quantile_normalize",
-    # r15 additions-only (VERDICT r14 item 9): keys restructured in
+    # r15 additions-only: keys restructured in
     # the optimization rounds, appended AFTER the original 30 so the
     # driver's round-over-round comparison keeps its key set and the
     # length-based trim (below) drops these first. Never remove or

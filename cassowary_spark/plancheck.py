@@ -71,10 +71,16 @@ def _plan_tree(
     """Parse ``explain("formatted")`` text into per-node-id
     ``(names, children, args, reuse)``.
 
-    Names and parentage come from the tree header (indentation, 3 chars
-    per level — the ``* `` whole-stage-codegen marker of non-AQE plans
-    adds 2 chars within the same level and is consumed by the prefix
-    class). ``args`` holds each node's Arguments line from the detail
+    Names and parentage come from the tree header: a node's parent is
+    the nearest preceding node with a shorter prefix (the ``* ``
+    whole-stage-codegen marker of non-AQE plans and the 6-column indent
+    under an ``InMemoryTableScan`` make the step per level uneven). A
+    header may carry a trailing annotation after its ``(N)`` id
+    (``InMemoryTableScan (1) (columnarIn=...)``,
+    ``ShuffleQueryStage (7), Statistics(...)``). A cached subtree is
+    spelled out again under every consumer; only a node's first
+    occurrence defines its children, so each edge is recorded once.
+    ``args`` holds each node's Arguments line from the detail
     section (which names an exchange's partitioning), and ``reuse`` maps
     a ReusedExchange to the exchange it mirrors (``[Reuses operator id:
     N]``). All four are empty when the text has no physical plan.
@@ -97,21 +103,26 @@ def _plan_tree(
         )
     except StopIteration:
         return names, children, args, reuse
-    head = re.compile(r"^([ :+\-*]*)([A-Za-z][A-Za-z]*)[^(]*\((\d+)\)\s*$")
-    by_depth: dict[int, int] = {}
+    head = re.compile(
+        r"^([ :+\-*]*)([A-Za-z][A-Za-z]*)[^(]*\((\d+)\)(?:[ ,].*)?$"
+    )
+    # (indent, id, first occurrence?) of the open ancestors
+    stack: list[tuple[int, int, bool]] = []
     for l in lines[start:]:
         if not l.strip():
             break
         m = head.match(l)
         if not m:
             continue
-        prefix, name, nid = m.group(1), m.group(2), int(m.group(3))
-        depth = len(prefix) // 3
+        indent, name, nid = len(m.group(1)), m.group(2), int(m.group(3))
+        while stack and stack[-1][0] >= indent:
+            stack.pop()
+        first = nid not in names
+        if stack and stack[-1][2]:
+            children[stack[-1][1]].append(nid)
         names[nid] = name
         children.setdefault(nid, [])
-        if depth > 0 and (depth - 1) in by_depth:
-            children[by_depth[depth - 1]].append(nid)
-        by_depth[depth] = nid
+        stack.append((indent, nid, first))
     cur = None
     detail = re.compile(r"^\((\d+)\) ")
     reuse_re = re.compile(

@@ -1,7 +1,7 @@
 """Round-12 wave 65 (SURVEY.md §2): driver-visible BATCH TWINS for
 the five streaming choreographies the r11 verdict flagged as
-invisible to CORRECTNESS_r*.json (S13/S14/S16/S18/S19 — each gated
-only by a choreographed pytest until now, q_session_capped
+invisible to the driver's oracle compare (S13/S14/S16/S18/S19 — each
+gated only by a choreographed pytest until now, q_session_capped
 precedent).
 
 Each twin expresses the streaming job's SEMANTICS as a batch query
@@ -53,7 +53,7 @@ def q_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     each side's unmatched emission until its watermark closes the
     window; over a finished input the emitted multiset is exactly
     this batch join, which is what its choreographed pytest proves
-    and what this oracle-gated twin re-checks in the driver window.
+    and what this oracle-gated twin re-checks against DuckDB.
 
     Scale shape: equi-join on user_id with a time-range residual — an
     ordinary hash-partitioned shuffle on both sides, never a

@@ -266,7 +266,7 @@ def q_stream_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The streaming pytest proves final state == this batch mechanism
     bit-for-bit; this twin makes the identical algebra oracle-gated
-    in the driver window (same staircase literals embedded in both
+    (same staircase literals embedded in both
     engines — integer compares only, no transcendentals at runtime).
 
     Scale shape: state/output is one row per event type (bounded

@@ -19,156 +19,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# The external driver adjudicates only the FIRST 50 queries in the dict
-# returned by __spark_entry__.queries(). Python dicts preserve
-# insertion order, so ordered() controls the window.
-#
-# Round-7 rotation — adjudication-debt paydown, now SELF-MAINTAINING.
-# After round 6, 140 of 299 registry keys had never received a driver
-# CORRECTNESS row (the planted-gate-deferral policy, sensible at 112
-# keys, had deferred almost half the registry at 299). The round-6
-# verdict's top action: rotate the 50 OLDEST never-adjudicated keys
-# into the window, oldest-registered first, REGARDLESS of local
-# pytest coverage — the driver's environment has historically
-# surfaced divergences local runs did not (DuckDB DECIMAL overflow at
-# sf0.01, BFS plan-render OOM). ordered() now derives that rotation
-# from the committed CORRECTNESS_r*.json files directly, so each
-# round's window automatically advances past whatever the previous
-# round adjudicated; the r7 window is registration positions 0-49 of
-# the 140-key backlog (starting q_sstable_gen_diff, q_orc_roundtrip,
-# …, ending q_bm25, q_rank_fusion — including the rows-only family's
-# oracle-gated siblings q_simhash_dup/q_ann_lsh_planted/
-# q_ann_ivf_planted), the remaining 90 rotate in over rounds 8-9.
-#
-# DRIVER_PRIORITY is the MANUAL override lane only: list keys here
-# when they must (re-)confirm ahead of the rotation — e.g. a query
-# whose semantics changed after its last green row. Keys listed here
-# jump the queue; leave empty otherwise.
-# r12: empty — the r11 lane (the four rows-only-by-contract keys)
-# achieved its re-execution in the r11 window and was cleared per the
-# r11 verdict; rotation is back on pure oldest-first.
-DRIVER_PRIORITY: tuple[str, ...] = ()
-
-
-def source_hash(name: str) -> str:
-    """Hash of a registered query's CURRENT implementation: function
-    source + oracle SQL. Module-level constants the function reads are
-    not captured — an acceptable approximation; edits overwhelmingly
-    touch the function body or the oracle string."""
-    import hashlib
-    import inspect
-
-    try:
-        src = inspect.getsource(QUERIES[name])
-    except (OSError, TypeError):  # builtins / exec'd code: fall back
-        src = repr(QUERIES[name])
-    return hashlib.sha256(
-        (src + "\x00" + ORACLES.get(name, "")).encode()
-    ).hexdigest()[:16]
-
-
-def _stale_keys(settled: set[str], snapshot: dict | None = None) -> set[str]:
-    """Settled keys whose implementation changed since adjudication.
-
-    ADJUDICATED_SNAPSHOT.json (regenerated each round by
-    scripts/gen_adjudicated_snapshot.py) records the source hash each
-    settled key had when its green row was earned. A differing current
-    hash means the green row vouches for code that no longer exists —
-    the key must re-enter the window. Keys settled but absent from the
-    snapshot are NOT stale (failure-safe: a missing/unregenerated
-    snapshot must not churn the whole window).
-    """
-    import json
-    import os
-
-    if snapshot is not None:
-        snap: object = snapshot
-    else:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        try:
-            with open(os.path.join(root, "ADJUDICATED_SNAPSHOT.json")) as f:
-                snap = json.load(f)
-        except Exception:
-            return set()
-    if not isinstance(snap, dict):
-        return set()
-    return {
-        k
-        for k in settled
-        if k in snap and k in QUERIES and source_hash(k) != snap[k]
-    }
-
-
-def _settled_keys() -> set[str]:
-    """Keys with at least one SETTLED driver CORRECTNESS row.
-
-    The CORRECTNESS_r*.json files are committed at the repo root
-    (sibling of this package); reading them makes the window rotation
-    SELF-MAINTAINING — each round the never-adjudicated backlog
-    automatically shifts forward by however many keys the previous
-    round's window covered, with no manual DRIVER_PRIORITY edit.
-
-    "Settled" means the row actually confirmed the key: either a full
-    three-way pass (rows+schema+hash), or a rows-only record
-    (err == "no_oracle") for a key that STILL has no oracle — the
-    strongest check it can receive. A key whose only rows are
-    failures/errors, or whose rows-only record predates it gaining an
-    oracle (q_session_capped's history), re-enters the window
-    automatically — otherwise a key that FAILed once would be parked
-    behind the whole backlog exactly when it most needs
-    re-confirmation. Failure-safe: unreadable/absent files contribute
-    nothing.
-    """
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    passed: set[str] = set()
-    rows_only: set[str] = set()
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        try:
-            with open(path) as f:
-                d = json.load(f)
-        except Exception:
-            continue
-        if not isinstance(d, dict):
-            continue
-        for k, v in d.items():
-            if not isinstance(v, dict):
-                continue
-            if (
-                v.get("rows_match") is True
-                and v.get("schema_match") is True
-                and v.get("hash_match") is True
-            ):
-                passed.add(k)
-            elif v.get("err") == "no_oracle":
-                rows_only.add(k)
-    return passed | {k for k in rows_only if k not in ORACLES}
-
-
-def _adjudicated_keys() -> set[str]:
-    """Settled keys whose green row still vouches for the current
-    code: ``_settled_keys()`` minus ``_stale_keys`` (keys edited since
-    their adjudication re-enter the window automatically)."""
-    settled = _settled_keys()
-    return settled - _stale_keys(settled)
-
-
-def ordered(d: dict[str, "object"]) -> dict:
-    """Re-key a registry dict into driver-window order: DRIVER_PRIORITY
-    keys first (manual override for keys that must re-confirm, e.g.
-    after a semantics change), then every never-adjudicated key in
-    registration order (the debt-paydown rotation — oldest first),
-    then the already-adjudicated remainder in registration order.
-    Priority keys not (yet) registered are skipped."""
-    out = {k: d[k] for k in DRIVER_PRIORITY if k in d}
-    seen = _adjudicated_keys()
-    out.update((k, v) for k, v in d.items() if k not in out and k not in seen)
-    out.update((k, v) for k, v in d.items() if k not in out)
-    return out
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle`` is DuckDB-runnable ANSI SQL or None

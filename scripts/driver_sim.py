@@ -1,9 +1,9 @@
 #!/usr/bin/env python
-"""Vanilla-session driver simulation over a registry-order slice.
+"""Vanilla-session driver simulation over the registry (or a slice).
 
 The driver's correctness gate imports ``__spark_entry__`` from ITS
 OWN process — a plain SparkSession (no repo conf), a foreign cwd —
-and compares each windowed key against its DuckDB oracle. This script
+and compares each key against its DuckDB oracle. This script
 reproduces that exactly; it has caught classes of failure pytest
 cannot (worker-shipped closures resolving ``cassowary_spark`` only
 via the repo cwd, conf-dependent timestamp reads — see
@@ -12,9 +12,8 @@ via the repo cwd, conf-dependent timestamp reads — see
 Usage (run from ANYWHERE — the script pins no cwd):
     python scripts/driver_sim.py [lo] [hi] [sf_dir]
 
-    lo/hi     registry-order slice (default 0 50 — the upcoming
-              driver window; use 50 100 for the next round's
-              lookahead, 0 350 for the full registry)
+    lo/hi     slice of the registry in registration order
+              (default: the whole registry)
     sf_dir    fixture dir (default /root/testdata/sf0.01 — the
               driver's compare scale)
 
@@ -34,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     lo = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    hi = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+    hi = int(sys.argv[2]) if len(sys.argv) > 2 else None
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.01"
     import __spark_entry__ as e
     from pyspark.sql import SparkSession
@@ -50,12 +49,12 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     q, o = e.queries(), e.oracle_sql()
-    window = list(q)[lo:hi]
+    keys = list(q)[lo:hi]
     con = duck_connection(sf_dir)
     fails: list[str] = []
     rows_only: list[tuple[str, int]] = []
     t0 = time.time()
-    for i, k in enumerate(window):
+    for i, k in enumerate(keys):
         try:
             if k in o:
                 compare(q[k](spark, sf_dir), o[k], con, k)
@@ -66,12 +65,12 @@ def main() -> None:
             print(f"FAIL {k} {ex!r}"[:400], flush=True)
         if (i + 1) % 25 == 0:
             print(
-                f"...{i + 1}/{len(window)} done {round(time.time() - t0)}s",
+                f"...{i + 1}/{len(keys)} done {round(time.time() - t0)}s",
                 flush=True,
             )
             spark.catalog.clearCache()
     print(
-        f"SLICE {lo}:{hi} n={len(window)} ROWS_ONLY:",
+        f"SLICE {lo}:{lo + len(keys)} n={len(keys)} ROWS_ONLY:",
         rows_only,
         "FAILS:",
         fails,

@@ -28,3 +28,15 @@ def test_rows_only_runs(name, spark, sf_dir):
     n = df.count()
     assert n >= 0
     assert df.columns
+
+
+def test_entry_contract_is_the_registry():
+    """The driver contract hands back the registry as registered: same
+    keys in the same order, and every oracle names a query."""
+    import __spark_entry__ as e
+
+    q, o = e.queries(), e.oracle_sql()
+    assert list(q) == list(registry.QUERIES)
+    assert list(o) == list(registry.ORACLES)
+    assert set(o) <= set(q)
+    assert q is not e.queries() and o is not e.oracle_sql()

@@ -512,3 +512,36 @@ class TestSinglePartitionCorpusWindowDetector:
             assert single_partition_corpus_windows(j) == 2
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+
+_CACHED_CORPUS_WINDOW_PLAN = """\
+== Physical Plan ==
+AdaptiveSparkPlan (7)
++- Window (6)
+   +- Sort (5)
+      +- Exchange (4)
+         +- InMemoryTableScan (1) (columnarIn=false, columnarOut=true)
+               +- InMemoryRelation (2)
+                     +- Scan parquet  (3)
+
+
+(1) InMemoryTableScan
+Output [1]: [n_chars#1L]
+Arguments: [n_chars#1L]
+
+(4) Exchange
+Input [1]: [n_chars#1L]
+Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=1]
+"""
+
+
+def test_annotated_header_keeps_cached_subtree_attached():
+    # an InMemoryTableScan header carries a trailing annotation after
+    # its (N) id and indents its child 6 columns: the scan below the
+    # cache must still hang off the exchange the window reads through
+    from cassowary_spark.plancheck import _plan_tree, _sp_corpus_windows_from_text
+
+    names, children, _, _ = _plan_tree(_CACHED_CORPUS_WINDOW_PLAN)
+    assert len(names) == 7
+    assert children[4] == [1] and children[1] == [2] and children[2] == [3]
+    assert _sp_corpus_windows_from_text(_CACHED_CORPUS_WINDOW_PLAN) == 1
