@@ -13,7 +13,6 @@ the bucketed join's physical plan contains ZERO shuffle exchanges
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,7 +21,7 @@ from pyspark.sql import functions as F
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.queries.tpch import _cents, _sql_cents
 from cassowary_spark.registry import query
-from cassowary_spark.tables import load_table, table_path
+from cassowary_spark.tables import derived_fixture, fixture_path, input_digest, load_table
 
 # ------------------------------------- A26 merge-on-read equality deletes
 
@@ -31,9 +30,7 @@ _DEL_MOD_2 = 89  # delete sequence 2: doc_id ≡ 0 (mod 89)
 
 
 def _eqdel_dirs(sf_dir: str) -> tuple[str, str, str]:
-    from cassowary_spark.tables import fixture_cache_dir
-
-    root = fixture_cache_dir(sf_dir, "eq_deletes", dep="documents")
+    root = fixture_path(sf_dir, "eq_deletes", ("documents",))
     return (
         os.path.join(root, "base"),
         os.path.join(root, "del_seq1"),
@@ -49,18 +46,19 @@ def ensure_eqdelete_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str, st
     delete commit appends one key file.
     """
     base, d1, d2 = _eqdel_dirs(sf_dir)
-    if not os.path.exists(os.path.join(base, "_SUCCESS")):
+
+    def build(_root: str) -> None:
         load_table(spark, sf_dir, "documents").select(
             "doc_id", "source", "n_chars"
         ).repartition(8).write.mode("overwrite").parquet(base)
-    if not os.path.exists(os.path.join(d1, "_SUCCESS")):
         spark.read.parquet(base).filter(
             F.col("doc_id") % _DEL_MOD_1 == 0
         ).select("doc_id").coalesce(1).write.mode("overwrite").parquet(d1)
-    if not os.path.exists(os.path.join(d2, "_SUCCESS")):
         spark.read.parquet(base).filter(
             F.col("doc_id") % _DEL_MOD_2 == 0
         ).select("doc_id").coalesce(1).write.mode("overwrite").parquet(d2)
+
+    derived_fixture(sf_dir, "eq_deletes", ("documents",), build)
     return base, d1, d2
 
 
@@ -165,15 +163,7 @@ def _bucket_table_names(sf_dir: str) -> tuple[str, str]:
     size + mtime), so one session serving several sf_dirs (tests at
     sf0.001, oracle parity at sf0.01) never joins mismatched tables.
     """
-    sig = ""
-    for t in ("orders", "lineitem"):
-        p = table_path(sf_dir, t)
-        try:
-            st = os.stat(p)
-            sig += f"{os.path.abspath(p)}|{st.st_size}|{st.st_mtime_ns};"
-        except OSError:
-            sig += os.path.abspath(p) + ";"
-    d = hashlib.md5(sig.encode()).hexdigest()[:10]
+    d = input_digest(sf_dir, ("orders", "lineitem"))
     return f"orders_bkt_{d}", f"lineitem_bkt_{d}"
 
 
@@ -406,16 +396,6 @@ def q_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COMPACT_THRESHOLD = 0.05  # rewrite files whose deleted_frac exceeds this
 
 
-def _compact_dirs(sf_dir: str) -> tuple[str, str]:
-    from cassowary_spark.tables import fixture_cache_dir
-
-    root = fixture_cache_dir(sf_dir, "eq_deletes", dep="documents")
-    return (
-        os.path.join(root, "compacted"),
-        os.path.join(root, "manifest_compacted"),
-    )
-
-
 def compact_eqdeletes(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Compact the equality-delete table (once, idempotent): files
     whose deleted fraction exceeds the threshold are rewritten WITHOUT
@@ -431,45 +411,49 @@ def compact_eqdeletes(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     file-by-file, hottest first.
     """
     base, d1, d2 = ensure_eqdelete_lake(spark, sf_dir)
-    comp, man = _compact_dirs(sf_dir)
-    dels = (
-        spark.read.parquet(d1)
-        .unionByName(spark.read.parquet(d2))
-        .distinct()
-        .withColumn("__del", F.lit(True))
-    )
-    wf = spark.read.parquet(base).withColumn(
-        "file_name", F.col("_metadata.file_name")
-    )
-    flagged = wf.join(F.broadcast(dels), "doc_id", "left")
-    per_file = flagged.groupBy("file_name").agg(
-        (
-            F.sum(F.when(F.col("__del"), 1).otherwise(0)).cast("double")
-            / F.count("*").cast("double")
-        ).alias("frac")
-    )
-    hot = per_file.filter(F.col("frac") > _COMPACT_THRESHOLD).select("file_name")
-    if not os.path.exists(os.path.join(comp, "_SUCCESS")):
+
+    def build(root: str) -> None:
+        dels = (
+            spark.read.parquet(d1)
+            .unionByName(spark.read.parquet(d2))
+            .distinct()
+            .withColumn("__del", F.lit(True))
+        )
+        wf = spark.read.parquet(base).withColumn(
+            "file_name", F.col("_metadata.file_name")
+        )
+        flagged = wf.join(F.broadcast(dels), "doc_id", "left")
+        per_file = flagged.groupBy("file_name").agg(
+            (
+                F.sum(F.when(F.col("__del"), 1).otherwise(0)).cast("double")
+                / F.count("*").cast("double")
+            ).alias("frac")
+        )
+        hot = per_file.filter(F.col("frac") > _COMPACT_THRESHOLD).select("file_name")
         (
             flagged.join(F.broadcast(hot), "file_name", "left_semi")
             .filter(~F.coalesce(F.col("__del"), F.lit(False)))
             .drop("file_name", "__del")
             .coalesce(2)
             .write.mode("overwrite")
-            .parquet(comp)
+            .parquet(os.path.join(root, "compacted"))
         )
-    if not os.path.exists(os.path.join(man, "_SUCCESS")):
         cold = per_file.filter(
             F.col("frac") <= _COMPACT_THRESHOLD
         ).select("file_name")
         new = (
-            spark.read.parquet(comp)
+            spark.read.parquet(os.path.join(root, "compacted"))
             .withColumn("file_name", F.col("_metadata.file_name"))
             .select("file_name")
             .distinct()
         )
-        cold.unionByName(new).coalesce(1).write.mode("overwrite").parquet(man)
-    return base, comp, man
+        cold.unionByName(new).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(root, "manifest")
+        )
+
+    # nested in eq_deletes: the manifest lists base file names
+    root = derived_fixture(sf_dir, "eq_deletes/compaction", ("documents",), build)
+    return base, os.path.join(root, "compacted"), os.path.join(root, "manifest")
 
 
 @query(

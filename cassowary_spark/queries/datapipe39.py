@@ -11,12 +11,13 @@ algebra instead of a library dependency.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table
+from cassowary_spark.tables import derived_fixture, fixture_path, load_table
 
 # ---------------------------------------- A28 partition spec evolution
 
@@ -24,7 +25,7 @@ _PE_LANG = "en"  # the partition-pruned read the query demonstrates
 
 
 def _pe_dirs(sf_dir: str) -> tuple[str, str]:
-    root = fixture_cache_dir(sf_dir, "pe_lake", dep="documents")
+    root = fixture_path(sf_dir, "pe_lake", ("documents",))
     return os.path.join(root, "gen1"), os.path.join(root, "gen2")
 
 
@@ -37,10 +38,8 @@ def ensure_evolved_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     forever and only new files adopt the new one.
     """
     g1, g2 = _pe_dirs(sf_dir)
-    if not (
-        os.path.exists(os.path.join(g1, "_SUCCESS"))
-        and os.path.exists(os.path.join(g2, "_SUCCESS"))
-    ):
+
+    def build(_root: str) -> None:
         d = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "n_chars"
         )
@@ -56,6 +55,8 @@ def ensure_evolved_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .partitionBy("lang", "source")
             .parquet(g2)
         )
+
+    derived_fixture(sf_dir, "pe_lake", ("documents",), build)
     return g1, g2
 
 
@@ -118,8 +119,7 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------ A29 snapshot expiration + physical GC
 
 
-def _se_dirs(sf_dir: str) -> dict[str, str]:
-    root = fixture_cache_dir(sf_dir, "se_lake", dep="orders")
+def _se_dirs(root: str) -> dict[str, str]:
     return {
         "root": root,
         "data": os.path.join(root, "data"),
@@ -128,7 +128,7 @@ def _se_dirs(sf_dir: str) -> dict[str, str]:
         "man1": os.path.join(root, "man_v1"),
         "man2": os.path.join(root, "man_v2"),
         "man3": os.path.join(root, "man_v3"),
-        "expired": os.path.join(root, "_expired_before_v2"),
+        "expired": os.path.join(root, "expired_before_v2.txt"),
     }
 
 
@@ -162,12 +162,11 @@ def ensure_expired_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         unreadable (by contract), v2/v3 reads are untouched because
         expiration only deletes UNREFERENCED files.
     """
-    d = _se_dirs(sf_dir)
-    data, rew, comp = d["data"], d["rewrites"], d["compacted"]
-    man1, man2, man3 = d["man1"], d["man2"], d["man3"]
-    done = lambda p: os.path.exists(os.path.join(p, "_SUCCESS"))  # noqa: E731
-    cutoff = _se_cutoff(spark, sf_dir)
-    if not done(data):
+    def build(root: str) -> None:
+        d = _se_dirs(root)
+        data, rew, comp = d["data"], d["rewrites"], d["compacted"]
+        man1, man2, man3 = d["man1"], d["man2"], d["man3"]
+        cutoff = _se_cutoff(spark, sf_dir)
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -178,19 +177,17 @@ def ensure_expired_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
         o.repartitionByRange(12, "o_orderkey").write.mode(
             "overwrite"
         ).parquet(data)
-    if not done(man1):
         _file_names(spark.read.parquet(data)).coalesce(1).write.mode(
             "overwrite"
         ).parquet(man1)
-    base = spark.read.parquet(data).withColumn(
-        "file_name", F.col("_metadata.file_name")
-    )
-    dirty = (
-        base.filter(F.col("o_orderkey") < cutoff)
-        .select("file_name")
-        .distinct()
-    )
-    if not done(rew):
+        base = spark.read.parquet(data).withColumn(
+            "file_name", F.col("_metadata.file_name")
+        )
+        dirty = (
+            base.filter(F.col("o_orderkey") < cutoff)
+            .select("file_name")
+            .distinct()
+        )
         # CoW: rewrite ONLY dirty files, minus the purged rows
         (
             base.join(F.broadcast(dirty), "file_name", "left_semi")
@@ -200,21 +197,16 @@ def ensure_expired_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             .write.mode("overwrite")
             .parquet(rew)
         )
-    if not done(man2):
         kept = spark.read.parquet(man1).join(
             F.broadcast(dirty), "file_name", "left_anti"
         )
         kept.unionByName(
             _file_names(spark.read.parquet(rew))
         ).coalesce(1).write.mode("overwrite").parquet(man2)
-    if not done(comp):
-        live = _read_at(spark, sf_dir, "man2")
-        live.coalesce(3).write.mode("overwrite").parquet(comp)
-    if not done(man3):
+        _read_at(spark, d, "man2").coalesce(3).write.mode("overwrite").parquet(comp)
         _file_names(spark.read.parquet(comp)).coalesce(1).write.mode(
             "overwrite"
         ).parquet(man3)
-    if not os.path.exists(d["expired"]):
         # GC: drop every data file no LIVE manifest references. The
         # referenced set is manifest-sized metadata (file NAMES), so
         # the driver-side listing mirrors what real table formats'
@@ -231,28 +223,24 @@ def ensure_expired_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
                 if fn.endswith(".parquet") and fn not in referenced:
                     os.remove(os.path.join(dd, fn))
                     removed += 1
-        import shutil
-
-        shutil.rmtree(man1, ignore_errors=True)  # v1 is expired
+        shutil.rmtree(man1)  # v1 is expired
         with open(d["expired"], "w") as f:
             f.write(f"removed={removed}\n")
-    return d
+
+    return _se_dirs(derived_fixture(sf_dir, "se_lake", ("orders",), build))
 
 
-def _read_at(spark: SparkSession, sf_dir: str, man_key: str) -> DataFrame:
-    """Manifest-filtered scan across every physical dir that still
-    exists (the A24 read shape)."""
-    d = _se_dirs(sf_dir)
+def _read_at(spark: SparkSession, d: dict[str, str], man_key: str) -> DataFrame:
+    """Manifest-filtered scan across every physical dir written so far
+    (the A24 read shape)."""
     man = spark.read.parquet(d[man_key])
-    parts = []
-    for key in ("data", "rewrites", "compacted"):
-        p = d[key]
-        if os.path.exists(os.path.join(p, "_SUCCESS")):
-            parts.append(
-                spark.read.parquet(p).withColumn(
-                    "file_name", F.col("_metadata.file_name")
-                )
-            )
+    parts = [
+        spark.read.parquet(d[key]).withColumn(
+            "file_name", F.col("_metadata.file_name")
+        )
+        for key in ("data", "rewrites", "compacted")
+        if os.path.isdir(d[key])
+    ]
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
@@ -305,11 +293,11 @@ def q_snapshot_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     never data — which is exactly what production expire actions
     list on the driver/coordinator.
     """
-    ensure_expired_lake(spark, sf_dir)
+    d = ensure_expired_lake(spark, sf_dir)
 
     def rollup(man_key: str, version: int) -> DataFrame:
         return (
-            _read_at(spark, sf_dir, man_key)
+            _read_at(spark, d, man_key)
             .groupBy(F.col("o_orderstatus").alias("status"))
             .agg(
                 F.count("*").cast("long").alias("n_rows"),

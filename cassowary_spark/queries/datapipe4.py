@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table, table_path
+from cassowary_spark.tables import derived_fixture, load_table, table_path
 
 # --------------------------------- C65 contrastive negative sampling
 
@@ -356,28 +356,23 @@ def build_corrupt_csv(sf_dir: str) -> str:
     receives."""
     import pyarrow.parquet as pq
 
-    out = fixture_cache_dir(sf_dir, "corrupt_csv")
-    path = os.path.join(out, "docs.csv")
-    if os.path.exists(path):
-        return out
-    os.makedirs(out, exist_ok=True)
-    t = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "lang"]
-    )
-    rows = list(
-        zip(t.column("doc_id").to_pylist(), t.column("lang").to_pylist())
-    )
-    mid = len(rows) // 2
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        for doc_id, lang in rows[:mid]:
-            f.write(f"{doc_id},{lang}\n")
-        for line in _BAD_LINES:
-            f.write(line + "\n")
-        for doc_id, lang in rows[mid:]:
-            f.write(f"{doc_id},{lang}\n")
-    os.rename(tmp, path)
-    return out
+    def build(out: str) -> None:
+        t = pq.read_table(
+            table_path(sf_dir, "documents"), columns=["doc_id", "lang"]
+        )
+        rows = list(
+            zip(t.column("doc_id").to_pylist(), t.column("lang").to_pylist())
+        )
+        mid = len(rows) // 2
+        with open(os.path.join(out, "docs.csv"), "w", encoding="utf-8") as f:
+            for doc_id, lang in rows[:mid]:
+                f.write(f"{doc_id},{lang}\n")
+            for line in _BAD_LINES:
+                f.write(line + "\n")
+            for doc_id, lang in rows[mid:]:
+                f.write(f"{doc_id},{lang}\n")
+
+    return derived_fixture(sf_dir, "corrupt_csv", ("documents",), build)
 
 
 @query(
@@ -554,20 +549,16 @@ def build_evolved_lake(spark: SparkSession, sf_dir: str) -> str:
     with different column sets (idempotent, cached): generation 1
     wrote (doc_id, lang), generation 2 added n_chars — the schema
     drift every long-lived lake accumulates."""
-    out = fixture_cache_dir(sf_dir, "evolved_lake")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    d = load_table(spark, sf_dir, "documents")
-    d.select("doc_id", "lang").write.mode("overwrite").parquet(
-        os.path.join(out, "gen=1")
-    )
-    d.select("doc_id", "lang", "n_chars").write.mode("overwrite").parquet(
-        os.path.join(out, "gen=2")
-    )
-    with open(done, "w") as f:
-        f.write("ok\n")
-    return out
+    def build(out: str) -> None:
+        d = load_table(spark, sf_dir, "documents")
+        d.select("doc_id", "lang").write.mode("overwrite").parquet(
+            os.path.join(out, "gen=1")
+        )
+        d.select("doc_id", "lang", "n_chars").write.mode("overwrite").parquet(
+            os.path.join(out, "gen=2")
+        )
+
+    return derived_fixture(sf_dir, "evolved_lake", ("documents",), build)
 
 
 @query(
@@ -727,17 +718,13 @@ def build_corrupt_lake(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the documents table as parquet plus one garbage
     file wearing a .parquet name (idempotent, cached) — the torn
     upload / half-written object every long-lived lake accumulates."""
-    out = fixture_cache_dir(sf_dir, "corrupt_lake")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    d.write.mode("overwrite").parquet(out)
-    with open(os.path.join(out, "part-torn-upload.parquet"), "wb") as f:
-        f.write(b"PAR1this is not a real parquet footer")
-    with open(done, "w") as f:
-        f.write("ok\n")
-    return out
+    def build(out: str) -> None:
+        d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+        d.write.mode("overwrite").parquet(out)
+        with open(os.path.join(out, "part-torn-upload.parquet"), "wb") as f:
+            f.write(b"PAR1this is not a real parquet footer")
+
+    return derived_fixture(sf_dir, "corrupt_lake", ("documents",), build)
 
 
 @query(

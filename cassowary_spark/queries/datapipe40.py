@@ -18,15 +18,14 @@ from pyspark.sql import functions as F
 
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table
+from cassowary_spark.tables import derived_fixture, load_table
 
 # ----------------------------------------------- A30 zone-map skipping
 
 _ZM_LO, _ZM_HI = 1000, 1400  # the pruned key-range probe
 
 
-def _zm_dirs(sf_dir: str) -> tuple[str, str]:
-    root = fixture_cache_dir(sf_dir, "zm_lake", dep="orders")
+def _zm_dirs(root: str) -> tuple[str, str]:
     return os.path.join(root, "data"), os.path.join(root, "stats")
 
 
@@ -35,9 +34,8 @@ def ensure_zonemap_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ZONE MAP: one stats row per file holding the file's min/max
     orderkey — the per-file column bounds a table format records at
     write time (Iceberg manifest entries, Parquet footers)."""
-    data, stats = _zm_dirs(sf_dir)
-    done = lambda p: os.path.exists(os.path.join(p, "_SUCCESS"))  # noqa: E731
-    if not done(data):
+    def build(root: str) -> None:
+        data, stats = _zm_dirs(root)
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -50,7 +48,6 @@ def ensure_zonemap_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         o.repartitionByRange(16, "o_orderkey").write.mode(
             "overwrite"
         ).parquet(data)
-    if not done(stats):
         (
             spark.read.parquet(data)
             .groupBy(F.col("_metadata.file_path").alias("file_path"))
@@ -62,7 +59,8 @@ def ensure_zonemap_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.mode("overwrite")
             .parquet(stats)
         )
-    return data, stats
+
+    return _zm_dirs(derived_fixture(sf_dir, "zm_lake", ("orders",), build))
 
 
 def zonemap_pruned_files(

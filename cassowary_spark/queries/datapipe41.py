@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table
+from cassowary_spark.tables import derived_fixture, load_table
 
 # ------------------------------------------ A31 Bloom-filter skipping
 
@@ -29,8 +29,7 @@ _BF_K = 4  # hash functions
 _BF_TARGET = 137  # the point-lookup probe (doc_id 0-499 at every SF)
 
 
-def _bf_dirs(sf_dir: str) -> tuple[str, str]:
-    root = fixture_cache_dir(sf_dir, "bloom_lake", dep="documents")
+def _bf_dirs(root: str) -> tuple[str, str]:
     return os.path.join(root, "data"), os.path.join(root, "stats")
 
 
@@ -65,9 +64,8 @@ def ensure_bloom_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     maps are useless — plus one Bloom filter per file: the set bits of
     every resident doc_id, packed into (word, bits) longs via bit_or.
     """
-    data, stats = _bf_dirs(sf_dir)
-    done = lambda p: os.path.exists(os.path.join(p, "_SUCCESS"))  # noqa: E731
-    if not done(data):
+    def build(root: str) -> None:
+        data, stats = _bf_dirs(root)
         d = load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "n_chars", "text"
         )
@@ -75,7 +73,6 @@ def ensure_bloom_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         d.repartition(16, F.md5("text")).drop("text").write.mode(
             "overwrite"
         ).parquet(data)
-    if not done(stats):
         base = spark.read.parquet(data).select(
             F.col("_metadata.file_path").alias("file_path"), "doc_id"
         )
@@ -103,7 +100,8 @@ def ensure_bloom_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .write.mode("overwrite")
             .parquet(stats)
         )
-    return data, stats
+
+    return _bf_dirs(derived_fixture(sf_dir, "bloom_lake", ("documents",), build))
 
 
 def bloom_candidate_files(

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table
+from cassowary_spark.tables import derived_fixture, load_table
 
 # ----------------------------------------------- A32 write-audit-publish
 
@@ -21,8 +21,7 @@ _WAP_RETIRE_MOD = 17  # v2 retires orderkeys ≡ 0 (mod 17)
 _WAP_POISON_MOD = 23  # the bad candidate NULLs keys ≡ 0 (mod 23)
 
 
-def _wap_dirs(sf_dir: str) -> dict[str, str]:
-    root = fixture_cache_dir(sf_dir, "wap_lake", dep="orders")
+def _wap_dirs(root: str) -> dict[str, str]:
     return {
         "root": root,
         "v1": os.path.join(root, "snap_v1"),
@@ -65,11 +64,10 @@ def publish(d: dict, snap_key: str, version: int, audit: dict) -> bool:
     if os.path.exists(d["audit"]):
         with open(d["audit"]) as f:
             log = json.load(f)
-    if not any(e["version"] == version and e["snapshot"] == snap_key for e in log):
-        log.append(entry)
-        with open(d["audit"] + ".tmp", "w") as f:
-            json.dump(log, f)
-        os.replace(d["audit"] + ".tmp", d["audit"])
+    log.append(entry)
+    with open(d["audit"] + ".tmp", "w") as f:
+        json.dump(log, f)
+    os.replace(d["audit"] + ".tmp", d["audit"])
     if not audit["passed"]:
         return False
     with open(d["ptr"] + ".tmp", "w") as f:
@@ -83,20 +81,17 @@ def ensure_wap_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     poisoned candidate (NULLed keys — the audit catches it and the
     pointer stays on v1), then publish the clean v2 retention update.
     """
-    d = _wap_dirs(sf_dir)
-    done = lambda p: os.path.exists(os.path.join(p, "_SUCCESS"))  # noqa: E731
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    if not done(d["v1"]):
+    def build(root: str) -> None:
+        d = _wap_dirs(root)
+        o = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey",
+            "o_orderstatus",
+            F.floor(F.col("o_totalprice") * F.lit(100.0) + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
         o.coalesce(4).write.mode("overwrite").parquet(d["v1"])
-    if not os.path.exists(d["ptr"]):
         publish(d, "v1", 1, audit_candidate(spark.read.parquet(d["v1"])))
-    if not done(d["bad"]):
         # the poisoned candidate: a buggy upstream NULLs some keys
         o.select(
             F.when(F.col("o_orderkey") % _WAP_POISON_MOD == 0, None)
@@ -105,17 +100,16 @@ def ensure_wap_lake(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             "o_orderstatus",
             "cents",
         ).coalesce(4).write.mode("overwrite").parquet(d["bad"])
-    if not done(d["v2"]):
         o.filter(F.col("o_orderkey") % _WAP_RETIRE_MOD != 0).coalesce(
             4
         ).write.mode("overwrite").parquet(d["v2"])
-    # replay the audit decisions idempotently (version-keyed log)
-    published_bad = publish(
-        d, "bad", 2, audit_candidate(spark.read.parquet(d["bad"]))
-    )
-    assert not published_bad  # contract must reject the poison
-    publish(d, "v2", 3, audit_candidate(spark.read.parquet(d["v2"])))
-    return d
+        published_bad = publish(
+            d, "bad", 2, audit_candidate(spark.read.parquet(d["bad"]))
+        )
+        assert not published_bad  # contract must reject the poison
+        publish(d, "v2", 3, audit_candidate(spark.read.parquet(d["v2"])))
+
+    return _wap_dirs(derived_fixture(sf_dir, "wap_lake", ("orders",), build))
 
 
 def read_published(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -13,8 +13,6 @@ bit-identical under any partitioning.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -500,14 +498,14 @@ def q_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     write is a one-pass export. Schema is supplied, so no
     inference job runs at scale.
     """
-    from cassowary_spark.tables import fixture_cache_dir
+    from cassowary_spark.tables import derived_fixture
 
     d = load_table(spark, sf_dir, "documents")
-    xml_dir = fixture_cache_dir(sf_dir, "documents_xml", dep="documents")
-    if not os.path.exists(os.path.join(xml_dir, "_SUCCESS")):
-        d.coalesce(4).write.format("xml").option("rowTag", "doc").mode(
-            "overwrite"
-        ).save(xml_dir)
+    xml_dir = derived_fixture(
+        sf_dir, "documents_xml", ("documents",),
+        lambda p: d.coalesce(4).write.format("xml").option("rowTag", "doc")
+        .mode("overwrite").save(p),
+    )
     back = (
         spark.read.format("xml")
         .option("rowTag", "doc")

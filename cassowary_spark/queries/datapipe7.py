@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import load_table
+from cassowary_spark.tables import derived_fixture, fixture_path, load_table
 
 # ------------------------------------------- A23 copy-on-write erasure
 
@@ -29,14 +29,12 @@ _ERASE_MOD = 97  # custkeys ≡ 0 (mod 97) are the right-to-be-forgotten set
 
 
 def _cow_dirs(sf_dir: str) -> tuple[str, str, str, str]:
-    from cassowary_spark.tables import fixture_cache_dir
-
-    root = fixture_cache_dir(sf_dir, "cow_lake", dep="orders")
+    root = fixture_path(sf_dir, "cow_lake", ("orders",))
     return (
         os.path.join(root, "data"),
         os.path.join(root, "manifest_v1"),
-        os.path.join(root, "rewrites"),
-        os.path.join(root, "manifest_v2"),
+        os.path.join(root, "erased", "rewrites"),
+        os.path.join(root, "erased", "manifest_v2"),
     )
 
 
@@ -49,10 +47,8 @@ def _ensure_cow_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     v1 manifest — the manifest IS the table: a file is live iff listed.
     """
     data, man1, _, _ = _cow_dirs(sf_dir)
-    if not (
-        os.path.exists(os.path.join(data, "_SUCCESS"))
-        and os.path.exists(os.path.join(man1, "_SUCCESS"))
-    ):
+
+    def build(_root: str) -> None:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_custkey",
@@ -65,18 +61,21 @@ def _ensure_cow_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         _with_file(spark.read.parquet(data)).select(
             "file_name"
         ).distinct().coalesce(1).write.mode("overwrite").parquet(man1)
+
+    derived_fixture(sf_dir, "cow_lake", ("orders",), build)
     return data, man1
 
 
 def cow_erase(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """Run the copy-on-write erasure once (idempotent via _SUCCESS
-    markers): rewrite dirty files minus target rows into ``rewrites``,
-    then publish ``manifest_v2`` = (v1 − dirty) ∪ rewrite files.
-    Returns (data_dir, rewrites_dir, manifest_v2_dir)."""
+    """Run the copy-on-write erasure once: rewrite dirty files minus
+    target rows into ``rewrites``, then publish ``manifest_v2`` =
+    (v1 − dirty) ∪ rewrite files. Returns (data_dir, rewrites_dir,
+    manifest_v2_dir)."""
     data, man1, rew, man2 = _cow_dirs(sf_dir)
     _ensure_cow_lake(spark, sf_dir)
     target = F.col("o_custkey") % _ERASE_MOD == 0
-    if not os.path.exists(os.path.join(rew, "_SUCCESS")):
+
+    def build(_root: str) -> None:
         base = _with_file(spark.read.parquet(data))
         dirty = base.filter(target).select("file_name").distinct()
         # rows of dirty files, minus the erased customers' rows
@@ -88,9 +87,6 @@ def cow_erase(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
             .write.mode("overwrite")
             .parquet(rew)
         )
-    if not os.path.exists(os.path.join(man2, "_SUCCESS")):
-        base = _with_file(spark.read.parquet(data))
-        dirty = base.filter(target).select("file_name").distinct()
         v1 = spark.read.parquet(man1)
         kept = v1.join(F.broadcast(dirty), "file_name", "left_anti")
         new = (
@@ -101,6 +97,9 @@ def cow_erase(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
         kept.unionByName(new).coalesce(1).write.mode("overwrite").parquet(
             man2
         )
+
+    # nested in cow_lake: the manifest lists the lake's file names
+    derived_fixture(sf_dir, "cow_lake/erased", ("orders",), build)
     return data, rew, man2
 
 
@@ -108,14 +107,7 @@ def cow_read_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the post-erasure table: (data ∪ rewrites) restricted to
     manifest_v2's live files — the manifest-filtered scan every
     table-format reader performs."""
-    data, rew, man2 = cow_erase(spark, sf_dir)
-    man = spark.read.parquet(man2)
-    union = _with_file(spark.read.parquet(data)).unionByName(
-        _with_file(spark.read.parquet(rew))
-    )
-    return union.join(F.broadcast(man), "file_name", "left_semi").drop(
-        "file_name"
-    )
+    return _cow_read_at(spark, sf_dir, cow_erase(spark, sf_dir)[2])
 
 
 @query(
@@ -296,11 +288,13 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cow_read_at(spark: SparkSession, sf_dir: str, man_dir: str) -> DataFrame:
-    data, rew, _ = _cow_dirs(sf_dir)[0], _cow_dirs(sf_dir)[2], None
+    """(data ∪ rewrites) restricted to one manifest's files; needs the
+    erasure to have run (``cow_erase``)."""
+    data, _, rew, _ = _cow_dirs(sf_dir)
     man = spark.read.parquet(man_dir)
-    union = _with_file(spark.read.parquet(data))
-    if os.path.exists(os.path.join(rew, "_SUCCESS")):
-        union = union.unionByName(_with_file(spark.read.parquet(rew)))
+    union = _with_file(spark.read.parquet(data)).unionByName(
+        _with_file(spark.read.parquet(rew))
+    )
     return union.join(F.broadcast(man), "file_name", "left_semi").drop(
         "file_name"
     )

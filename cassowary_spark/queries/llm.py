@@ -37,7 +37,7 @@ from cassowary_spark.operators.text import (
 )
 from cassowary_spark.exprs import srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import load_table
+from cassowary_spark.tables import derived_fixture, load_table
 
 # ---------------------------------------------------------------- helpers
 
@@ -482,23 +482,16 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, k_centroids: int = 8) -> s
     state) buckets the corpus into inverted lists persisted as parquet
     partitioned by cluster id. Queries are probe-only reads.
     """
-    import os
-
     from cassowary_spark.operators.similarity import write_ivf_index
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    path = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")),
-        f"ivf_embeddings_k{k_centroids}",
-    )
-    if os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
-        return path
     e = load_table(spark, sf_dir, "embeddings")
-    write_ivf_index(
-        e.filter(F.col("vec_id") != 0), "vec_id", "embedding", path,
-        k_centroids=k_centroids,
+    return derived_fixture(
+        sf_dir, f"ivf_embeddings_k{k_centroids}", ("embeddings",),
+        lambda path: write_ivf_index(
+            e.filter(F.col("vec_id") != 0), "vec_id", "embedding", path,
+            k_centroids=k_centroids,
+        ),
     )
-    return path
 
 
 @query("q_ann_ivf")  # rows-only: approximate by construction

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import fixture_cache_dir, load_table, table_path
+from cassowary_spark.tables import derived_fixture, load_table, table_path
 
 # --------------------------------------------------------- C61 BM25
 
@@ -423,22 +423,17 @@ def build_binary_corpus(sf_dir: str) -> str:
     exists, and the input the binaryFile connector ingests."""
     import pyarrow.parquet as pq
 
-    out = fixture_cache_dir(sf_dir, "binary_corpus")
-    done = os.path.join(out, "_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
-    t = pq.read_table(
-        table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-    )
-    for doc_id, text in zip(
-        t.column("doc_id").to_pylist(), t.column("text").to_pylist()
-    ):
-        with open(os.path.join(out, f"{doc_id}.txt"), "wb") as f:
-            f.write(text.encode("utf-8"))
-    with open(done, "w") as f:
-        f.write("ok\n")
-    return out
+    def build(out: str) -> None:
+        t = pq.read_table(
+            table_path(sf_dir, "documents"), columns=["doc_id", "text"]
+        )
+        for doc_id, text in zip(
+            t.column("doc_id").to_pylist(), t.column("text").to_pylist()
+        ):
+            with open(os.path.join(out, f"{doc_id}.txt"), "wb") as f:
+                f.write(text.encode("utf-8"))
+
+    return derived_fixture(sf_dir, "binary_corpus", ("documents",), build)
 
 
 @query(

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from cassowary_spark.operators.versions import latest_version, suppress_tombstones
 from cassowary_spark.exprs import srnd
 from cassowary_spark.registry import query
-from cassowary_spark.tables import load_table, table_path
+from cassowary_spark.tables import derived_fixture, fixture_path, load_table, table_path
 
 
 @query(
@@ -168,32 +168,27 @@ def build_sstable_snapshot(sf_dir: str) -> str:
         write_tombstone_generation,
     )
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "supplier"
-    )
-    if os.path.exists(os.path.join(snap, "ks-supplier-jb-4-TOC.txt")):
-        return snap
+    def build(snap: str) -> None:
+        t = pq.read_table(table_path(sf_dir, "supplier"))
+        phantom_keys = [10_000_001 + i for i in range(5)]
+        phantom = pa.table(
+            {
+                "s_suppkey": pa.array(phantom_keys, pa.int64()),
+                "s_name": pa.array([f"Phantom#{k}" for k in phantom_keys]),
+                "s_nationkey": pa.array([0] * 5, pa.int32()),
+                "s_acctbal": pa.array([0.0] * 5, pa.float64()),
+            }
+        )
+        write_snapshot(
+            pa.concat_tables([t, phantom]), snap, "s_suppkey",
+            keyspace="ks", name="supplier", generations=3,
+        )
+        write_tombstone_generation(
+            snap, infer_schema(t, "s_suppkey"), phantom_keys,
+            generation=4, keyspace="ks", name="supplier",
+        )
 
-    t = pq.read_table(table_path(sf_dir, "supplier"))
-    phantom_keys = [10_000_001 + i for i in range(5)]
-    phantom = pa.table(
-        {
-            "s_suppkey": pa.array(phantom_keys, pa.int64()),
-            "s_name": pa.array([f"Phantom#{k}" for k in phantom_keys]),
-            "s_nationkey": pa.array([0] * 5, pa.int32()),
-            "s_acctbal": pa.array([0.0] * 5, pa.float64()),
-        }
-    )
-    write_snapshot(
-        pa.concat_tables([t, phantom]), snap, "s_suppkey",
-        keyspace="ks", name="supplier", generations=3,
-    )
-    write_tombstone_generation(
-        snap, infer_schema(t, "s_suppkey"), phantom_keys,
-        generation=4, keyspace="ks", name="supplier",
-    )
-    return snap
+    return derived_fixture(sf_dir, "supplier", ("supplier",), build)
 
 
 @query(
@@ -256,24 +251,20 @@ def build_wide_snapshot(sf_dir: str) -> str:
 
     from cassowary_spark.sources.convert import write_wide_snapshot
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "events_wide"
-    )
-    if os.path.exists(os.path.join(snap, "ks-events-jb-2-TOC.txt")):
-        return snap
-    t = pq.read_table(table_path(sf_dir, "events"), columns=["user_id", "event_id", "ts", "value"])
-    import pyarrow.compute as pc
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    padded = pc.utf8_lpad(pc.cast(t.column("event_id"), pa.string()), 12, "0")
-    t = t.set_column(t.schema.get_field_index("event_id"), "event_id", padded)
-    write_wide_snapshot(
-        t, snap, key_col="user_id", name_col="event_id", value_col="value",
-        ts_col="ts", value_validator="DoubleType", keyspace="ks", name="events",
-        generations=2,
-    )
-    return snap
+    def build(snap: str) -> None:
+        t = pq.read_table(table_path(sf_dir, "events"), columns=["user_id", "event_id", "ts", "value"])
+        padded = pc.utf8_lpad(pc.cast(t.column("event_id"), pa.string()), 12, "0")
+        t = t.set_column(t.schema.get_field_index("event_id"), "event_id", padded)
+        write_wide_snapshot(
+            t, snap, key_col="user_id", name_col="event_id", value_col="value",
+            ts_col="ts", value_validator="DoubleType", keyspace="ks", name="events",
+            generations=2,
+        )
+
+    return derived_fixture(sf_dir, "events_wide", ("events",), build)
 
 
 def build_clustered_snapshot(sf_dir: str) -> str:
@@ -286,21 +277,17 @@ def build_clustered_snapshot(sf_dir: str) -> str:
 
     from cassowary_spark.sources.convert import write_clustered_snapshot
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "lineitem_cql3"
-    )
-    if os.path.exists(os.path.join(snap, "ks-lineitem-jb-2-TOC.txt")):
-        return snap
-    t = pq.read_table(
-        table_path(sf_dir, "lineitem"),
-        columns=["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"],
-    )
-    write_clustered_snapshot(
-        t, snap, key_col="l_orderkey", clustering_cols=["l_linenumber"],
-        keyspace="ks", name="lineitem", generations=2, ts_per_generation=False,
-    )
-    return snap
+    def build(snap: str) -> None:
+        t = pq.read_table(
+            table_path(sf_dir, "lineitem"),
+            columns=["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"],
+        )
+        write_clustered_snapshot(
+            t, snap, key_col="l_orderkey", clustering_cols=["l_linenumber"],
+            keyspace="ks", name="lineitem", generations=2, ts_per_generation=False,
+        )
+
+    return derived_fixture(sf_dir, "lineitem_cql3", ("lineitem",), build)
 
 
 @query(
@@ -387,34 +374,30 @@ def build_rt_snapshot(sf_dir: str) -> str:
         write_range_tombstone_generation,
     )
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "lineitem_rt"
-    )
-    if os.path.exists(os.path.join(snap, "ks-lineitem-jb-3-TOC.txt")):
-        return snap
-    t = pq.read_table(
-        table_path(sf_dir, "lineitem"),
-        columns=["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"],
-    )
-    write_clustered_snapshot(
-        t, snap, key_col="l_orderkey", clustering_cols=["l_linenumber"],
-        keyspace="ks", name="lineitem", generations=2, ts_per_generation=False,
-    )
-    schema = {
-        "key": ["l_orderkey", "LongType"],
-        "columns": [["l_quantity", "DoubleType"], ["l_extendedprice", "DoubleType"]],
-        "clustering": [["l_linenumber", "Int32Type"]],
-    }
-    lo, hi = composite_slice_bounds(schema, [3], [5])
-    keys = pc.unique(
-        t.filter(pc.less_equal(t.column("l_orderkey"), 200)).column("l_orderkey")
-    ).to_pylist()
-    write_range_tombstone_generation(
-        snap, schema, [(k, lo, hi) for k in sorted(keys)],
-        generation=3, keyspace="ks", name="lineitem", timestamp=5_000,
-    )
-    return snap
+    def build(snap: str) -> None:
+        t = pq.read_table(
+            table_path(sf_dir, "lineitem"),
+            columns=["l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice"],
+        )
+        write_clustered_snapshot(
+            t, snap, key_col="l_orderkey", clustering_cols=["l_linenumber"],
+            keyspace="ks", name="lineitem", generations=2, ts_per_generation=False,
+        )
+        schema = {
+            "key": ["l_orderkey", "LongType"],
+            "columns": [["l_quantity", "DoubleType"], ["l_extendedprice", "DoubleType"]],
+            "clustering": [["l_linenumber", "Int32Type"]],
+        }
+        lo, hi = composite_slice_bounds(schema, [3], [5])
+        keys = pc.unique(
+            t.filter(pc.less_equal(t.column("l_orderkey"), 200)).column("l_orderkey")
+        ).to_pylist()
+        write_range_tombstone_generation(
+            snap, schema, [(k, lo, hi) for k in sorted(keys)],
+            generation=3, keyspace="ks", name="lineitem", timestamp=5_000,
+        )
+
+    return derived_fixture(sf_dir, "lineitem_rt", ("lineitem",), build)
 
 
 @query(
@@ -494,48 +477,44 @@ def build_collections_snapshot(sf_dir: str) -> str:
 
     from cassowary_spark.sources.convert import write_collections_snapshot
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "lineitem_coll"
-    )
-    if os.path.exists(os.path.join(snap, "ks-lineitem-jb-2-TOC.txt")):
-        return snap
-    con = duckdb.connect()
-    t = con.execute(
-        f"""
-        WITH src AS (SELECT * FROM read_parquet('{table_path(sf_dir, "lineitem")}')),
-        per_ln AS (
-            SELECT l_orderkey, l_linenumber, max(l_quantity) AS q
-            FROM src GROUP BY 1, 2
-        ),
-        maps AS (
-            SELECT l_orderkey,
-                   list(l_linenumber ORDER BY l_linenumber) AS qk,
-                   list(q ORDER BY l_linenumber) AS qv
-            FROM per_ln GROUP BY 1
-        ),
-        base AS (
-            SELECT l_orderkey,
-                   CAST(count(*) AS INT) AS n_items,
-                   list(l_extendedprice ORDER BY l_linenumber, l_extendedprice) AS prices,
-                   list(DISTINCT l_suppkey ORDER BY l_suppkey) AS supp_set
-            FROM src GROUP BY 1
+    def build(snap: str) -> None:
+        con = duckdb.connect()
+        t = con.execute(
+            f"""
+            WITH src AS (SELECT * FROM read_parquet('{table_path(sf_dir, "lineitem")}')),
+            per_ln AS (
+                SELECT l_orderkey, l_linenumber, max(l_quantity) AS q
+                FROM src GROUP BY 1, 2
+            ),
+            maps AS (
+                SELECT l_orderkey,
+                       list(l_linenumber ORDER BY l_linenumber) AS qk,
+                       list(q ORDER BY l_linenumber) AS qv
+                FROM per_ln GROUP BY 1
+            ),
+            base AS (
+                SELECT l_orderkey,
+                       CAST(count(*) AS INT) AS n_items,
+                       list(l_extendedprice ORDER BY l_linenumber, l_extendedprice) AS prices,
+                       list(DISTINCT l_suppkey ORDER BY l_suppkey) AS supp_set
+                FROM src GROUP BY 1
+            )
+            SELECT b.l_orderkey, b.n_items, b.prices, b.supp_set, m.qk, m.qv
+            FROM base b JOIN maps m USING (l_orderkey)
+            ORDER BY l_orderkey
+            """
+        ).arrow()
+        con.close()
+        write_collections_snapshot(
+            pa_table_combine(t), snap,
+            key_col="l_orderkey", clustering_cols=["n_items"],
+            list_cols={"prices": "DoubleType"},
+            set_cols={"supp_set": "LongType"},
+            map_cols={"qty_map": ("qk", "qv", "Int32Type", "DoubleType")},
+            keyspace="ks", name="lineitem", generations=2,
         )
-        SELECT b.l_orderkey, b.n_items, b.prices, b.supp_set, m.qk, m.qv
-        FROM base b JOIN maps m USING (l_orderkey)
-        ORDER BY l_orderkey
-        """
-    ).arrow()
-    con.close()
-    write_collections_snapshot(
-        pa_table_combine(t), snap,
-        key_col="l_orderkey", clustering_cols=["n_items"],
-        list_cols={"prices": "DoubleType"},
-        set_cols={"supp_set": "LongType"},
-        map_cols={"qty_map": ("qk", "qv", "Int32Type", "DoubleType")},
-        keyspace="ks", name="lineitem", generations=2,
-    )
-    return snap
+
+    return derived_fixture(sf_dir, "lineitem_coll", ("lineitem",), build)
 
 
 def pa_table_combine(t):
@@ -606,10 +585,7 @@ def q_sstable_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from cassowary_spark.sources.sstable_datasource import read_sstable, write_sstable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    snap = os.path.join(
-        repo_root, ".sstable_cache", os.path.basename(sf_dir.rstrip("/")), "supplier_sink"
-    )
+    snap = fixture_path(sf_dir, "supplier_sink", ("supplier",))
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     )
@@ -639,27 +615,21 @@ def q_file_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange formats on real text (quoting, commas) against the
     parquet-backed oracle. Format caches are written once per sf dir.
     """
-    import os as _os
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    # v2: cache written with RFC4180 quote/escape — older caches used
-    # backslash-escape and would mis-parse under the new reader options
-    cache = os.path.join(repo_root, ".file_cache", "v2", os.path.basename(sf_dir.rstrip("/")))
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    paths = {}
-    for fmt in ("json", "csv"):
-        p = os.path.join(cache, f"documents_{fmt}")
-        if not _os.path.exists(_os.path.join(p, "_SUCCESS")):
-            w = d.coalesce(4).write.mode("overwrite")
-            if fmt == "csv":
-                # RFC4180 quoting (escape = doubled quote) so the
-                # multiLine reader below reassembles embedded newlines
-                w.option("header", "true").option("quote", '"').option(
-                    "escape", '"'
-                ).csv(p)
-            else:
-                w.json(p)
-        paths[fmt] = p
+    paths = {
+        "json": derived_fixture(
+            sf_dir, "documents_json", ("documents",),
+            lambda p: d.coalesce(4).write.mode("overwrite").json(p),
+        ),
+        # RFC4180 quoting (escape = doubled quote) so the multiLine
+        # reader below reassembles embedded newlines
+        "csv": derived_fixture(
+            sf_dir, "documents_csv", ("documents",),
+            lambda p: d.coalesce(4).write.mode("overwrite")
+            .option("header", "true").option("quote", '"').option("escape", '"')
+            .csv(p),
+        ),
+    }
     ddl = "doc_id bigint, lang string, text string"
     jdf = spark.read.schema(ddl).json(paths["json"])
     # multiLine + explicit quote/escape: text containing embedded
@@ -698,14 +668,15 @@ def q_sstable_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleted by generation 4's tombstones are dropped AND the tombstones
     themselves are GC'd, so the single surviving generation reproduces
     the parquet table exactly. Compaction runs once per sf_dir (the
-    output is cached beside the snapshot, keyed by its TOC)."""
+    output is cached beside the snapshot)."""
     from cassowary_spark.sources.convert import compact_snapshot
     from cassowary_spark.sources.sstable_datasource import read_sstable
 
     snap = build_sstable_snapshot(sf_dir)
-    out = snap + "-compacted"
-    if not os.path.exists(os.path.join(out, "ks-supplier-jb-5-TOC.txt")):
-        compact_snapshot(snap, delete_inputs=False, out_dir=out)
+    out = derived_fixture(
+        sf_dir, "supplier-compacted", ("supplier",),
+        lambda out: compact_snapshot(snap, delete_inputs=False, out_dir=out),
+    )
     return read_sstable(spark, out)
 
 
@@ -847,12 +818,11 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     same Catalyst treatment as parquet — column pruning + predicate
     pushdown reach the reader, partition-parallel splits.
     """
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    cache = os.path.join(repo_root, ".file_cache", "v2", os.path.basename(sf_dir.rstrip("/")))
-    p = os.path.join(cache, "documents_orc")
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text", "n_chars")
-    if not os.path.exists(os.path.join(p, "_SUCCESS")):
-        d.coalesce(4).write.mode("overwrite").orc(p)
+    p = derived_fixture(
+        sf_dir, "documents_orc", ("documents",),
+        lambda p: d.coalesce(4).write.mode("overwrite").orc(p),
+    )
     o = spark.read.orc(p)
     return o.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -886,13 +856,12 @@ def q_partitioned_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the pruned scan is an ordinary partial+final groupBy on the
     order year.
     """
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    cache = os.path.join(repo_root, ".file_cache", "v2", os.path.basename(sf_dir.rstrip("/")))
-    p = os.path.join(cache, "orders_by_status")
     o = load_table(spark, sf_dir, "orders")
-    if not os.path.exists(os.path.join(p, "_SUCCESS")):
-        o.select("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus") \
-            .repartition(4).write.mode("overwrite").partitionBy("o_orderstatus").parquet(p)
+    p = derived_fixture(
+        sf_dir, "orders_by_status", ("orders",),
+        lambda p: o.select("o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus")
+        .repartition(4).write.mode("overwrite").partitionBy("o_orderstatus").parquet(p),
+    )
     lake = spark.read.parquet(p).filter(F.col("o_orderstatus") == "F")
     return lake.groupBy(
         F.year("o_orderdate").cast("int").alias("yr")
@@ -929,14 +898,11 @@ def q_sstable_to_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from cassowary_spark.sources.sstable_datasource import read_sstable
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    cache = os.path.join(repo_root, ".file_cache", "v2", os.path.basename(sf_dir.rstrip("/")))
-    p = os.path.join(cache, "supplier_lake")
-    if not os.path.exists(os.path.join(p, "_SUCCESS")):
-        snap = build_sstable_snapshot(sf_dir)
-        read_sstable(spark, snap).write.mode("overwrite").partitionBy(
-            "s_nationkey"
-        ).parquet(p)
+    p = derived_fixture(
+        sf_dir, "supplier_lake", ("supplier",),
+        lambda p: read_sstable(spark, build_sstable_snapshot(sf_dir))
+        .write.mode("overwrite").partitionBy("s_nationkey").parquet(p),
+    )
     lake = spark.read.parquet(p).filter(F.col("s_nationkey") < 5)
     return lake.groupBy("s_nationkey").agg(
         F.count("*").alias("n_sup"),
@@ -973,16 +939,11 @@ def q_lake_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     set per-write and restored (session-conf hygiene for the shared
     driver session).
     """
-    from cassowary_spark.tables import fixture_cache_dir
-
-    # keyed by the orders parquet's identity (path+size+mtime), so a
-    # regenerated same-named fixture can never serve a stale backfill
-    p = fixture_cache_dir(sf_dir, "orders_backfill", dep="orders")
-    done = os.path.join(p, "_BACKFILL_DONE")
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_totalprice", "o_orderstatus"
     )
-    if not os.path.exists(done):
+
+    def build(p: str) -> None:
         # seed: the 'P' partition lands with doubled prices (bad data)
         seeded = o.withColumn(
             "o_totalprice",
@@ -1007,9 +968,10 @@ def q_lake_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev
             )
-        with open(done, "w") as fh:
-            fh.write("ok\n")
-    lake = spark.read.parquet(p)
+
+    lake = spark.read.parquet(
+        derived_fixture(sf_dir, "orders_backfill", ("orders",), build)
+    )
     return lake.groupBy("o_orderstatus").agg(
         F.count("*").alias("n_orders"),
         srnd(F.sum("o_totalprice"), 2).alias("revenue"),
@@ -1020,22 +982,18 @@ def _ensure_fragmented_lake(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     """Build (once per source-file identity) the 64-file fragmented
     orders lake and its 4-file compacted rewrite — shared by the
     compaction and file-provenance queries so their caches can't
-    drift. Guards on BOTH _SUCCESS markers: a pruned fragment dir
-    with a surviving compacted dir (or vice versa) regenerates both.
+    drift.
     """
-    from cassowary_spark.tables import fixture_cache_dir
-
-    frag = fixture_cache_dir(sf_dir, "orders_fragmented", dep="orders")
-    compacted = fixture_cache_dir(sf_dir, "orders_compacted", dep="orders")
-    if not (
-        os.path.exists(os.path.join(compacted, "_SUCCESS"))
-        and os.path.exists(os.path.join(frag, "_SUCCESS"))
-    ):
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-        o.repartition(64).write.mode("overwrite").parquet(frag)
-        spark.read.parquet(frag).repartition(4).write.mode(
-            "overwrite"
-        ).parquet(compacted)
+    frag = derived_fixture(
+        sf_dir, "orders_fragmented", ("orders",),
+        lambda frag: load_table(spark, sf_dir, "orders").select("o_orderkey")
+        .repartition(64).write.mode("overwrite").parquet(frag),
+    )
+    compacted = derived_fixture(
+        sf_dir, "orders_compacted", ("orders",),
+        lambda out: spark.read.parquet(frag).repartition(4)
+        .write.mode("overwrite").parquet(out),
+    )
     return frag, compacted
 
 
@@ -1117,11 +1075,9 @@ def q_regex_serde(spark: SparkSession, sf_dir: str) -> DataFrame:
     field via regexp_extract groups); quarantine is a filter, not an
     error path. One partial agg on a 5-value key.
     """
-    from cassowary_spark.tables import fixture_cache_dir
-
-    log_dir = fixture_cache_dir(sf_dir, "events_log", dep="events")
     ev = load_table(spark, sf_dir, "events")
-    if not os.path.exists(os.path.join(log_dir, "_SUCCESS")):
+
+    def build(log_dir: str) -> None:
         lines = ev.select(
             F.format_string(
                 "evt id=%d user=%d type=%s v4=%d",
@@ -1141,7 +1097,8 @@ def q_regex_serde(spark: SparkSession, sf_dir: str) -> DataFrame:
         lines.unionByName(bad).coalesce(4).write.mode("overwrite").text(
             log_dir
         )
-    raw = spark.read.text(log_dir)
+
+    raw = spark.read.text(derived_fixture(sf_dir, "events_log", ("events",), build))
     pat = r"^evt id=(\d+) user=(\d+) type=(\w+) v4=(-?\d+)$"
     parsed = raw.select(
         F.regexp_extract("value", pat, 3).alias("event_type"),

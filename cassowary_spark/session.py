@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
+
 
 def get_spark(app_name: str = "cassowary_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -50,4 +52,11 @@ def get_spark(app_name: str = "cassowary_spark", cpus: int | None = None) -> Spa
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # WindowExec warns once per unpartitioned window per execution;
+    # plancheck.sp_windows_total already counts those windows from the
+    # plan text, so the lines only bury the rest of the log.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

@@ -9,7 +9,10 @@ cassowary-native path — the query layer is source-agnostic either way.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,29 +109,62 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-def fixture_cache_dir(sf_dir: str, name: str, dep: str = "documents") -> str:
-    """Cache directory for derived fixtures (binary corpus, corrupt
-    CSV, evolved lake, …), keyed by the SOURCE table's identity —
-    path + size + mtime of the dep parquet — not just the sf_dir
-    basename. Planted tests write different documents.parquet files
-    under same-named tmp dirs across runs; a basename-only key would
-    serve the previous run's derivation (observed: stale
-    `.sstable_cache/test_*` entries). The digest makes cache hits
-    mean "same input bytes", which is the only safe meaning.
-    """
-    import hashlib
+# Root of every derived fixture (SSTable snapshots, lakes, format
+# round-trips). Tests point it into their tmp_path by monkeypatching.
+CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".sstable_cache"
+)
+_COMPLETE = "_COMPLETE"
 
-    src = table_path(sf_dir, dep)
-    try:
-        st = os.stat(src)
-        sig = f"{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}"
-    except OSError:
-        sig = os.path.abspath(src)
-    digest = hashlib.md5(sig.encode()).hexdigest()[:10]
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(
-        repo_root,
-        ".sstable_cache",
-        f"{os.path.basename(sf_dir.rstrip('/'))}-{digest}",
-        name,
-    )
+
+def input_digest(sf_dir: str, deps: tuple[str, ...]) -> str:
+    """Identity of the ``deps`` parquet files of ``sf_dir``: an md5 over
+    each file's absolute path, size and mtime."""
+    if isinstance(deps, str) or not deps:
+        raise ValueError(f"deps must name at least one table, got {deps!r}")
+    sigs = []
+    for dep in deps:
+        src = table_path(sf_dir, dep)
+        try:
+            st = os.stat(src)
+            sigs.append(f"{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}")
+        except OSError:
+            sigs.append(os.path.abspath(src))
+    return hashlib.md5(";".join(sigs).encode()).hexdigest()[:10]
+
+
+def fixture_path(sf_dir: str, name: str, deps: tuple[str, ...]) -> str:
+    """Where fixture ``name`` derived from ``deps`` lives (see
+    ``derived_fixture``); it need not be built yet."""
+    key = f"{os.path.basename(sf_dir.rstrip('/'))}-{input_digest(sf_dir, deps)}"
+    return os.path.join(CACHE_ROOT, key, name)
+
+
+def derived_fixture(
+    sf_dir: str, name: str, deps: tuple[str, ...], build: Callable[[str], object]
+) -> str:
+    """Build fixture ``name`` from the ``deps`` tables of ``sf_dir`` once,
+    and return its directory.
+
+    Key: ``CACHE_ROOT/<basename(sf_dir)>-<input_digest>/<name>``, so two
+    sf_dirs that share a basename but hold different parquet never
+    share an entry, and rewriting a dep file moves the key.
+
+    Completion: the fixture is complete iff its ``_COMPLETE`` marker
+    exists. Otherwise any partial directory is removed, ``build(path)``
+    writes into a fresh empty ``path`` (in place, because some
+    fixtures record their own absolute file paths), and the marker is
+    written once it returns. A ``_``-prefixed file is skipped by
+    Spark's file listing and by the SSTable reader. A fixture that
+    records the file names of another fixture is named inside it
+    (``"cow_lake/erased"``), so a rebuild of the outer one drops it.
+    """
+    path = fixture_path(sf_dir, name, deps)
+    marker = os.path.join(path, _COMPLETE)
+    if os.path.exists(marker):
+        return path
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    build(path)
+    open(marker, "w").close()
+    return path

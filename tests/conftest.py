@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cassowary_spark import tables
 from cassowary_spark.oracle import duck_connection
 from cassowary_spark.session import get_spark
 
@@ -30,3 +31,13 @@ def duck(sf_dir):
     con = duck_connection(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture
+def tmp_fixture_cache(tmp_path, monkeypatch):
+    """Build derived fixtures under this test's tmp_path: a test that
+    plants its own sf_dir would otherwise leave a cache entry in the
+    repo that nothing reads again."""
+    root = tmp_path / "fixture_cache"
+    monkeypatch.setattr(tables, "CACHE_ROOT", str(root))
+    return root

@@ -270,7 +270,7 @@ class TestAllDeletedSource:
         return str(tmp_path)
 
     def test_all_deleted_source_reports_zero_and_hot_path(
-        self, spark, tmp_path
+        self, spark, tmp_path, tmp_fixture_cache
     ):
         from cassowary_spark.queries.datapipe31 import (
             _DEL_MOD_1,

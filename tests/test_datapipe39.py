@@ -47,7 +47,7 @@ def _write_orders(tmp_path, rows):
 
 
 class TestPartitionEvolution:
-    def test_hand_rollup_spans_generations(self, spark, tmp_path):
+    def test_hand_rollup_spans_generations(self, spark, tmp_path, tmp_fixture_cache):
         # even ids -> gen1 (by lang), odd -> gen2 (by lang, source):
         # the en rollup must combine docs from BOTH layouts
         rows = [
@@ -67,7 +67,7 @@ class TestPartitionEvolution:
         assert out["book"].n_docs == 2 and out["book"].chars_sum == 70
         assert set(out) == {"web", "book"}
 
-    def test_generations_have_evolved_layouts(self, spark, tmp_path):
+    def test_generations_have_evolved_layouts(self, spark, tmp_path, tmp_fixture_cache):
         from cassowary_spark.queries.datapipe39 import (
             _pe_dirs,
             ensure_evolved_lake,
@@ -90,7 +90,7 @@ class TestPartitionEvolution:
             subs = os.listdir(os.path.join(g2, d))
             assert any(s.startswith("source=") for s in subs)
 
-    def test_lang_filter_prunes_both_scans(self, spark, tmp_path):
+    def test_lang_filter_prunes_both_scans(self, spark, tmp_path, tmp_fixture_cache):
         from cassowary_spark.queries.datapipe39 import read_evolved
 
         rows = [(i, ["en", "fr"][i % 2], "s", i) for i in range(12)]
@@ -126,7 +126,7 @@ class TestSnapshotExpire:
         return sf, ensure_expired_lake(spark, sf), rows
 
     def test_content_matches_recompute_and_versions_agree(
-        self, spark, tmp_path
+        self, spark, tmp_path, tmp_fixture_cache
     ):
         sf, _, rows = self._build(spark, tmp_path)
         cutoff = max(r[0] for r in rows) // 4
@@ -144,7 +144,7 @@ class TestSnapshotExpire:
             }
             assert got == expect, version
 
-    def test_v1_exclusive_files_physically_removed(self, spark, tmp_path):
+    def test_v1_exclusive_files_physically_removed(self, spark, tmp_path, tmp_fixture_cache):
         sf, d, _ = self._build(spark, tmp_path)
         # manifest v1 is gone, and the data dir lost its dirty files
         assert not os.path.exists(d["man1"])
@@ -156,7 +156,7 @@ class TestSnapshotExpire:
         assert "removed=" in marker
         assert int(marker.strip().split("=")[1]) > 0
 
-    def test_gc_never_touches_referenced_files(self, spark, tmp_path):
+    def test_gc_never_touches_referenced_files(self, spark, tmp_path, tmp_fixture_cache):
         sf, d, _ = self._build(spark, tmp_path)
         referenced = {
             r.file_name
@@ -173,7 +173,7 @@ class TestSnapshotExpire:
             }
         assert referenced <= on_disk
 
-    def test_idempotent_rerun(self, spark, tmp_path):
+    def test_idempotent_rerun(self, spark, tmp_path, tmp_fixture_cache):
         sf, _, _ = self._build(spark, tmp_path)
         a = sorted(
             map(tuple, QUERIES["q_snapshot_expire"](spark, sf).collect())

@@ -117,7 +117,7 @@ class TestEwma:
 
 
 class TestCsvCorrupt:
-    def test_quarantine_does_not_eat_neighbors(self, spark, tmp_path):
+    def test_quarantine_does_not_eat_neighbors(self, spark, tmp_path, tmp_fixture_cache):
         """With bad lines planted mid-file, every clean row must
         survive (count + id checksum) and exactly the planted lines
         quarantine."""

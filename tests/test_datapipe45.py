@@ -36,7 +36,7 @@ class TestWriteAuditPublish:
 
         return sf, ensure_wap_lake(spark, sf), rows
 
-    def test_poison_rejected_and_logged(self, spark, tmp_path):
+    def test_poison_rejected_and_logged(self, spark, tmp_path, tmp_fixture_cache):
         sf, d, _ = self._build(spark, tmp_path)
         log = json.load(open(d["audit"]))
         by_snap = {e["snapshot"]: e for e in log}
@@ -44,7 +44,7 @@ class TestWriteAuditPublish:
         assert by_snap["bad"]["checks"]["no_null_keys"] is False
         assert by_snap["v1"]["passed"] and by_snap["v2"]["passed"]
 
-    def test_pointer_serves_v2_content(self, spark, tmp_path):
+    def test_pointer_serves_v2_content(self, spark, tmp_path, tmp_fixture_cache):
         sf, d, rows = self._build(spark, tmp_path)
         with open(d["ptr"]) as f:
             assert f.read().strip() == "snap_v2"
@@ -59,7 +59,7 @@ class TestWriteAuditPublish:
                 expect[st] = (n + 1, c + round(price * 100))
         assert got == expect
 
-    def test_poison_rows_never_visible(self, spark, tmp_path):
+    def test_poison_rows_never_visible(self, spark, tmp_path, tmp_fixture_cache):
         """At no published version do NULL keys appear — the defining
         WAP property (failure = invisibility)."""
         sf, d, _ = self._build(spark, tmp_path)
@@ -89,7 +89,7 @@ class TestWriteAuditPublish:
         a = audit_candidate(empty)
         assert not a["passed"] and not a["checks"]["non_empty"]
 
-    def test_idempotent_rerun(self, spark, tmp_path):
+    def test_idempotent_rerun(self, spark, tmp_path, tmp_fixture_cache):
         sf, d, _ = self._build(spark, tmp_path)
         a = sorted(map(tuple, QUERIES["q_write_audit_publish"](spark, sf).collect()))
         b = sorted(map(tuple, QUERIES["q_write_audit_publish"](spark, sf).collect()))

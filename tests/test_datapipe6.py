@@ -262,7 +262,7 @@ class TestDecayedScore:
 
 
 class TestXmlIngest:
-    def test_round_trip_survives_markup_hostile_text(self, spark, tmp_path):
+    def test_round_trip_survives_markup_hostile_text(self, spark, tmp_path, tmp_fixture_cache):
         """Text containing <, >, &, quotes, and a ]]> must come back
         byte-identical through the XML writer/reader pair."""
         hostile = 'a <b> & "quoted" </b> ]]> done'

@@ -72,7 +72,7 @@ class TestCowErasure:
             ],
         )
 
-    def test_erases_rows_and_preserves_untouched_files(self, spark, tmp_path):
+    def test_erases_rows_and_preserves_untouched_files(self, spark, tmp_path, tmp_fixture_cache):
         from cassowary_spark.queries.datapipe7 import (
             _cow_dirs,
             _ensure_cow_lake,
@@ -99,7 +99,7 @@ class TestCowErasure:
         got = sorted((r["o_orderkey"], r["o_custkey"]) for r in live)
         assert got == [(3, 1), (4, 2), (5, 3), (6, 1)]
 
-    def test_manifest_swap_is_the_delete(self, spark, tmp_path):
+    def test_manifest_swap_is_the_delete(self, spark, tmp_path, tmp_fixture_cache):
         from cassowary_spark.queries.datapipe7 import _cow_dirs, cow_erase
 
         # dense fixture: 40 rows over 16 files, 8 targets (custkey 0)
@@ -133,7 +133,7 @@ class TestCowErasure:
         assert v2 & rew_files, "rewritten rows must be manifest-listed"
         assert rew_files.isdisjoint(v1)
 
-    def test_query_is_idempotent(self, spark, tmp_path):
+    def test_query_is_idempotent(self, spark, tmp_path, tmp_fixture_cache):
         sf = self._fixture(tmp_path)
         a = sorted(map(tuple, QUERIES["q_cow_erasure"](spark, sf).collect()))
         b = sorted(map(tuple, QUERIES["q_cow_erasure"](spark, sf).collect()))
@@ -223,7 +223,7 @@ class TestResumableIngest:
 
 
 class TestManifestTimeTravel:
-    def test_erased_rows_visible_at_v1_only(self, spark, tmp_path):
+    def test_erased_rows_visible_at_v1_only(self, spark, tmp_path, tmp_fixture_cache):
         """The erased customer's orders appear reading via manifest v1
         and vanish via manifest v2 — same files, different manifest."""
         from cassowary_spark.queries.datapipe7 import (

@@ -138,7 +138,7 @@ class TestRollingDistinct:
 
 
 class TestBinaryIngest:
-    def test_multibyte_bytes_not_chars(self, spark, tmp_path):
+    def test_multibyte_bytes_not_chars(self, spark, tmp_path, tmp_fixture_cache):
         """A doc with multibyte UTF-8 must report its byte length."""
         text = "héllo pad"  # 9 chars, 10 bytes
         sf = _write_docs(tmp_path, [(7, text, "s")])
