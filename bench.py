@@ -130,19 +130,13 @@ def main() -> None:
                 t0 = time.perf_counter()
                 registry.QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
                 timings[name] = min(timings[name], time.perf_counter() - t0)
-                # Clear AFTER EVERY rep, inside the timed loop's
-                # shadow: (a) operators that persist intermediates
-                # (shingle tables, CC labels) would otherwise
-                # accumulate cached blocks across the 126-query
-                # session, evicting execution memory (~40% total,
-                # measured); (b) a rep must not serve the previous
-                # rep's persisted intermediates via CacheManager
-                # plan-matching — that would time a cache hit and hide
-                # regressions in the intermediate-build cost. Reps
-                # therefore measure warm-PLAN (analysis + codegen hot)
-                # but cold-DATA executions, the same thing the
+                # No clearCache: each registry call releases the
+                # previous call's caches before it builds, so a rep
+                # never serves the previous rep's persisted
+                # intermediates and they never accumulate across the
+                # session. Reps measure warm-PLAN (analysis + codegen
+                # hot) but cold-DATA executions, the same thing the
                 # BASELINE rows measured.
-                spark.catalog.clearCache()
     runs = passes * reps
     timings = {n: round(v, 3) for n, v in timings.items()}
 

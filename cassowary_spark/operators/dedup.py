@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist, release
+
 DEFAULT_NUM_HASHES = 64
 DEFAULT_BANDS = 16
 
@@ -280,7 +282,7 @@ def minhash_lsh_pairs(
     Candidate work is thus O(n_buckets · cap²) worst-case instead of
     unbounded. None disables the cap.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k).persist()
+    sigs = persist(minhash_signatures(df, id_col, text_col, num_hashes, shingle_k))
     cand = band_candidates(sigs, id_col, num_hashes, bands, bucket_cap)
     est = (
         cand.join(sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
@@ -327,7 +329,7 @@ def ngram_jaccard_pairs(
     the string (half the shuffle bytes; a 64-bit collision altering a
     count is ~1e-12 at any realistic shingle cardinality).
     """
-    sh = hashed_shingles(df, id_col, text_col, shingle_k, None).persist()
+    sh = persist(hashed_shingles(df, id_col, text_col, shingle_k, None))
     if max_shingle_df is not None:
         # the df filter is applied here (off the persisted unfiltered
         # frame) rather than inside hashed_shingles so the persist
@@ -382,17 +384,11 @@ def containment_pairs(
 
     Same join shape and stop-shingle cap as ``ngram_jaccard_pairs``
     (shingle equi-join on 64-bit hashes; disjoint docs never meet;
-    ``max_shingle_df`` bounds per-key fanout at scale).
-
-    Cache lifetime is CALLER-OWNED (as in ``ngram_jaccard_pairs``):
-    the hashed-shingle frame is persisted because the self-join's two
-    sides plus the size table consume it, but the returned DataFrame
-    is lazy, so this function cannot unpersist it. Long-lived sessions
-    that call this repeatedly should ``spark.catalog.clearCache()``
-    (or unpersist via the storage tab) after materializing the result
-    — the bench harness does exactly that per rep.
+    ``max_shingle_df`` bounds per-key fanout at scale). The
+    hashed-shingle frame is persisted because the self-join's two
+    sides plus the size table consume it.
     """
-    sh = hashed_shingles(df, id_col, text_col, shingle_k, None).persist()
+    sh = persist(hashed_shingles(df, id_col, text_col, shingle_k, None))
     if max_shingle_df is not None:
         sh = drop_hot_keys(sh, "sh_h", max_shingle_df)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
@@ -444,19 +440,9 @@ def lsh_verified_pairs(
     threshold: float = 0.5,
     max_shingle_df: int | None = SHINGLE_DF_CAP,
     bucket_cap: int | None = 1000,
-    owned_caches: list | None = None,
 ) -> DataFrame:
     """Two-stage production near-dup: LSH candidates → exact Jaccard
     verification, computed ONLY for candidate pairs.
-
-    ``owned_caches``: pass a list to receive the frames this function
-    persists (the hashed-shingle table). The returned DataFrame is
-    lazy, so the function cannot know when its caches die; a caller
-    that MATERIALIZES the pairs (checkpoint before an iterative
-    consumer like connected components) should unpersist everything
-    in the list right after — at sf100 the shingle cache alone is
-    tens of GB of disk-backed blocks that would otherwise live until
-    session clearCache (the r13 q_dedup_clusters disk finding).
 
     This is the shape that survives 100 TB — the full shingle
     self-join of ``ngram_jaccard_pairs`` never runs; exact Jaccard is
@@ -475,18 +461,14 @@ def lsh_verified_pairs(
     lose candidates on hot-shingle corpora — exactly the corpora the
     df cap exists for. The shingle explode+hash runs once, persisted.
     """
-    sh = hashed_shingles(df, id_col, text_col, shingle_k, max_shingle_df).persist()
-    if owned_caches is not None:
-        owned_caches.append(sh)
+    sh = persist(hashed_shingles(df, id_col, text_col, shingle_k, max_shingle_df))
     # Persist the signatures too: band_candidates consumes them TWICE
     # (the hot-bucket pass and the bucket self-join probe have
     # different plans, so exchange reuse cannot unify them) — without
     # the cache each pass re-runs the 64-min aggregation over the
     # shingle table. K×num_hashes longs per doc: corpus-row-bounded,
     # tiny next to the shingle cache it derives from.
-    sigs = signatures_from_hashes(sh, id_col, num_hashes).persist()
-    if owned_caches is not None:
-        owned_caches.append(sigs)
+    sigs = persist(signatures_from_hashes(sh, id_col, num_hashes))
     cand = band_candidates(sigs, id_col, num_hashes, bands, bucket_cap)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     inter = (
@@ -602,7 +584,7 @@ def connected_components(
         sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
     all_vertices = vertices.select(F.col(id_col).alias("__v"))
-    edge_vertices = sym.select(F.col("src").alias("__v")).distinct().persist()
+    edge_vertices = persist(sym.select(F.col("src").alias("__v")).distinct())
     labels = edge_vertices.select("__v", F.col("__v").alias("__label"))
     prev_cached = None
     converged = False
@@ -615,7 +597,7 @@ def connected_components(
         # carry the "did this row's label drop" flag through the same
         # pass, so convergence is a filter on the persisted frame — no
         # extra old-vs-new join per round
-        stepped = (
+        stepped = persist(
             labels.join(nb_min, labels["__v"] == nb_min.src, "left")
             .select(
                 "__v",
@@ -626,11 +608,10 @@ def connected_components(
                     "__chg"
                 ),
             )
-            .persist()
         )
         changed = stepped.filter("__chg").limit(1).count()
         if prev_cached is not None:
-            prev_cached.unpersist()
+            release(prev_cached)
         prev_cached = stepped
         labels = stepped.select("__v", "__label")
         if changed == 0:
@@ -641,7 +622,7 @@ def connected_components(
         # release the cache backing it
         if it % 5 == 0:
             labels = labels.localCheckpoint(eager=True)
-            prev_cached.unpersist()
+            release(prev_cached)
             prev_cached = None
     # no sym.unpersist(): a locally-checkpointed frame's blocks ARE
     # its data (lineage is gone — unpersisting would make it
@@ -659,9 +640,9 @@ def connected_components(
         )
     if prev_cached is not None:
         # materialize the result off the cached frame so the cache can
-        # be dropped now instead of leaking until clearCache
+        # be dropped now
         labels = labels.localCheckpoint(eager=True)
-        prev_cached.unpersist()
+        release(prev_cached)
     isolated = all_vertices.join(edge_vertices, "__v", "left_anti").select(
         "__v", F.col("__v").alias("__label")
     )
@@ -669,9 +650,7 @@ def connected_components(
         F.col("__v").alias(id_col), F.col("__label").alias("cluster_id")
     )
     # checkpoint before dropping the edge-vertex cache: the anti-join
-    # above is the last consumer, and without this the persisted frame
-    # would outlive the function (leaking storage memory until an
-    # external clearCache)
+    # above is its last consumer
     out = out.localCheckpoint(eager=True)
-    edge_vertices.unpersist()
+    release(edge_vertices)
     return out

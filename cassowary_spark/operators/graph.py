@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist, release
+
 
 def bfs_distances(
     edges: DataFrame,
@@ -44,28 +46,21 @@ def bfs_distances(
     graph with diameter beyond ~20 wants large-star/small-star CC or
     a landmark index, not more BFS rounds).
     """
-    if symmetric:
-        # caller hands an ALREADY-SYMMETRIZED, already-persisted edge
-        # frame (e.g. it computed degrees/hub from the same frame —
-        # one materialization instead of two); this function takes
-        # ownership and unpersists it when the loop is done.
-        sym = edges.select(
-            F.col(src_col).cast("long").alias("s"),
-            F.col(dst_col).cast("long").alias("t"),
+    # symmetric=True: the caller hands an ALREADY-SYMMETRIZED, persisted
+    # edge frame (e.g. it computed degrees/hub from the same frame —
+    # one materialization instead of two); the caller's query owns it
+    sym = edges.select(
+        F.col(src_col).cast("long").alias("s"),
+        F.col(dst_col).cast("long").alias("t"),
+    )
+    if not symmetric:
+        sym = persist(
+            sym.union(sym.select(F.col("t").alias("s"), F.col("s").alias("t")))
         )
-    else:
-        sym = edges.select(
-            F.col(src_col).cast("long").alias("s"),
-            F.col(dst_col).cast("long").alias("t"),
-        )
-        sym = sym.union(
-            sym.select(F.col("t").alias("s"), F.col("s").alias("t"))
-        ).persist()
-    owned = edges if symmetric else sym
     if source is None:
         source = sym.agg(F.min("s")).collect()[0][0]
         if source is None:
-            owned.unpersist()
+            release(sym)
             raise ValueError(
                 "bfs_distances: edge set is empty — no default source "
                 "to pick (pass an explicit `source` for a known node)"
@@ -120,5 +115,7 @@ def bfs_distances(
         # per-round work proportional to the frontier.
         dist = dist.unionByName(nxt)
         prev, frontier = frontier, nxt
-    owned.unpersist()
+    # the rounds are checkpointed, so dist no longer reads sym (a
+    # caller's symmetric frame is not registered here: a no-op)
+    release(sym)
     return dist

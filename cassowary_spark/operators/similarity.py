@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
+
 
 def as_double(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -179,7 +181,6 @@ def ivf_assign(
     vec_col: str,
     k_centroids: int = 16,
     lloyd_iters: int = 1,
-    owned_caches: list | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: (corpus + cluster id, centroids).
 
@@ -190,15 +191,6 @@ def ivf_assign(
     corpus size. The returned assignment is what you'd persist
     partitioned-by-cluster at 100 TB so probes prune to nprobe/K of
     the data on read.
-
-    ``owned_caches``: pass a list to receive any frame this function
-    persists (the normalized corpus, when lloyd_iters > 0). The
-    returned frames are lazy, so the function cannot know when its
-    cache dies; a caller that materializes the assignment (e.g. the
-    offline index write) should unpersist everything in the list right
-    after — at corpus scale the cached frame pins the embedding
-    payload in storage memory until session clearCache otherwise
-    (the r14 leak).
     """
     seeds = corpus.orderBy(id_col).limit(k_centroids)
     # constant partition key: the window runs over K<=16 seed rows, and
@@ -220,9 +212,7 @@ def ivf_assign(
         F.col(id_col), F.col(vec_col)
     ).withColumn("_vn", l2_norm(as_double(vec_col)))
     if lloyd_iters > 0:
-        prepped = prepped.persist()
-        if owned_caches is not None:
-            owned_caches.append(prepped)
+        prepped = persist(prepped)
 
     def assign(cents: DataFrame) -> DataFrame:
         # r14: row-local argmax over a 1-row nested centroid array —
@@ -310,20 +300,13 @@ def write_ivf_index(
     """
     import os
 
-    owned: list = []
-    assigned, centroids = ivf_assign(
-        corpus, id_col, vec_col, k_centroids, lloyd_iters, owned_caches=owned
-    )
+    assigned, centroids = ivf_assign(corpus, id_col, vec_col, k_centroids, lloyd_iters)
     assigned.write.mode("overwrite").partitionBy("cid").parquet(
         os.path.join(path, "lists")
     )
     centroids.select(
         "cid", F.col("cvec").cast("array<double>").alias("cvec")
     ).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
-    # the writes above are the terminal consumers — release the
-    # normalized-corpus cache now instead of leaking it to clearCache
-    for f in owned:
-        f.unpersist()
 
 
 def ann_ivf_probe(
@@ -373,20 +356,15 @@ def ann_ivf_topk(
     k: int,
     k_centroids: int = 16,
     nprobe: int = 4,
-    owned_caches: list | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: probe the nprobe nearest inverted lists.
 
     The query ranks centroids (K rows, driver-free broadcast compare),
     keeps nprobe cluster ids, and exact-scores only vectors assigned to
     them — scanning ~nprobe/K of the corpus. Recall/latency trade via
-    nprobe, as in classic IVF-Flat. ``owned_caches`` receives the
-    frames ivf_assign persists (caller-owned lifetime — the returned
-    top-k is lazy).
+    nprobe, as in classic IVF-Flat.
     """
-    assigned, centroids = ivf_assign(
-        corpus, id_col, vec_col, k_centroids, owned_caches=owned_caches
-    )
+    assigned, centroids = ivf_assign(corpus, id_col, vec_col, k_centroids)
     qc = query.crossJoin(F.broadcast(centroids)).select(
         F.col(query_vec_col), F.col("cid"),
         cosine(as_double(query_vec_col), F.col("cvec")).alias("csim"),
@@ -469,7 +447,6 @@ def ann_ivfpq_topk(
     nprobe: int = 2,
     n_sub: int = 4,
     cand_rank: int = 100,
-    owned_caches: list | None = None,
 ) -> DataFrame:
     """IVFPQ ANN (the FAISS-style full pipeline): IVF coarse probe →
     product-quantized asymmetric-distance shortlist → exact re-rank.
@@ -506,11 +483,8 @@ def ann_ivfpq_topk(
     # probe — cache it so its lineage computes once, not once per
     # consumer. In the offline production layout this is the persisted
     # partitioned-by-cluster index (write_ivf_index); caching is its
-    # in-session stand-in. Lifetime is caller-owned via owned_caches
-    # (the returned top-k is lazy; the bench/driver clearCache per rep).
-    assigned = assigned.cache()
-    if owned_caches is not None:
-        owned_caches.append(assigned)
+    # in-session stand-in.
+    assigned = persist(assigned)
 
     # --- probe: nprobe nearest lists by cosine (K-row broadcast)
     cents_n = centroids.withColumn("_cn", l2_norm(F.col("cvec")))

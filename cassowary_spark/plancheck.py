@@ -53,15 +53,9 @@ _BOUNDING = frozenset(
 
 def single_partition_corpus_windows(df: DataFrame) -> int:
     """Count Window nodes that rank a CORPUS frame in ONE task (see
-    ``_sp_corpus_windows_from_text`` for the rule).
-
-    Clears the session cache first — a necessary global side effect:
-    a query whose lineage was persisted earlier in the session plans
-    an InMemoryTableScan where the source scan would be, hiding the
-    corpus scan this detector walks for (the count would then depend
-    on session history, not the query). Callers that rely on a live
-    persist() must re-trigger it after auditing."""
-    df.sparkSession.catalog.clearCache()
+    ``_sp_corpus_windows_from_text`` for the rule). A cached subtree
+    is walked below its InMemoryRelation, so a live cache does not
+    hide the corpus scan it reads."""
     return _sp_corpus_windows_from_text(formatted_plan(df))
 
 
@@ -262,14 +256,13 @@ def _sp_windows_total_from_text(text: str) -> int:
 def node_counts(df: DataFrame) -> dict[str, int]:
     """Shuffle-relevant node counts for budget checks.
 
-    Counted on the CACHE-FREE plan: queries that persist() a reused
-    sub-aggregate get cache-substituted (InMemoryRelation) at physical
-    planning, and whether the substitution appears depends on what an
-    earlier test in the same session left cached — clearing first
-    makes the count a pure function of the query, not of session
-    history.
+    Counted with the query's own caches live: a persisted subtree is
+    planned once, as an InMemoryRelation, and every consumer reads it
+    through an InMemoryTableScan, so its nodes are counted once however
+    many consumers it has. The registry releases every earlier query's
+    caches before it builds the next (``caches``), so the count is a
+    function of the query, not of session history.
     """
-    df.sparkSession.catalog.clearCache()
     p = formatted_plan(df)
     return {
         "exchanges": p.count(") Exchange"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -314,7 +315,7 @@ def q_multi_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two reports separately.
     """
     ev = load_table(spark, sf_dir, "events").select("event_type", "ts", "value")
-    ev = ev.cache()
+    ev = persist(ev)
     by_type = ev.groupBy("event_type").agg(
         F.count("*").alias("n"), srnd(F.sum("value"), 2).alias("total")
     ).select(

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -90,14 +91,14 @@ def q_crosscorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     dollars = F.floor(F.col("o_totalprice") + 0.5).cast("long")
-    daily = o.groupBy(
+    daily = persist(o.groupBy(
         F.datediff(
             F.to_date("o_orderdate"), F.to_date(F.lit("1992-01-01"))
         ).alias("d")
     ).agg(
         F.count("*").cast("long").alias("cnt"),
         F.sum(dollars).alias("rev"),
-    ).persist()  # ~2.4k calendar rows; both join sides reuse one scan
+    ))  # ~2.4k calendar rows; both join sides reuse one scan
     dec = "decimal(19,0)"
     # r14: ONE lag-exploded self-join + grouped conditional aggregate
     # — the old per-lag union of (join + 1-row agg) branches re-ran
@@ -337,15 +338,14 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     y = F.when(F.col("l_returnflag") == "R", 1).otherwise(0)
-    per = (
+    per = persist(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(
             F.count("*").cast("long").alias("n"),
             F.sum(y).cast("long").alias("k"),
         )
-        .persist()  # 25 brands; total + output reuse one fact scan
-    )
+    )  # 25 brands; total + output reuse one fact scan
     tot = per.agg(
         F.sum("n").cast("long").alias("nn"),
         F.sum("k").cast("long").alias("kk"),
@@ -563,7 +563,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("o").agg(
         F.sort_array(F.collect_set("p")).alias("ps")
     )
-    edges = (
+    edges = persist(
         baskets.select(
             F.explode(
                 F.expr(
@@ -577,7 +577,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("m"))
         .filter(F.col("m") >= _TRI_SUPPORT)
         .select("x", "y")
-        .persist()
     )
     deg = (
         edges.select(F.col("x").alias("node"))

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -214,15 +215,14 @@ def q_backtest_smape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     dollars = F.floor(F.col("o_totalprice") + 0.5).cast("long")
-    daily = (
+    daily = persist(
         o.groupBy(
             F.datediff(
                 F.to_date("o_orderdate"), F.to_date(F.lit("1992-01-01"))
             ).alias("d")
         )
         .agg(F.sum(dollars).alias("rev"))
-        .persist()  # calendar-sized; eval + 4-lag forecast sides reuse it
-    )
+    )  # calendar-sized; eval + 4-lag forecast sides reuse it
     a, f_ = daily.alias("a"), daily.alias("f")
     fc = (
         a.join(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist, release
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
 
@@ -128,9 +129,8 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization (formerly edges AND its re-symmetrized copy were
     # each persisted+materialized). The union is row-local, so this
     # drops one cache and one materialization job, not just bytes.
-    sym = (
+    sym = persist(
         edges.unionAll(edges.select(F.col("y").alias("x"), F.col("x").alias("y")))
-        .persist()
     )
     # ONE job yields both the hub (max degree, min-id tiebreak: min
     # over struct(-d, node)) and the node count — replacing the old
@@ -150,6 +150,8 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = bfs_distances(
         sym, "x", "y", source=hub, max_hops=_SP_MAX_HOPS, symmetric=True
     )
+    # the BFS rounds are checkpointed: dist no longer reads sym
+    release(sym)
     # rollup = per-distance counts + a grand-total row (dist NULL) in
     # one shuffle; the NULL row becomes the unreachable bucket. BFS
     # settles each node once, so reached = the grand total and

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -34,6 +35,9 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------- C140 Theil-Sen median slope
+
+# one pair in _TS_SAMPLE (by slope hash) picks the range boundaries
+_TS_SAMPLE = 256
 
 
 @query(
@@ -95,41 +99,52 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of the old single-partition row_number window, which
     funneled every pair through one task (5.6× slower measured at
     sf0.1, and the only not-embarrassingly-parallel step this query
-    had). The pair COUNT is C(n_days, 2) from the daily frame — exact,
-    no count-over-unbounded-window pass. Range boundaries come from
-    Spark's sampling and vary run to run, but the selected k-th VALUE
-    is a deterministic order statistic regardless of where the
-    boundaries land (equal keys are never split across buckets). On a
+    had). The pair COUNT rides the same 1-row aggregate as the range
+    boundaries — no count-over-unbounded-window pass. The selected k-th VALUE is
+    a deterministic order statistic wherever the range boundaries
+    land (equal keys are never split across buckets); the boundaries
+    themselves are a deterministic hash sample, so no shared persist
+    or partition-id assignment carries correctness. On a
     series long enough to break the calendar² bound, swap in the
     standard sampled-pairs Theil-Sen — same shape over a hash-sampled
     pair subset.
     """
-    daily = _daily(spark, sf_dir).persist()
+    daily = persist(_daily(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
-    pairs = a.join(b, F.col("a.d") < F.col("b.d")).select(
-        (
-            (F.col("b.rev").cast("double") - F.col("a.rev").cast("double"))
-            / (F.col("b.d").cast("double") - F.col("a.d").cast("double"))
-        ).alias("sl")
-    )
-    # np = n(n-1)/2 (strict d< d over distinct days) and the lower-
-    # median rank k = (np+1) div 2, carried as a 1-row broadcast —
-    # exact integer arithmetic, no driver collect.
-    meta = daily.agg(F.count("*").alias("nd")).select(
-        F.expr("nd * (nd - 1) div 2").alias("np"),
-        F.expr("(nd * (nd - 1) div 2 + 1) div 2").alias("k"),
-    )
+    joined = a.join(b, F.col("a.d") < F.col("b.d"))
+    sl = (
+        (F.col("b.rev").cast("double") - F.col("a.rev").cast("double"))
+        / (F.col("b.d").cast("double") - F.col("a.d").cast("double"))
+    ).alias("sl")
+    # One 1-row pass over the pairs gives np, the lower-median rank
+    # k = (np+1) div 2, and nparts-1 range boundaries cut from the
+    # sorted slopes of a hash sample of the day pairs (1 in
+    # _TS_SAMPLE). A pair's bucket is the number of boundaries below
+    # its slope: a function of sl alone and monotone in sl, so the
+    # local-rank and bucket-offset consumers agree however often
+    # either recomputes the pairs (an empty sample puts every pair in
+    # bucket 0). ranged is persisted only so the pair join runs once
+    # for both consumers; correctness does not rest on it.
     nparts = spark.sparkContext.defaultParallelism
-    # persisted, NOT exchange-reuse: the local-rank and bucket-offset
-    # consumers must see the SAME partition-id assignment, and two
-    # materializations of a range exchange may not (sampled boundaries
-    # + per-consumer AQE reads). The frame is calendar²-bounded —
-    # ~n_days²/2 doubles regardless of corpus size — so the cache is
-    # corpus-independent; the bench/driver clearCache per rep owns it.
-    ranged = (
-        pairs.repartitionByRange(nparts, "sl")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
+    sampled = F.pmod(F.xxhash64("a.d", "b.d"), F.lit(_TS_SAMPLE)) == 0
+    stats = joined.agg(
+        F.count("*").alias("np"),
+        F.sort_array(F.collect_list(F.when(sampled, sl))).alias("s"),
+    ).select(
+        "np",
+        F.expr("(np + 1) div 2").alias("k"),
+        F.expr(
+            f"transform(filter(sequence(1, {nparts - 1}), i -> size(s) > 0),"
+            f" i -> s[(i * size(s)) div {nparts}])"
+        ).alias("bounds"),
+    )
+    ranged = persist(
+        joined.select(sl).crossJoin(F.broadcast(stats)).select(
+            "sl",
+            "np",
+            "k",
+            F.size(F.filter("bounds", lambda x: x < F.col("sl"))).alias("pid"),
+        )
     )
     wloc = Window.partitionBy("pid").orderBy("sl")
     loc = ranged.withColumn("lrk", F.row_number().over(wloc))
@@ -142,7 +157,6 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     slope = (
         loc.join(F.broadcast(offs), "pid")
-        .crossJoin(F.broadcast(meta))
         .filter(F.col("lrk") + F.col("off") == F.col("k"))
         .select(
             F.col("sl").alias("m"), F.col("np").cast("long").alias("n_pairs")
@@ -227,7 +241,7 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, so the whole test is a join feeding a 1-row reduce; ties
     are a second tiny agg on the persisted daily frame.
     """
-    daily = _daily(spark, sf_dir).persist()
+    daily = persist(_daily(spark, sf_dir))
     a, b = daily.alias("a"), daily.alias("b")
     s = a.join(b, F.col("a.d") < F.col("b.d")).agg(
         F.sum(

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -250,14 +251,13 @@ def q_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     dollars = F.floor(F.col("o_totalprice") + 0.5).cast("long")
-    daily = (
+    daily = persist(
         o.groupBy(
             F.datediff(
                 F.to_date("o_orderdate"), F.to_date(F.lit("1992-01-01"))
             ).alias("d")
         )
         .agg(F.sum(dollars).alias("rev"))
-        .persist()
     )
     a, f_ = daily.alias("a"), daily.alias("f")
     fc = (
@@ -272,11 +272,11 @@ def q_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     r4 = (4 * F.col("rev") - F.col("sum_fc")).alias("r4")
     resid = fc.select("d", r4)
     wr = Window.orderBy("r4", "d")
-    resid = resid.select(
+    resid = persist(resid.select(
         "r4",
         F.row_number().over(wr).alias("rk"),
         F.count("*").over(Window.partitionBy()).alias("n"),
-    ).persist()  # r14: qs AND cov consume this — without the persist
+    ))  # r14: qs AND cov consume this — without the persist
     # the calendar×4 lag theta-join + ranking window ran twice
     # (calendar-bounded rows, so the cache is ~2.4k rows)
     qs = resid.agg(

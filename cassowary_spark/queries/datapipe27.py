@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.operators.survival import reorder_durations
 from cassowary_spark.registry import query
@@ -280,13 +281,12 @@ def q_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
     yr = F.year("l_shipdate")
     cents = F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("long")
-    rev = (
+    rev = persist(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .filter(yr.isin(1996, 1997))
         .groupBy(yr.alias("yr"), F.col("p_brand").alias("brand"))
         .agg(F.sum(cents).alias("cents"))
-        .persist()  # <=50 cells; totals + terms reuse one fact scan
-    )
+    )  # <=50 cells; totals + terms reuse one fact scan
     tot = rev.groupBy("yr").agg(F.sum("cents").cast("long").alias("t"))
     share = F.col("cents").cast("double") / F.col("t").cast("double")
     terms = rev.join(F.broadcast(tot), "yr").select(

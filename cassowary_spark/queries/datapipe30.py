@@ -11,6 +11,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -252,14 +253,13 @@ def q_corpus_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = F.concat(
         *[F.transform(_grams_expr("tk", n), _tag(n)) for n in (1, 2)]
     )
-    g = (
+    g = persist(
         toks.select("doc_id", "side", F.explode(tagged).alias("s"))
         .groupBy(
             "doc_id", "side", F.col("s.n").alias("n"),
             F.col("s.gram").alias("gram"),
         )
         .agg(F.count("*").alias("c"))
-        .persist()
     )
     ca = g.filter(F.col("side") == "cand").select(
         "n", "doc_id", "gram", F.col("c").alias("cc")

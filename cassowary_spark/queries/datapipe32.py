@@ -11,6 +11,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -104,13 +105,12 @@ def q_freq_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # ONE basket-keyed shuffle: collect_set dedups in the same agg, so
     # no separate distinct pass over the (oid, item) stream
-    baskets0 = (
+    baskets0 = persist(
         li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
         .select(F.col("l_orderkey").alias("oid"), F.col("p_brand").alias("item"))
         .groupBy("oid")
         .agg(F.array_sort(F.collect_set("item")).alias("bs0"))
-        .persist()  # one row per basket; nb/singles/candidates reuse it
-    )
+    )  # one row per basket; nb/singles/candidates reuse it
     nb = baskets0.agg(F.count("*").alias("nb"))
     # A-priori level 1: frequent singles from the (tiny) basket frame,
     # broadcast back as ONE sorted array for a row-local basket prune
@@ -367,9 +367,9 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("dim0") + F.lit(1)).alias("dim"),  # 1-based like the oracle
         F.floor(F.col("x") * F.lit(_ED_Q) + F.lit(0.5)).cast("long").alias("q"),
     )
-    per = comp.groupBy("source", "dim").agg(
+    per = persist(comp.groupBy("source", "dim").agg(
         F.sum("q").alias("sq"), F.count("*").alias("n")
-    ).persist()  # |sources| x dims rows; the global rollup reuses it
+    ))  # |sources| x dims rows; the global rollup reuses it
     # global centroid sums ROLL UP from the per-source partial —
     # exact integer addition, so equal to re-aggregating the corpus,
     # without a second pass over the exploded rows

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -101,12 +102,11 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolution, trading finite-sample exactness for a sketch bound);
     the coverage pass is one filtered agg over the 10% test slice.
     """
-    d = (
+    d = persist(
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "lang", "n_chars")
         .withColumn("b", _u32_col(F.col("doc_id")) % 10)
-        .persist()  # tagged once; train/cal/test slices reuse it
-    )
+    )  # tagged once; train/cal/test slices reuse it
     pred = (
         d.filter(F.col("b") <= 6)
         .groupBy("lang")

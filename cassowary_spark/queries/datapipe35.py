@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.queries.llm import _duck_lang_id
 from cassowary_spark.operators.text import lang_id
@@ -87,12 +88,11 @@ def q_label_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     d = doc.join(emb, doc.doc_id == emb.vec_id).select("label", "text")
     tok = d.select("label", F.explode(F.split("text", " ")).alias("term"))
-    ctf = (
+    ctf = persist(
         tok.groupBy("label", "term")
         .agg(F.count("*").alias("tf"))
         .filter(F.col("tf") >= _CK_MIN_CTF)
-        .persist()  # label x vocab frame; tot/ldf/nl/score reuse it
-    )
+    )  # label x vocab frame; tot/ldf/nl/score reuse it
     tot = ctf.groupBy("label").agg(F.sum("tf").alias("tot"))
     ldf = ctf.groupBy("term").agg(F.count("*").alias("df"))
     nl = ctf.agg(F.countDistinct("label").alias("n_labels"))
@@ -175,7 +175,7 @@ def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     ).select("lang", "text")
     p = d.select("lang", lang_id(F.col("text")).alias("lang_pred"))
-    cells = p.groupBy("lang", "lang_pred").agg(F.count("*").alias("n")).persist()
+    cells = persist(p.groupBy("lang", "lang_pred").agg(F.count("*").alias("n")))
     tot = cells.groupBy("lang").agg(F.sum("n").alias("nt"))
     return cells.join(F.broadcast(tot), "lang").select(
         "lang",

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -201,11 +202,11 @@ def q_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents")
     )
-    d2 = daily.withColumn(
+    d2 = persist(daily.withColumn(
         "dow",
         F.datediff(F.col("day").cast("date"), F.lit("1970-01-01").cast("date"))
         % 7,
-    ).persist()  # calendar-sized; weekday rollup + deviations reuse it
+    ))  # calendar-sized; weekday rollup + deviations reuse it
     wk = d2.groupBy("dow").agg(
         F.sum("cents").alias("s"), F.count("*").alias("n")
     )

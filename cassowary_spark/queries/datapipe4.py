@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import derived_fixture, load_table, table_path
@@ -679,7 +680,7 @@ def q_embed_norm_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     corpus = base.unionByName(scaled).unionByName(zeroed)
-    n = corpus.select(
+    n = persist(corpus.select(
         "vec_id",
         "label",
         srnd(
@@ -691,7 +692,7 @@ def q_embed_norm_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             6,
         ).alias("nrm"),
-    ).persist()  # r14: three scalars per vector; the median aggregate
+    ))  # r14: three scalars per vector; the median aggregate
     # AND the flag filter both consume it — unpersisted each re-ran
     # the 3-branch union + per-vector norm fold (narrow lineage,
     # nothing for AQE exchange reuse)

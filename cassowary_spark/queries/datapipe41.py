@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import derived_fixture, load_table
@@ -271,7 +272,7 @@ def q_cem_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("s_c"),
     )
-    matched = cells.filter((F.col("n_t") > 0) & (F.col("n_c") > 0)).persist()
+    matched = persist(cells.filter((F.col("n_t") > 0) & (F.col("n_c") > 0)))
     tot = matched.agg(F.sum("n_t").cast("long").alias("nt"))
     term = srnd(
         (F.col("n_t").cast("double") / F.col("nt").cast("double"))

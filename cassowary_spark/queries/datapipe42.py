@@ -10,9 +10,10 @@ broadcast-sized frame — the family shape of C139/C160/C175.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -198,7 +199,7 @@ def q_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.alias("t"),
         F.floor(F.col("value") * 100.0 + 0.5).cast("long").alias("cents"),
     )
-    cells = (
+    cells = persist(
         e.groupBy("event_type")
         .agg(
             F.sum("t").cast("long").alias("n_t"),
@@ -210,8 +211,7 @@ def q_simpson_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("s_c"),
         )
-        .persist()  # |types| rows; pooled + strata reuse one scan
-    )
+    )  # |types| rows; pooled + strata reuse one scan
     pooled = cells.agg(
         srnd(
             F.sum("s_t").cast("double")
@@ -304,8 +304,8 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the only corpus-wide work is the top-(k+1)
     selection, SHIPPED as orderBy+limit → TakeOrderedAndProject
     (per-partition top-k + a (k+1)-row merge — the q_topk evolution,
-    r10); the rank window and the estimator run over the k+1
-    surviving rows only.
+    r10); one aggregate folds the estimator over the k+1 surviving
+    rows, so the corpus is scanned once.
     """
     ev = load_table(spark, sf_dir, "events").filter(F.col("value") > 0)
     v = ev.select(
@@ -314,33 +314,34 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # orderBy+limit compiles to TakeOrderedAndProject — per-partition
     # top-(k+1) + a (k+1)-row merge, NO corpus-wide sort or window;
-    # row_number then ranks only the k+1 surviving rows (r10)
+    # ONE aggregate then folds the k+1 surviving rows: sorted into
+    # rank order (cents DESC, event_id), the last is the k+1-th pivot
+    # and the first k are the terms, summed in rank order (C69); with
+    # no k+1-th row there are no terms, as in the oracle's join
     sel = v.orderBy(F.col("cents").desc(), F.col("event_id")).limit(
         _HILL_K + 1
     )
-    w = Window.orderBy(F.col("cents").desc(), F.col("event_id"))
-    top = sel.select(
-        "cents", F.row_number().over(w).alias("rnk")
-    ).persist()  # k+1 rows; the kth pivot and the terms reuse it
-    kth = top.filter(F.col("rnk") == _HILL_K + 1).select(
-        F.col("cents").alias("ck")
+    h = sel.agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct((-F.col("cents")).alias("nc"), "event_id", "cents")
+            )
+        ).alias("top")
+    ).select(
+        F.slice(
+            "top", 1, F.when(F.size("top") > _HILL_K, _HILL_K).otherwise(0)
+        ).alias("top"),
+        F.get("top", _HILL_K)["cents"].cast("double").alias("ck"),
     )
-    terms = (
-        top.filter(F.col("rnk") <= _HILL_K)
-        .crossJoin(F.broadcast(kth))
-        .select(
-            "rnk",
-            srnd(
-                F.log(F.col("cents").cast("double") / F.col("ck").cast("double")),
-                8,
-            ).alias("term"),
-        )
-    )
-    h = terms.agg(
+    h = h.select(
         srnd(
-            F.expr(
-                "aggregate(array_sort(collect_list(struct(rnk, term))),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.term)"
+            F.aggregate(
+                F.transform(
+                    "top",
+                    lambda x: srnd(F.log(x["cents"].cast("double") / F.col("ck")), 8),
+                ),
+                F.lit(0.0).cast("double"),
+                lambda acc, t: acc + t,
             )
             / float(_HILL_K),
             8,

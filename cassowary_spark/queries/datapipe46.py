@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -78,9 +79,9 @@ def q_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = ev.select(
         "event_type", F.lead("event_type").over(w).alias("nxt")
     ).filter(F.col("nxt").isNotNull())
-    tr = seq.groupBy(
+    tr = persist(seq.groupBy(
         F.col("event_type").alias("s"), F.col("nxt").alias("t")
-    ).agg(F.count("*").cast("long").alias("c")).persist()
+    ).agg(F.count("*").cast("long").alias("c")))
     per_s = tr.groupBy("s").agg(F.sum("c").cast("long").alias("cs"))
     p = F.col("c").cast("double") / F.col("cs").cast("double")
     terms = tr.join(F.broadcast(per_s), "s").select(

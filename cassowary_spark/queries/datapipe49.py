@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.operators.ranks import doubled_midranks
 from cassowary_spark.registry import query
@@ -88,7 +89,7 @@ def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n, Σ, Σ²) per group ever moves.
     """
     d = load_table(spark, sf_dir, "documents")
-    cells = (
+    cells = persist(
         d.select("source", F.col("n_chars").cast("long").alias("x"))
         .groupBy("source")
         .agg(
@@ -96,8 +97,7 @@ def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("x").cast("long").alias("s"),
             F.sum(F.col("x") * F.col("x")).cast("long").alias("q"),
         )
-        .persist()  # |sources| rows; totals + folds reuse it
-    )
+    )  # |sources| rows; totals + folds reuse it
     tot = cells.agg(
         F.sum("n").cast("long").alias("nn"),
         F.sum("s").cast("long").alias("ss"),

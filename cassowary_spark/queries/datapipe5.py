@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.operators.dedup import drop_hot_keys, shingles
 from cassowary_spark.queries.llm import (
@@ -227,7 +228,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.3 "shuffle keys, not payloads"; the dedup family's documented
     # ~1e-12 collision tolerance applies — a collision can only mark
     # one extra doc leaked).
-    sh0 = (
+    sh0 = persist(
         tagged.select(
             "doc_id",
             "lang",
@@ -237,7 +238,6 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "lang", "split", F.xxhash64("shingle").alias("sh_h")
         )
-        .persist()
     )
     sh = drop_hot_keys(sh0, "sh_h", 1000, broadcast_hot=True)
     train_sh = (

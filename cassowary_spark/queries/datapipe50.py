@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.operators.ranks import (
     attach_doubled_midranks,
@@ -267,10 +268,10 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 2
         == 1
     ).cast("int")
-    per_user = ev.groupBy("user_id").agg(
+    per_user = persist(ev.groupBy("user_id").agg(
         F.sum(pre).cast("long").alias("x_cents"),
         F.sum(post).cast("long").alias("y_cents"),
-    ).withColumn("t", t).persist()  # per-unit frame; moments + arms reuse
+    ).withColumn("t", t))  # per-unit frame; moments + arms reuse
     s = per_user.agg(
         F.count("*").cast("long").alias("n"),
         F.sum("x_cents").cast("long").alias("sx"),

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -106,15 +107,14 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("pr")
     )
-    edges = (
+    # consumed three times (two degree projections + the attach
+    # join): persist the sparsified edge set instead of re-running
+    # the pair-gen shuffle, the C127 discipline
+    edges = persist(
         pairs.groupBy(F.col("pr.x").alias("x"), F.col("pr.y").alias("y"))
         .agg(F.count("*").alias("mcnt"))
         .filter(F.col("mcnt") >= _ASSORT_SUPPORT)
         .select("x", "y")
-        # consumed three times (two degree projections + the attach
-        # join): persist the sparsified edge set instead of re-running
-        # the pair-gen shuffle, the C127 discipline
-        .persist()
     )
     deg = (
         edges.select(F.col("x").alias("node"))

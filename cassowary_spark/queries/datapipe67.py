@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -78,11 +79,11 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders")
     dec = "decimal(38,0)"
-    daily = o.groupBy(
+    daily = persist(o.groupBy(
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")
     ).agg(
         F.sum(F.floor(F.col("o_totalprice") + 0.5).cast("long")).alias("rev")
-    ).persist()
+    ))
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

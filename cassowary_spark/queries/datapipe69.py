@@ -24,6 +24,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import persist
 from cassowary_spark.exprs import sql_srnd, srnd
 from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
@@ -731,9 +732,9 @@ def q_dirichlet_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     only corpus-sized shuffle is the matched (doc, term) tf agg.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    dl = d.select(
+    dl = persist(d.select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("dl")
-    ).persist()  # r14: two longs per doc; the collection total AND the
+    ))  # r14: two longs per doc; the collection total AND the
     # final length-penalty join both consume it — unpersisted each
     # re-split the full corpus text (narrow lineage, nothing for AQE
     # exchange reuse to dedup)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from cassowary_spark.caches import scope
 from cassowary_spark.multimodal.decode import attach_binary, image_meta
 from cassowary_spark.operators.dedup import (
     SHINGLE_DF_CAP,
@@ -817,22 +818,20 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassowary_spark.operators.dedup import connected_components, lsh_verified_pairs
 
     corpus = _docs_with_twins(spark, sf_dir)
-    owned: list = []
-    pairs = lsh_verified_pairs(
-        corpus, "doc_id", "text", num_hashes=64, bands=32,
-        shingle_k=5, threshold=0.5, max_shingle_df=SHINGLE_DF_CAP,
-        bucket_cap=1000, owned_caches=owned,
-    )
     # Materialize the pair list ONCE, then release the pair
-    # pipeline's caches BEFORE the CC loop: the loop is
-    # frontier-bounded, but holding the shingle cache (disk-backed
-    # blocks, tens of GB at sf100) plus the pipeline's live shuffle
-    # files through its rounds is what exhausted local disk in the
-    # r13 third-decade probe. After this checkpoint the edge list is
-    # a leaf; nothing upstream is ever re-read.
-    edges = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    for f in owned:
-        f.unpersist()
+    # pipeline's caches (the scope's exit) BEFORE the CC loop: the
+    # loop is frontier-bounded, but holding the shingle cache
+    # (disk-backed blocks, tens of GB at sf100) plus the pipeline's
+    # live shuffle files through its rounds is what exhausted local
+    # disk in the r13 third-decade probe. After this checkpoint the
+    # edge list is a leaf; nothing upstream is ever re-read.
+    with scope():
+        pairs = lsh_verified_pairs(
+            corpus, "doc_id", "text", num_hashes=64, bands=32,
+            shingle_k=5, threshold=0.5, max_shingle_df=SHINGLE_DF_CAP,
+            bucket_cap=1000,
+        )
+        edges = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
     return connected_components(corpus.select("doc_id"), edges, "doc_id")
 
 

@@ -10,9 +10,12 @@ sides.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cassowary_spark import caches
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -22,12 +25,22 @@ ORACLES: dict[str, str] = {}
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query; ``oracle`` is DuckDB-runnable ANSI SQL or None
-    for genuinely non-SQL-expressible ops (rows-only check)."""
+    for genuinely non-SQL-expressible ops (rows-only check).
+
+    ``QUERIES`` holds a wrapper that releases every frame the previous
+    query call left in ``caches`` before it builds this one, so each
+    call owns its persists and sees no earlier call's caches."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query key: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def build(*args, **kwargs):
+            caches.release()
+            return fn(*args, **kwargs)
+
+        QUERIES[name] = build
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from cassowary_spark import caches
+
 TABLES = (
     "region",
     "nation",
@@ -154,8 +156,10 @@ def derived_fixture(
     exists. Otherwise any partial directory is removed, ``build(path)``
     writes into a fresh empty ``path`` (in place, because some
     fixtures record their own absolute file paths), and the marker is
-    written once it returns. A ``_``-prefixed file is skipped by
-    Spark's file listing and by the SSTable reader. A fixture that
+    written once it returns. The build runs inside ``caches.scope()``,
+    so whatever it persisted is released when it returns. A
+    ``_``-prefixed file is skipped by Spark's file listing and by the
+    SSTable reader. A fixture that
     records the file names of another fixture is named inside it
     (``"cow_lake/erased"``), so a rebuild of the outer one drops it.
     """
@@ -165,6 +169,7 @@ def derived_fixture(
         return path
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
-    build(path)
+    with caches.scope():
+        build(path)
     open(marker, "w").close()
     return path

@@ -68,7 +68,6 @@ def main() -> None:
                 f"...{i + 1}/{len(keys)} done {round(time.time() - t0)}s",
                 flush=True,
             )
-            spark.catalog.clearCache()
     print(
         f"SLICE {lo}:{lo + len(keys)} n={len(keys)} ROWS_ONLY:",
         rows_only,

@@ -52,7 +52,6 @@ def main() -> None:
                 f"...{i + 1}/{len(keys)} done {round(time.time() - t0)}s",
                 flush=True,
             )
-            spark.catalog.clearCache()
     print("TOTAL", len(keys), "FAILS:", fails, flush=True)
     spark.stop()
     sys.exit(1 if fails else 0)

@@ -128,6 +128,33 @@ class TestTheilSen:
         assert out3["ts_slope"] == m
         assert out3["ts_intercept"] == b
 
+    def test_oracle_parity_holds_without_a_shared_persist(
+        self, spark, sf_dir, duck, monkeypatch
+    ):
+        """A pair's rank bucket is a function of its slope, so the
+        local-rank and bucket-offset consumers agree even when each
+        recomputes the pairs (persist disabled) — at 3 shuffle
+        partitions, with AQE off and on."""
+        from cassowary_spark.oracle import compare
+        from cassowary_spark.queries import datapipe24
+
+        monkeypatch.setattr(datapipe24, "persist", lambda df: df)
+        keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+        before = {k: spark.conf.get(k) for k in keys}
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", "3")
+            for aqe in ("false", "true"):
+                spark.conf.set("spark.sql.adaptive.enabled", aqe)
+                compare(
+                    QUERIES["q_theil_sen"](spark, sf_dir),
+                    registry.ORACLES["q_theil_sen"],
+                    duck,
+                    "q_theil_sen",
+                )
+        finally:
+            for k, v in before.items():
+                spark.conf.set(k, v)
+
 
 class TestMannKendall:
     def test_monotone_tied_and_python(self, spark, tmp_path):

@@ -93,6 +93,25 @@ class TestBucketJoin:
         assert "SortMergeJoin" in plan
         assert "Bucketed: true" in plan
 
+    def test_bucketed_files_stay_out_of_the_warehouse(self, spark, sf_dir):
+        """The bucketed tables are external, over derived-fixture files:
+        the session warehouse gains no ``*_bkt_*`` directory."""
+        import glob
+
+        from cassowary_spark.queries.datapipe31 import ensure_bucketed_tables
+
+        from cassowary_spark import tables
+
+        for name in ensure_bucketed_tables(spark, sf_dir):
+            loc = (
+                spark.sql(f"DESCRIBE TABLE EXTENDED {name}")
+                .filter("col_name = 'Location'")
+                .first()["data_type"]
+            )
+            assert loc.removeprefix("file:").startswith(tables.CACHE_ROOT), loc
+        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        assert not glob.glob(os.path.join(wh, "*_bkt_*"))
+
     def test_results_match_plain_join(self, spark, sf_dir):
         from cassowary_spark.queries.tpch import _cents as _tpch_cents
         from cassowary_spark.tables import load_table

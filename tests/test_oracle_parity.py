@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from cassowary_spark import registry
+from cassowary_spark import caches, registry
 from cassowary_spark.oracle import compare
 
 registry.load_all()
@@ -15,10 +15,20 @@ ORACLE_KEYS = sorted(registry.ORACLES)
 ROWS_ONLY_KEYS = sorted(set(registry.QUERIES) - set(registry.ORACLES))
 
 
+def _assert_no_cache_left(spark, name):
+    """Every cache a query made is in the ledger: releasing it leaves
+    the session's cache manager empty."""
+    caches.release()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name}: a cache outside cassowary_spark.caches outlived the query"
+    )
+
+
 @pytest.mark.parametrize("name", ORACLE_KEYS)
 def test_oracle_parity(name, spark, sf_dir, duck):
     df = registry.QUERIES[name](spark, sf_dir)
     compare(df, registry.ORACLES[name], duck, name)
+    _assert_no_cache_left(spark, name)
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_KEYS)
@@ -28,6 +38,7 @@ def test_rows_only_runs(name, spark, sf_dir):
     n = df.count()
     assert n >= 0
     assert df.columns
+    _assert_no_cache_left(spark, name)
 
 
 def test_entry_contract_is_the_registry():
