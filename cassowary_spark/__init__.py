@@ -18,8 +18,15 @@ build time (SURVEY.md §0); capability surface reconstructed from the
 driver contract and public knowledge of cassowary/Hive/Cassandra.
 """
 
+from cassowary_spark import session
 from cassowary_spark.session import get_spark
 from cassowary_spark.tables import TABLES, load_tables, register_views
+
+# A Python worker imports this package when it unpickles any
+# module-level function or class of it (the SSTable source, a UDF
+# whose closure reaches a package helper), so this one call gates
+# each such worker's zip re-reads.
+session._stat_gate_zip_invalidation()
 
 __all__ = ["get_spark", "load_tables", "register_views", "TABLES"]
 __version__ = "0.1.0"

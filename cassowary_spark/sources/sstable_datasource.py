@@ -48,7 +48,6 @@ default: one per ``MIN_ROWS_PER_SPLIT`` index rows or per
 from __future__ import annotations
 
 import os
-import sys
 from dataclasses import dataclass
 from typing import Any, Iterator
 
@@ -70,6 +69,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from cassowary_spark.session import ship_package
 from cassowary_spark.sources.sstable_format import (
     FORMAT_VERSION,
     ROW_MARKER,
@@ -96,52 +96,6 @@ from cassowary_spark.sources.validators import Validator, get_validator
 FAR_FUTURE_TS = 0x7FFFFFF0
 
 _REGISTERED_SESSIONS: set[int] = set()
-
-
-def _stat_gate_zip_invalidation() -> None:
-    """Make ``importlib.invalidate_caches()`` skip unchanged zip archives.
-
-    PySpark calls ``importlib.invalidate_caches()`` at the start of every
-    Python-worker task and every data-source planner call. Workers
-    import pyspark from ``pyspark.zip``, and on CPython 3.11 every
-    ``zipimporter`` in ``sys.path_importer_cache`` (the archive root, one
-    per imported subpackage, py4j) then re-reads its archive's whole
-    central directory: 0.14-0.21 CPU-s per task, more than an 8-key
-    lookup spends decoding. The wrapper installed here re-reads an
-    archive only when its ``(st_mtime_ns, st_size)`` differs from what
-    that importer saw at its last read in this process, so an
-    importer's first invalidation after installation still reads, and a
-    rewritten archive is still picked up. A zip added later (``addPyFile``)
-    gets a new importer, which reads its directory when it is created.
-
-    Called from every entry point that runs in a Python worker: the
-    source's constructor (planner workers), the reader's constructor
-    (also the stream reader's, which builds one) and ``read``, and the
-    writer's ``write``. This module ships by value, so its globals are
-    rebuilt per task: the once-per-process guard lives on the class.
-    Does nothing where ``zipimporter.invalidate_caches`` does not exist.
-    """
-    import functools
-    import zipimport
-
-    cls = zipimport.zipimporter
-    original = getattr(cls, "invalidate_caches", None)
-    if original is None or getattr(cls, "_stat_gated", False):
-        return
-
-    @functools.wraps(original)
-    def invalidate_caches(self):
-        try:
-            st = os.stat(self.archive)
-        except (AttributeError, OSError, TypeError):
-            return original(self)
-        stamp = (st.st_mtime_ns, st.st_size)
-        if getattr(self, "_read_stamp", None) != stamp:
-            original(self)
-            self._read_stamp = stamp
-
-    cls.invalidate_caches = invalidate_caches
-    cls._stat_gated = True
 
 
 def _successor(key: bytes) -> bytes:
@@ -233,14 +187,13 @@ class SSTableDataSourceReader(DataSourceReader):
     # round trip without starving parallelism (measured optimum on
     # local[32] at sf0.1; at cluster scale `splits` pins it instead).
     # Most of that round trip was the per-task pyspark.zip directory
-    # re-read that _stat_gate_zip_invalidation now skips; split sizing
-    # and lookup chunking were deliberately left as tuned before it.
+    # re-read that session._stat_gate_zip_invalidation now skips; split
+    # sizing and lookup chunking were deliberately left as tuned before it.
     MIN_ROWS_PER_SPLIT = 10_000
     SPLIT_BYTES = 1 << 20  # uncompressed bytes per split floor
     ARROW_BATCH_ROWS = 4_096
 
     def __init__(self, options: dict, user_schema: StructType | None) -> None:
-        _stat_gate_zip_invalidation()
         self.path = options.get("path")
         if not self.path:
             raise ValueError("sstable source requires a path (snapshot directory)")
@@ -883,7 +836,6 @@ class SSTableDataSourceReader(DataSourceReader):
         """
         import pyarrow as pa
 
-        _stat_gate_zip_invalidation()
         fields = self._fields()
         rows = self._rows(partition)
         if any("TimestampType" in v.name for _, v, _ in fields):
@@ -1004,10 +956,9 @@ def _array_nopandas(col, atype):
     """Build a pa.Array from decoded Python values WITHOUT ``pa.array``.
 
     pyarrow's ``pa.array`` entry point lazily imports pandas (~0.6s)
-    on its first call; every Spark task runs in a fresh Python worker,
-    so that import was a fixed per-task tax on the whole sstable read
-    path. Fixed-width numerics, booleans, strings and binary build
-    straight from buffers; anything else (decimal, uuid-as-string is
+    on its first call, a fixed tax on the first sstable read of every
+    Python worker. Fixed-width numerics, booleans, strings and binary
+    build straight from buffers; anything else (decimal, uuid-as-string is
     covered by the string path; nested lists/maps) falls back to
     ``pa.array`` and pays the import only for those schemas.
     """
@@ -1161,13 +1112,11 @@ class SSTableDataSourceWriter(DataSourceWriter):
         }
 
     def write(self, iterator) -> SSTableCommitMessage:
-        # NOTE: worker-side method — only module-level imports of this
-        # package (shipped by value) or installed packages are safe
-        # here; a lazy `import cassowary_spark...` would fail on
-        # executors without the repo on PYTHONPATH.
+        # Worker-side method: this package reaches the worker as the
+        # zip that register_sstable_source shipped, so a lazy import of
+        # any cassowary_spark module would resolve here too.
         from pyspark import TaskContext
 
-        _stat_gate_zip_invalidation()
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx else 0
         # Staged-file uniqueness must be per task ATTEMPT, not per
@@ -1319,11 +1268,6 @@ class SSTableDataSource(DataSource):
     """``spark.read.format("sstable").load(snapshot_dir)`` and
     ``df.write.format("sstable").save(snapshot_dir)``."""
 
-    def __init__(self, options: dict) -> None:
-        # first code of ours in every create/pushdown/plan planner worker
-        _stat_gate_zip_invalidation()
-        super().__init__(options)
-
     @classmethod
     def name(cls) -> str:
         return "sstable"
@@ -1346,20 +1290,17 @@ def register_sstable_source(spark) -> None:
     """Idempotently register the sstable format on a SparkSession.
 
     Works on a *vanilla* session (the driver builds its own): the
-    source's modules are registered for cloudpickle by-value transport
-    so executors never need ``cassowary_spark`` on their PYTHONPATH,
-    and the Python-datasource pushdown conf (off by default, checked at
-    plan time because this reader implements ``pushFilters``) is
-    enabled at runtime.
+    package is shipped to the session's workers first
+    (``session.ship_package``), because registration wraps the source
+    with the context's Python includes of the moment; the source then
+    pickles by reference, so a planner call moves a class name, not
+    the source's module graph. The Python-datasource pushdown conf (off
+    by default, checked at plan time because this reader implements
+    ``pushFilters``) is enabled at runtime.
     """
     if id(spark) in _REGISTERED_SESSIONS:
         return
-    from pyspark import cloudpickle
-
-    from cassowary_spark.sources import sstable_format, validators
-
-    for mod in (sys.modules[__name__], sstable_format, validators):
-        cloudpickle.register_pickle_by_value(mod)
+    ship_package(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SSTableDataSource)
     _REGISTERED_SESSIONS.add(id(spark))

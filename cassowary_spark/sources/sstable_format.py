@@ -124,24 +124,12 @@ DEFAULT_CHUNK_LEN = 65536
 # Files without it (legacy) are walked in full.
 CINDEX_MAGIC = b"CIX1"
 
-class _ProcessLocalCache(dict):
-    """A dict that always pickles EMPTY.
-
-    This module ships to executors by value (cloudpickle), which would
-    otherwise serialize the driver's parsed-index cache — potentially
-    millions of entries — into every task closure. Each process
-    re-warms its own cache instead.
-    """
-
-    def __reduce__(self):
-        return (self.__class__, ())
-
-
 # Parsed-Index.db cache keyed by (path, mtime_ns, size): sstables are
 # immutable, so each process (driver during planning; a reused Python
-# worker for streaming scans) parses a generation's index once.
-_INDEX_CACHE: dict[tuple, list] = _ProcessLocalCache()
-_CINDEX_CACHE: dict[tuple, dict] = _ProcessLocalCache()
+# worker across tasks) parses a generation's index once. The package
+# reaches workers by reference, so these dicts are never pickled.
+_INDEX_CACHE: dict[tuple, list] = {}
+_CINDEX_CACHE: dict[tuple, dict] = {}
 
 
 # ---------------------------------------------------------------- model
@@ -1419,11 +1407,12 @@ class SSTableReader:
         savings to be had).
         """
         # Bounds check FIRST: an unbounded scan must never pay the
-        # promoted-index parse. Each Spark task is a fresh Python
-        # worker (no cross-task cache), so parsing the multi-MB
-        # ColumnIndex.db here put ~0.5s/generation of fixed cost on
-        # every clustered/collections task that never used it — the
-        # dominant term in the r3 clustered-path regression.
+        # promoted-index parse. Each Python worker parses a
+        # generation's multi-MB ColumnIndex.db at least once (its
+        # _CINDEX_CACHE starts empty), and parsing it here put
+        # ~0.5s/generation of fixed cost on every clustered/collections
+        # task that never used it — the dominant term in the r3
+        # clustered-path regression.
         if name_lo is None and name_hi is None:
             yield from self.scan_offsets(start, end)
             return

@@ -162,6 +162,11 @@ def derived_fixture(
     SSTable reader. A fixture that
     records the file names of another fixture is named inside it
     (``"cow_lake/erased"``), so a rebuild of the outer one drops it.
+
+    Eviction: the marker lists the absolute paths of the dep files,
+    one a line. After a build, ``name`` is removed from every other
+    key whose marker lists the same paths: those files were rewritten
+    since, so that entry can never be read again.
     """
     path = fixture_path(sf_dir, name, deps)
     marker = os.path.join(path, _COMPLETE)
@@ -171,5 +176,28 @@ def derived_fixture(
     os.makedirs(path)
     with caches.scope():
         build(path)
-    open(marker, "w").close()
+    dep_paths = "".join(f"{os.path.abspath(table_path(sf_dir, d))}\n" for d in deps)
+    with open(marker, "w") as f:
+        f.write(dep_paths)
+    _evict_superseded(os.path.relpath(path, CACHE_ROOT).split(os.sep)[0], name, dep_paths)
     return path
+
+
+def _evict_superseded(own_key: str, name: str, dep_paths: str) -> None:
+    """Remove ``name`` under every cache key but ``own_key`` whose marker
+    lists ``dep_paths``, and each directory that this leaves empty."""
+    for key in os.listdir(CACHE_ROOT):
+        if key == own_key:
+            continue
+        old = os.path.join(CACHE_ROOT, key, name)
+        try:
+            with open(os.path.join(old, _COMPLETE)) as f:
+                if f.read() != dep_paths:
+                    continue
+        except OSError:
+            continue
+        shutil.rmtree(old, ignore_errors=True)
+        try:
+            os.removedirs(os.path.dirname(old))  # stops at CACHE_ROOT, which holds own_key
+        except OSError:
+            pass

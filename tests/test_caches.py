@@ -98,6 +98,8 @@ def test_release_skips_a_stopped_session():
 def test_registry_call_releases_the_previous_calls_frames(monkeypatch):
     monkeypatch.setattr(registry, "QUERIES", {})
     monkeypatch.setattr(registry, "ORACLES", {})
+    shipped = []
+    monkeypatch.setattr(registry, "ship_package", shipped.append)
     a, b = _Frame(), _Frame()
 
     @registry.query("q_a")
@@ -116,3 +118,4 @@ def test_registry_call_releases_the_previous_calls_frames(monkeypatch):
     assert registry.QUERIES["q_b"].__doc__ == "doc"
     registry.QUERIES["q_a"](None, "sf")
     assert not b.cached
+    assert shipped == [None, None, None]  # every call ships to its session first

@@ -91,3 +91,32 @@ def test_complete_fixture_is_not_rebuilt_until_a_dep_changes(tmp_fixture_cache, 
 
     with pytest.raises(ValueError):
         tables.fixture_path(sf, "fx", "supplier")
+
+
+def test_rebuild_after_a_dep_rewrite_evicts_the_superseded_entry(tmp_fixture_cache, tmp_path):
+    sf = str(tmp_path / "sf")
+    _plant_supplier(sf, 0)
+    first = tables.derived_fixture(sf, "fx", ("supplier",), lambda p: None)
+    keep = tables.derived_fixture(sf, "other", ("supplier",), lambda p: None)
+    with open(os.path.join(first, "_COMPLETE")) as f:
+        assert f.read() == os.path.abspath(os.path.join(sf, "supplier.parquet")) + "\n"
+
+    _plant_supplier(sf, 100)
+    second = tables.derived_fixture(sf, "fx", ("supplier",), lambda p: None)
+    assert second != first and os.path.exists(second)
+    assert not os.path.exists(first)
+    assert os.path.exists(keep)  # another fixture of the old key is not this build's to evict
+
+    tables.derived_fixture(sf, "other", ("supplier",), lambda p: None)
+    assert not os.path.exists(os.path.dirname(first))  # the emptied key goes too
+
+
+def test_same_basename_entry_of_another_sf_dir_survives_a_rebuild(tmp_fixture_cache, tmp_path):
+    a, b = str(tmp_path / "a" / "sfx"), str(tmp_path / "b" / "sfx")
+    _plant_supplier(a, 0)
+    _plant_supplier(b, 100)
+    entry_b = tables.derived_fixture(b, "fx", ("supplier",), lambda p: None)
+    tables.derived_fixture(a, "fx", ("supplier",), lambda p: None)
+    _plant_supplier(a, 200)
+    tables.derived_fixture(a, "fx", ("supplier",), lambda p: None)
+    assert os.path.exists(os.path.join(entry_b, "_COMPLETE"))

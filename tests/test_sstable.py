@@ -882,16 +882,18 @@ def test_collections_roundtrip_spark(spark, tmp_path):
 
 
 def test_clustering_slice_promoted_index_io(spark, tmp_path, monkeypatch):
-    """End-to-end: a pushed clustering slice on a large UTF8-clustered
-    partition reads through the promoted column index (block-skip path
-    forced via the size gate) and returns exactly the rows the full
-    scan would after filtering."""
+    """End-to-end: a pushed clustering slice on partitions larger than
+    ``SLICE_MIN_PARTITION_BYTES`` reads through the promoted column
+    index (the block-skip path, taken by size alone, so a worker takes
+    it too) and returns exactly the rows the full scan would after
+    filtering."""
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
     from cassowary_spark.sources.convert import write_clustered_snapshot
-    from cassowary_spark.sources import sstable_format
+    from cassowary_spark.sources.sstable_datasource import SSTableDataSourceReader
+    from cassowary_spark.sources.sstable_format import SSTableReader, discover_sstables
 
-    monkeypatch.setattr(sstable_format.SSTableReader, "SLICE_MIN_PARTITION_BYTES", 0)
-
-    n = 400
+    n = 4000
     t = pa.table(
         {
             "pk": pa.array([1] * n + [2] * n, pa.int64()),
@@ -903,6 +905,36 @@ def test_clustering_slice_promoted_index_io(spark, tmp_path, monkeypatch):
     write_clustered_snapshot(
         t, d, key_col="pk", clustering_cols=["ck"], generations=2
     )
+
+    # In process: every stored partition is big enough to block-skip,
+    # and the pushed bounds read fewer of its cells than it holds.
+    held = {}
+    for r in discover_sstables(d):
+        ci = r.column_index(0, r._data.total)
+        assert ci and all(
+            ent[0] - off >= SSTableReader.SLICE_MIN_PARTITION_BYTES for off, ent in ci.items()
+        )
+        for p in r.scan_offsets(0, r._data.total):
+            held[(r.generation, p.key)] = len(p.cells)
+    sliced = {}
+    real_scan_slices = SSTableReader.scan_slices
+
+    def spy(self, *args):
+        for p in real_scan_slices(self, *args):
+            sliced[(self.generation, p.key)] = len(p.cells)
+            yield p
+
+    monkeypatch.setattr(SSTableReader, "scan_slices", spy)
+    reader = SSTableDataSourceReader({"path": d}, None)
+    pushed = [GreaterThanOrEqual(("ck",), "k0100"), LessThan(("ck",), "k0200")]
+    assert list(reader.pushFilters(pushed)) == []
+    for part in reader.partitions():
+        for _ in reader.read(part):
+            pass
+    monkeypatch.undo()
+    assert sliced.keys() == held.keys()
+    assert all(sliced[k] < held[k] for k in held), (sliced, held)
+
     df = read_sstable(spark, d)
     got = df.filter((F.col("ck") >= "k0100") & (F.col("ck") < "k0200")).collect()
     assert len(got) == 200

@@ -1,24 +1,27 @@
-"""The SSTable source's stat-gated ``zipimporter`` invalidation.
+"""The package's stat-gated ``zipimporter`` invalidation.
 
 PySpark calls ``importlib.invalidate_caches()`` at the start of every
-Python-worker task; ``sstable_datasource._stat_gate_zip_invalidation``
-makes that skip re-reading zip archives that did not change. These
-tests need no Spark: a temporary zip holding a module sits on
-``sys.path``, as ``pyspark.zip`` does in a worker.
+Python-worker task; ``session._stat_gate_zip_invalidation``, installed
+when ``cassowary_spark`` is imported, makes that skip re-reading zip
+archives that did not change. These tests need no Spark: a temporary
+zip holding a module sits on ``sys.path``, as ``pyspark.zip`` does in
+a worker.
 """
 
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
 
 import pytest
-from pyspark import cloudpickle
 
-from cassowary_spark.sources import sstable_datasource
-from cassowary_spark.sources.sstable_datasource import _stat_gate_zip_invalidation
+from cassowary_spark.session import _stat_gate_zip_invalidation
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _ZI = zipimport.zipimporter
 
@@ -93,25 +96,25 @@ def test_rewritten_archive_is_reread(zip_on_path):
     assert importlib.import_module("zinv_b").VALUE == "b"
 
 
-def test_one_wrapper_per_process(zip_on_path):
+def test_one_wrapper_per_process(zip_on_path, tmp_path):
     _, original = zip_on_path
     _stat_gate_zip_invalidation()
     _stat_gate_zip_invalidation()
-    assert _ZI.invalidate_caches.__wrapped__ is original
-    # A by-value copy of the module (as a worker unpickles it) has fresh
-    # globals; the guard on the class must still hold.
-    was_by_value = "cassowary_spark.sources.sstable_datasource" in (
-        cloudpickle.list_registry_pickle_by_value()
-    )
-    cloudpickle.register_pickle_by_value(sstable_datasource)
-    try:
-        shipped = cloudpickle.loads(cloudpickle.dumps(_stat_gate_zip_invalidation))
-    finally:
-        if not was_by_value:
-            cloudpickle.unregister_pickle_by_value(sstable_datasource)
-    assert shipped is not _stat_gate_zip_invalidation
-    shipped()
     wrapper = _ZI.invalidate_caches
     assert wrapper is not original
     assert wrapper.__wrapped__ is original
     assert not hasattr(original, "__wrapped__")
+    # A fresh interpreter (as a Python worker starts) is gated by the
+    # package import alone.
+    probe = (
+        f"import sys; sys.path.insert(0, {REPO!r}); "
+        "import zipimport; assert not getattr(zipimport.zipimporter, '_stat_gated', False); "
+        "import cassowary_spark; print(zipimport.zipimporter._stat_gated)"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip() == "True"
