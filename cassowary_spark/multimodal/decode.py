@@ -1,7 +1,7 @@
 """Multimodal columns: opaque binary payloads + typed metadata.
 
 Design (SURVEY.md §2 C5): image/audio/video travel as BinaryType
-columns next to typed metadata; decode / feature-extract / resize /
+columns next to typed metadata; decode / feature-extract /
 frame-sample run as Arrow-batched Pandas functions over mapInPandas so
 each worker touches only its partition's bytes — the bytes NEVER move
 through the driver.
@@ -121,23 +121,6 @@ def image_meta(
             )
 
     return df.mapInPandas(decode, IMAGE_META_SCHEMA)
-
-
-def resize_image(content: bytes, width: int, height: int) -> bytes:
-    """Real resize via PIL (raises without the codec); plumbing mirrors
-    image_meta — swap into a mapInPandas stage identically."""
-    import io as _io
-
-    try:
-        from PIL import Image
-    except ImportError as exc:  # pragma: no cover - PIL absent here
-        raise NotImplementedError(
-            "image codec (PIL) not available in this environment"
-        ) from exc
-    with Image.open(_io.BytesIO(content)) as im:  # pragma: no cover
-        out = _io.BytesIO()
-        im.resize((width, height)).save(out, format=im.format or "PNG")
-        return out.getvalue()
 
 
 # Output schema of the frame-sampling stage: one row per sampled frame.

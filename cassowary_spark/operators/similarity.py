@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -82,39 +84,42 @@ def cosine_pairs_blocked(
     block size. Blocks must fit in a worker (bound bucket width
     upstream; split oversized blocks by salting).
     """
-    import numpy as np
-    import pandas as pd
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col].iloc[order]])
-        g = v @ v.T
-        norms = np.sqrt(np.diag(g))
-        zero = norms == 0.0
-        norms[zero] = np.inf
-        cos = g / np.outer(norms, norms)
-        if zero.any():
-            # same convention as cosine(): zero-norm vectors pin to
-            # -1.0 so they sink below ANY threshold, including <= 0 —
-            # the inf-norm division alone would leave them at 0.0 and
-            # emit pairs the expression path sinks
-            cos[zero, :] = -1.0
-            cos[:, zero] = -1.0
-        ia, ib = np.triu_indices(len(ids), k=1)
-        # strict id inequality: duplicate ids inside a block would
-        # otherwise emit id_a == id_b rows, violating the contract
-        keep = (cos[ia, ib] >= threshold) & (ids[ia] != ids[ib])
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cos_sim": cos[ia[keep], ib[keep]]}
-        )
-
     # id dtype follows the input schema — hardcoding bigint breaks
     # (or silently coerces) string/int32 id columns at Arrow transfer
     id_t = corpus.schema[id_col].dataType.simpleString()
     return corpus.select(block_col, id_col, vec_col).groupBy(block_col).applyInPandas(
-        block_pairs, f"id_a {id_t}, id_b {id_t}, cos_sim double"
+        partial(_block_pairs, id_col, vec_col, threshold),
+        f"id_a {id_t}, id_b {id_t}, cos_sim double",
+    )
+
+
+def _block_pairs(id_col: str, vec_col: str, threshold: float, pdf):
+    """cosine_pairs_blocked's kernel; module level, so it pickles by reference."""
+    import numpy as np
+    import pandas as pd
+
+    ids = pdf[id_col].to_numpy()
+    order = np.argsort(ids)
+    ids = ids[order]
+    v = np.array([np.asarray(x, dtype=np.float64) for x in pdf[vec_col].iloc[order]])
+    g = v @ v.T
+    norms = np.sqrt(np.diag(g))
+    zero = norms == 0.0
+    norms[zero] = np.inf
+    cos = g / np.outer(norms, norms)
+    if zero.any():
+        # same convention as cosine(): zero-norm vectors pin to
+        # -1.0 so they sink below ANY threshold, including <= 0 —
+        # the inf-norm division alone would leave them at 0.0 and
+        # emit pairs the expression path sinks
+        cos[zero, :] = -1.0
+        cos[:, zero] = -1.0
+    ia, ib = np.triu_indices(len(ids), k=1)
+    # strict id inequality: duplicate ids inside a block would
+    # otherwise emit id_a == id_b rows, violating the contract
+    keep = (cos[ia, ib] >= threshold) & (ids[ia] != ids[ib])
+    return pd.DataFrame(
+        {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cos_sim": cos[ia[keep], ib[keep]]}
     )
 
 

@@ -22,6 +22,14 @@ from cassowary_spark.registry import query
 from cassowary_spark.tables import load_table
 
 
+# The worker functions (_charge, wavg, tokenize) are plain module-level
+# functions, so they pickle by reference: a worker that unpickles one
+# imports the package, which gates its zip re-reads (session.py).
+def _charge(price: pd.Series, discount: pd.Series, tax: pd.Series) -> pd.Series:
+    # Vectorized over Arrow batches: numpy arithmetic, no Python loop.
+    return price * (1.0 - discount) * (1.0 + tax)
+
+
 @query(
     "q_udf_scalar",
     oracle="""
@@ -32,17 +40,12 @@ from cassowary_spark.tables import load_table
 )
 def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas UDF (U1): identical float semantics to the SQL."""
-
-    @pandas_udf("double")
-    def _charge(price: pd.Series, discount: pd.Series, tax: pd.Series) -> pd.Series:
-        # Vectorized over Arrow batches: numpy arithmetic, no Python loop.
-        return price * (1.0 - discount) * (1.0 + tax)
-
+    charge = pandas_udf("double")(_charge)
     li = load_table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        srnd(_charge("l_extendedprice", "l_discount", "l_tax"), 4).alias("charge"),
+        srnd(charge("l_extendedprice", "l_discount", "l_tax"), 4).alias("charge"),
     )
 
 
@@ -64,19 +67,19 @@ def q_udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level (salted partial, then final) scheme instead.
     """
     li = load_table(spark, sf_dir, "lineitem")
-
-    def wavg(pdf: pd.DataFrame) -> pd.DataFrame:
-        w = pdf["l_quantity"].sum()
-        return pd.DataFrame(
-            {
-                "l_returnflag": [pdf["l_returnflag"].iloc[0]],
-                "wavg_price": [math.floor((pdf["l_extendedprice"] * pdf["l_quantity"]).sum() / w * 10000.0 + 0.5) / 10000.0],
-                "n_rows": [len(pdf)],
-            }
-        )
-
     return li.groupBy("l_returnflag").applyInPandas(
         wavg, "l_returnflag string, wavg_price double, n_rows bigint"
+    )
+
+
+def wavg(pdf: pd.DataFrame) -> pd.DataFrame:
+    w = pdf["l_quantity"].sum()
+    return pd.DataFrame(
+        {
+            "l_returnflag": [pdf["l_returnflag"].iloc[0]],
+            "wavg_price": [math.floor((pdf["l_extendedprice"] * pdf["l_quantity"]).sum() / w * 10000.0 + 0.5) / 10000.0],
+            "n_rows": [len(pdf)],
+        }
     )
 
 
@@ -93,20 +96,20 @@ def q_udaf_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udtf_flatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table-function UDTF via mapInPandas (U3): 1 doc → N token rows."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("lang") == "de")
-
-    def tokenize(batches):
-        for pdf in batches:
-            toks = pdf["text"].str.split(" ")
-            n = toks.str.len()
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].repeat(n).values,
-                    "token": [t for row in toks for t in row],
-                    "lang": pdf["lang"].repeat(n).values,
-                }
-            )
-
     return d.mapInPandas(tokenize, "doc_id bigint, token string, lang string")
+
+
+def tokenize(batches):
+    for pdf in batches:
+        toks = pdf["text"].str.split(" ")
+        n = toks.str.len()
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"].repeat(n).values,
+                "token": [t for row in toks for t in row],
+                "lang": pdf["lang"].repeat(n).values,
+            }
+        )
 
 
 @query(

@@ -1088,8 +1088,8 @@ class SSTableDataSourceWriter(DataSourceWriter):
         comp = options.get("compression", "deflate")
         self.compression = None if comp == "none" else comp
         # layout="real": tasks emit generations in Cassandra's own jb
-        # component serialization (the export sink — loadable by a
-        # genuine 2.0-era node); default is the stand-in layout
+        # component serialization (the export sink; partitions stay in
+        # raw-key order, see SSTableWriter); default is the stand-in layout
         self.layout = options.get("layout", "standin")
         self.write_ts = int(options.get("write_ts", 1))
         self.overwrite = overwrite

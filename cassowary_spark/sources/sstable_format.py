@@ -27,10 +27,12 @@ component instead.
 
 ``CompressionInfo.db`` — present iff compressed: ``u16 len | algo
 name``, ``u32 chunk_len``, ``u64 uncompressed_total``, ``u32 n_chunks``,
-then ``u64`` file offset per chunk. Each chunk in Data.db is
-``deflate(chunk)`` or Cassandra's LZ4 chunk layout (4 LE bytes
-decompressed length + LZ4 block) followed by a ``u32`` adler32 of the
-compressed bytes (Cassandra 2.0's own per-chunk checksum). The real
+then ``u64`` file offset per chunk. Each chunk in Data.db is framed
+as its compressor's ``CHUNK_CODECS`` entry says — ``deflate(chunk)``,
+Cassandra's LZ4 layout (4 LE bytes decompressed length + one raw LZ4
+block) or, read-only, one raw Snappy block; pyarrow's bundled liblz4
+and libsnappy do the block coding — followed by a ``u32`` adler32 of
+the compressed bytes (Cassandra 2.0's own per-chunk checksum). The real
 ``CompressionMetadata`` serialization — with its parameter block
 between the compressor name and the chunk metadata — is accepted too
 (``_parse_compression_info`` validates both candidates).
@@ -85,7 +87,11 @@ import struct
 import zlib
 from bisect import bisect_left, bisect_right
 from dataclasses import dataclass, field
+from functools import partial
 from itertools import starmap
+from typing import Callable, NamedTuple
+
+import pyarrow as pa
 
 FORMAT_VERSION = "jb"
 LIVE_LDT = 0x7FFFFFFF  # local_deletion_time of a live row
@@ -512,6 +518,63 @@ class Murmur3BloomFilter:
             bits[idx >> 3] |= 1 << (idx & 7)
 
 
+# ---------------------------------------------------------- chunk codecs
+
+_LZ4 = pa.Codec("lz4_raw")
+_SNAPPY = pa.Codec("snappy")
+
+
+def _decode_exact(codec: pa.Codec, block: bytes, size: int) -> bytes:
+    # pyarrow drops the decoded length liblz4/libsnappy report and pads a
+    # short block with whatever its buffer held, so first show that the
+    # block does not fit in one byte less
+    if size:
+        try:
+            codec.decompress(block, decompressed_size=size - 1)
+        except (OSError, ValueError):
+            pass
+        else:
+            raise IOError(f"block decodes to fewer than {size} bytes")
+    return codec.decompress(block, decompressed_size=size, asbytes=True)
+
+
+def _deflate_unpack(chunk: bytes, size: int) -> bytes:
+    piece = zlib.decompress(chunk)
+    if len(piece) != size:
+        raise IOError(f"deflate chunk holds {len(piece)} bytes, expected {size}")
+    return piece
+
+
+def _lz4_pack(piece: bytes) -> bytes:
+    return struct.pack("<I", len(piece)) + _LZ4.compress(piece, asbytes=True)
+
+
+def _lz4_unpack(chunk: bytes, size: int) -> bytes:
+    (n,) = struct.unpack_from("<I", chunk)
+    if n != size:
+        raise IOError(f"LZ4 length prefix {n}, expected {size}")
+    return _decode_exact(_LZ4, chunk[4:], size)
+
+
+class ChunkCodec(NamedTuple):
+    pack: Callable[[bytes], bytes] | None  # None: read-only
+    # (chunk, decoded size) -> exactly that many bytes, or raises
+    unpack: Callable[[bytes, int], bytes]
+
+
+# Data.db chunk framing per Cassandra compressor class, the name
+# CompressionInfo.db records. LZ4Compressor: the decoded length as 4
+# LE bytes, then one raw LZ4 block. SnappyCompressor (Cassandra 1.x's
+# default): one raw Snappy block. DeflateCompressor: one zlib stream.
+CHUNK_CODECS = {
+    "LZ4Compressor": ChunkCodec(_lz4_pack, _lz4_unpack),
+    "SnappyCompressor": ChunkCodec(None, partial(_decode_exact, _SNAPPY)),
+    "DeflateCompressor": ChunkCodec(partial(zlib.compress, level=6), _deflate_unpack),
+}
+# the writer's `compression` values
+_WRITE_COMPRESSORS = {"deflate": "DeflateCompressor", "lz4": "LZ4Compressor"}
+
+
 # ---------------------------------------------------------------- writer
 
 
@@ -546,7 +609,7 @@ class SSTableWriter:
         column_index_len: int = 4096,
         layout: str = "standin",
     ) -> None:
-        if compression not in (None, "deflate", "lz4"):
+        if compression is not None and compression not in _WRITE_COMPRESSORS:
             raise ValueError(f"unsupported compression {compression!r}")
         if layout not in ("standin", "real"):
             raise ValueError(f"unsupported layout {layout!r}")
@@ -554,8 +617,10 @@ class SSTableWriter:
         # own jb formats (binary Statistics.db, murmur3 OpenBitSet
         # Filter.db, promoted-size Index.db entries, param-block
         # CompressionInfo.db, ColumnSerializer cell masks) — the
-        # export direction of the real-snapshot READ support, so a
-        # genuine Cassandra 2.0 node can load what this engine writes.
+        # export direction of the real-snapshot READ support. Partitions
+        # stay in raw-key order although Statistics.db names the
+        # Murmur3Partitioner, which orders them by token, so a genuine
+        # node would not find its keys in these files.
         # No ColumnIndex.db is emitted (not a real component).
         self.layout = layout
         self.directory = directory
@@ -709,23 +774,8 @@ class SSTableWriter:
         raw = self._data.getvalue()
         components = list(self.COMPONENTS)
         if self.compression:
-            if self.compression == "lz4":
-                from cassowary_spark.sources import lz4_block
-
-                def pack_chunk(piece: bytes) -> bytes:
-                    # Cassandra's LZ4Compressor chunk layout: the
-                    # decompressed length as 4 LE bytes, then the block
-                    return (
-                        struct.pack("<I", len(piece)) + lz4_block.compress(piece)
-                    )
-
-                algo = b"LZ4Compressor"
-            else:
-
-                def pack_chunk(piece: bytes) -> bytes:
-                    return zlib.compress(piece, 6)
-
-                algo = b"DeflateCompressor"
+            algo = _WRITE_COMPRESSORS[self.compression]
+            pack_chunk = CHUNK_CODECS[algo].pack
             offsets: list[int] = []
             with open(self._component("Data.db"), "wb") as f:
                 for off in range(0, len(raw), self.chunk_len) or (0,):
@@ -734,7 +784,7 @@ class SSTableWriter:
                     f.write(chunk)
                     f.write(struct.pack(">I", zlib.adler32(chunk) & 0xFFFFFFFF))
             with open(self._component("CompressionInfo.db"), "wb") as f:
-                f.write(struct.pack(">H", len(algo)) + algo)
+                f.write(struct.pack(">H", len(algo)) + algo.encode())
                 if self.layout == "real":
                     f.write(struct.pack(">I", 0))  # empty parameter block
                 f.write(struct.pack(">IQI", self.chunk_len, len(raw), len(offsets)))
@@ -1028,7 +1078,7 @@ def _parse_compression_info(raw: bytes) -> tuple[str, int, int, list[int]]:
 
 
 class _ChunkedData:
-    """Random access over (possibly deflate-chunked) Data.db bytes.
+    """Random access over (possibly chunk-compressed) Data.db bytes.
 
     Decompresses only the chunks covering the requested range — the
     same chunk-granular access CompressionInfo.db gives Cassandra, so
@@ -1058,6 +1108,12 @@ class _ChunkedData:
             if self.algo is None:
                 f.seek(start)
                 return f.read(end - start)
+            codec = CHUNK_CODECS.get(self.algo.rsplit(".", 1)[-1])
+            if codec is None:
+                raise IOError(
+                    f"unsupported compressor {self.algo!r} in {self.data_path} "
+                    f"(supported: {', '.join(CHUNK_CODECS)})"
+                )
             first = start // self.chunk_len
             last = (end - 1) // self.chunk_len
             out = bytearray()
@@ -1071,23 +1127,11 @@ class _ChunkedData:
                 payload, crc = blob[:-4], struct.unpack(">I", blob[-4:])[0]
                 if zlib.adler32(payload) & 0xFFFFFFFF != crc:
                     raise IOError(f"corrupt chunk {ci} in {self.data_path}")
-                if self.algo.endswith("LZ4Compressor"):
-                    from cassowary_spark.sources import lz4_block
-
-                    (dlen,) = struct.unpack_from("<I", payload)
-                    out += lz4_block.decompress(payload[4:], dlen)
-                elif self.algo.endswith("SnappyCompressor"):
-                    from cassowary_spark.sources import snappy_block
-
-                    out += snappy_block.decompress(payload)
-                elif self.algo.endswith("DeflateCompressor"):
-                    out += zlib.decompress(payload)
-                else:
-                    raise IOError(
-                        f"unsupported compressor {self.algo!r} in "
-                        f"{self.data_path} (deflate, lz4 and snappy are "
-                        "supported)"
-                    )
+                size = min(self.chunk_len, self.total - ci * self.chunk_len)
+                try:
+                    out += codec.unpack(payload, size)
+                except (OSError, ValueError, struct.error, zlib.error) as e:
+                    raise IOError(f"corrupt chunk {ci} in {self.data_path}: {e}") from e
             base = first * self.chunk_len
             return bytes(out[start - base : end - base])
 

@@ -9,11 +9,14 @@ DECIMAL overflows on bigger sums, float summation-order ulps flipping
 an srnd boundary (q_kl_divergence, caught by this sweep at sf0.1 in
 round 7), hash-distribution edge cases that need more rows to occur.
 
-Usage (takes ~10 min at sf0.1 on local[16]):
-    python scripts/parity_sweep.py [/root/testdata/sf0.1]
+Usage (the whole registry takes ~10 min at sf0.1 on local[16]):
+    python scripts/parity_sweep.py [sf_dir [q_a,q_b,...]]
 
-Prints FAIL lines as they happen and a final TOTAL/FAILS summary;
-exits non-zero if any key diverges.
+sf_dir defaults to /root/testdata/sf0.1. The optional comma-separated
+key list limits the sweep to those keys (a named key that is not
+registered or has no oracle prints a SKIP line). Prints FAIL lines as
+they happen and a final TOTAL/FAILS summary; exits non-zero if any key
+diverges.
 """
 
 from __future__ import annotations
@@ -39,6 +42,14 @@ def main() -> None:
     # missing from the sweep's views
     con = duck_connection(sf_dir)
     keys = [k for k in q if k in o]
+    if len(sys.argv) > 2:
+        named = sys.argv[2].split(",")
+        for k in named:
+            if k not in q:
+                print(f"SKIP {k}: not registered")
+            elif k not in o:
+                print(f"SKIP {k}: rows-only (no oracle)")
+        keys = [k for k in named if k in q and k in o]
     fails: list[str] = []
     t0 = time.time()
     for i, k in enumerate(keys):

@@ -9,7 +9,9 @@ the Spark integration including pushed-filter plans.
 from __future__ import annotations
 
 import decimal
+import struct
 import uuid
+import zlib
 from datetime import datetime
 
 import pyarrow as pa
@@ -28,6 +30,7 @@ from cassowary_spark.sources.sstable_datasource import (
     reconcile,
 )
 from cassowary_spark.sources.sstable_format import (
+    CHUNK_CODECS,
     FLAG_EXPIRING,
     FLAG_TOMBSTONE,
     BloomFilter,
@@ -152,13 +155,13 @@ def test_compression_is_chunked(tmp_path):
     assert len(list(r.scan(enc(250), enc(260)))) == 10
 
 
-def test_lz4_block_codec_roundtrip():
-    """Pure-Python LZ4 block codec (Cassandra's default compressor)."""
+def test_lz4_chunk_codec_roundtrip():
+    """Cassandra's LZ4Compressor chunk framing (its default compressor):
+    a 4-byte LE length, then one raw LZ4 block."""
     import os as _os
     import random
 
-    from cassowary_spark.sources import lz4_block
-
+    lz4 = CHUNK_CODECS["LZ4Compressor"]
     random.seed(7)
     cases = [
         b"",
@@ -170,19 +173,41 @@ def test_lz4_block_codec_roundtrip():
         (b"the quick brown fox " * 700)[:13_000],
     ]
     for src in cases:
-        blk = lz4_block.compress(src)
-        assert lz4_block.decompress(blk, len(src)) == src
+        chunk = lz4.pack(src)
+        assert struct.unpack_from("<I", chunk) == (len(src),)
+        assert lz4.unpack(chunk, len(src)) == src
     # compressible input actually compresses
-    assert len(lz4_block.compress(b"y" * 10_000)) < 200
+    assert len(lz4.pack(b"y" * 10_000)) < 200
 
 
-def test_lz4_block_decoder_vector():
-    """Hand-built block per the public spec: literals 'abc' + a
-    9-byte overlapping match at offset 3 -> 'abc' * 4."""
-    from cassowary_spark.sources import lz4_block
+def test_lz4_chunk_decoder_vectors():
+    """Hand-built block per the public spec: literals 'abc', a 9-byte
+    overlapping match at offset 3, then the 5 literals the spec
+    requires at the end of a block -> 'abc' * 5 + 'ab'."""
+    lz4 = CHUNK_CODECS["LZ4Compressor"]
 
-    blk = bytes([0x35]) + b"abc" + bytes([0x03, 0x00]) + bytes([0x00])
-    assert lz4_block.decompress(blk, 12) == b"abcabcabcabc"
+    blk = bytes([0x35]) + b"abc" + bytes([0x03, 0x00]) + bytes([0x50]) + b"abcab"
+    assert lz4.unpack(struct.pack("<I", 17) + blk, 17) == b"abcabcabcabcabcab"
+    # ending in a match breaks the spec's end rule; liblz4 rejects it
+    bad = bytes([0x35]) + b"abc" + bytes([0x03, 0x00]) + bytes([0x00])
+    with pytest.raises(IOError):
+        lz4.unpack(struct.pack("<I", 12) + bad, 12)
+    # a block from another encoder (a greedy hash-table matcher):
+    # extended literal length, overlapping matches, a long run
+    src = (
+        b"the quick brown fox " * 4 + b"a" * 81 + b" jumps over the lazy dog."
+    )
+    greedy = (
+        b"\xff\x05the quick brown fox \x14\x00)\x1fa\x01\x00=\xb1 jumps "
+        b"over\x99\x00\x90lazy dog."
+    )
+    assert lz4.unpack(struct.pack("<I", len(src)) + greedy, len(src)) == src
+    # the length prefix must match the chunk's expected size, and a
+    # block must decode to all of it
+    with pytest.raises(IOError):
+        lz4.unpack(struct.pack("<I", len(src)) + greedy, len(src) + 1)
+    with pytest.raises(IOError):
+        lz4.unpack(struct.pack("<I", len(src) + 1) + greedy, len(src) + 1)
 
 
 def test_lz4_chunked_sstable_reads(tmp_path):
@@ -201,6 +226,27 @@ def test_lz4_chunked_sstable_reads(tmp_path):
     assert len(list(r.scan())) == 500
     enc = get_validator("LongType").encode
     assert len(list(r.scan(enc(250), enc(260)))) == 10
+
+
+def test_chunk_decode_error_names_file_and_chunk(tmp_path):
+    """A chunk whose checksum holds but whose LZ4 length prefix
+    disagrees with CompressionInfo.db raises IOError naming both."""
+    w = SSTableWriter(
+        str(tmp_path), "ks", "cf", 1, SCHEMA, compression="lz4", chunk_len=4096
+    )
+    for i in range(500):
+        w.append(_part(i, "x" * 100, float(i)))
+    w.close()
+    r = discover_sstables(str(tmp_path))[0]
+    path = r._data.data_path
+    raw = bytearray(open(path, "rb").read())
+    start, end = r._data.offsets[1], r._data.offsets[2]
+    raw[start : start + 4] = struct.pack("<I", 4095)
+    raw[end - 4 : end] = struct.pack(">I", zlib.adler32(raw[start : end - 4]))
+    open(path, "wb").write(raw)
+    r = discover_sstables(str(tmp_path))[0]
+    with pytest.raises(IOError, match=rf"chunk 1 in {path}"):
+        list(r.scan())
 
 
 # ------------------------------------------------------------- reconcile

@@ -17,12 +17,13 @@ from __future__ import annotations
 import struct
 import zlib
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from cassowary_spark.sources import lz4_block
 from cassowary_spark.sources.sstable_datasource import read_sstable
 from cassowary_spark.sources.sstable_format import (
+    CHUNK_CODECS,
     Murmur3BloomFilter,
     counter_context_total,
     discover_sstables,
@@ -99,7 +100,9 @@ def _write_real_snapshot(
         offsets.append(len(blob))
         piece = raw[off : off + chunk_len]
         if compressor == "LZ4Compressor":
-            chunk = struct.pack("<I", len(piece)) + lz4_block.compress(piece)
+            chunk = struct.pack("<I", len(piece)) + pa.Codec("lz4_raw").compress(
+                piece, asbytes=True
+            )
         else:
             chunk = zlib.compress(piece, 6)
         blob += chunk
@@ -266,39 +269,41 @@ def test_murmur3_bloom_roundtrip_and_no_false_negatives():
     assert fp / 2000 < 0.1
 
 
-def test_snappy_block_codec_and_decoder_vectors():
+def test_snappy_chunk_decoder_vectors():
     """Raw Snappy block decode (Cassandra 1.x default compressor)."""
     import os as _os
     import random
 
-    from cassowary_spark.sources import snappy_block
+    snappy = CHUNK_CODECS["SnappyCompressor"]
+    assert snappy.pack is None  # decode only
 
     # hand-built per the public spec: varint len 12, literal 'abc',
     # then a kind-1 copy: len 9, offset 3 -> 'abc' * 4
     blk = bytes([12]) + bytes([(3 - 1) << 2]) + b"abc" + bytes(
         [(1) | ((9 - 4) << 2) | ((3 >> 8) << 5), 3 & 0xFF]
     )
-    assert snappy_block.decompress(blk) == b"abcabcabcabc"
+    assert snappy.unpack(blk, 12) == b"abcabcabcabc"
     # kind-2 copy: literal 'xy', copy len 6 offset 2
     blk2 = bytes([8]) + bytes([(2 - 1) << 2]) + b"xy" + bytes(
         [2 | ((6 - 1) << 2)]
     ) + (2).to_bytes(2, "little")
-    assert snappy_block.decompress(blk2) == b"xyxyxyxy"
+    assert snappy.unpack(blk2, 8) == b"xyxyxyxy"
+    # the varint length must match the chunk's expected size
+    for size in (7, 9):
+        with pytest.raises((IOError, ValueError)):
+            snappy.unpack(blk2, size)
 
     random.seed(11)
     for src in [b"", b"z", _os.urandom(3000),
                 bytes(random.choice(b"ab") for _ in range(70_000))]:
-        assert snappy_block.decompress(snappy_block.compress(src)) == src
+        blk = pa.Codec("snappy").compress(src, asbytes=True)
+        assert snappy.unpack(blk, len(src)) == src
 
 
 def test_real_jb_snappy_snapshot_reads(spark, tmp_path):
-    """A SnappyCompressor real-layout snapshot reads end-to-end (the
-    generator emits literal-only blocks — valid Snappy any decoder,
-    including ours, must accept)."""
+    """A SnappyCompressor real-layout snapshot reads end-to-end."""
     import os
     import zlib as _z
-
-    from cassowary_spark.sources import snappy_block
 
     d = str(tmp_path / "realsnappy")
     rows = _std_rows(40)
@@ -319,7 +324,7 @@ def test_real_jb_snappy_snapshot_reads(spark, tmp_path):
     offsets, blob = [], bytearray()
     for off in range(0, len(raw), chunk_len):
         offsets.append(len(blob))
-        chunk = snappy_block.compress(raw[off : off + chunk_len])
+        chunk = pa.Codec("snappy").compress(raw[off : off + chunk_len], asbytes=True)
         blob += chunk + struct.pack(">I", _z.adler32(chunk) & 0xFFFFFFFF)
     open(prefix + "Data.db", "wb").write(blob)
     with open(prefix + "CompressionInfo.db", "wb") as f:
@@ -407,13 +412,13 @@ def test_murmur3_bloom_high_byte_keys(spark, tmp_path):
 
 
 def test_codec_property_roundtrips():
-    """Hypothesis-driven round-trips for the LZ4 and Snappy codecs:
-    arbitrary byte strings, including low-entropy/repetitive shapes
-    the match finders exercise hardest."""
+    """Hypothesis-driven round-trips through the LZ4 and Snappy chunk
+    framings: arbitrary byte strings, including low-entropy/repetitive
+    shapes the match finders exercise hardest."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from cassowary_spark.sources import lz4_block, snappy_block
+    lz4, snappy = CHUNK_CODECS["LZ4Compressor"], CHUNK_CODECS["SnappyCompressor"]
 
     @given(
         src=st.one_of(
@@ -427,8 +432,8 @@ def test_codec_property_roundtrips():
     )
     @settings(max_examples=300, deadline=None)
     def check(src):
-        assert lz4_block.decompress(lz4_block.compress(src), len(src)) == src
-        assert snappy_block.decompress(snappy_block.compress(src)) == src
+        assert lz4.unpack(lz4.pack(src), len(src)) == src
+        assert snappy.unpack(pa.Codec("snappy").compress(src, asbytes=True), len(src)) == src
 
     check()
 
@@ -915,3 +920,61 @@ def test_golden_handpacked_clustered_jb_snapshot(spark, tmp_path):
         (1, 10),
         (2, 10),
     }
+
+
+# Cassandra 2.0's default Murmur3Partitioner stores partitions in token
+# order (h1 of the key's murmur3-128), not raw-key order. The reader
+# bisects Index.db and merges generations in raw-key order, so a
+# genuine token-ordered snapshot misreads. Each test below turns into a
+# failure once that is fixed, and must then lose its mark.
+_TOKEN_ORDER = pytest.mark.xfail(
+    strict=True,
+    reason="reader bisects Index.db and merges generations in raw-key "
+    "order; Murmur3Partitioner snapshots are in token order",
+)
+
+
+def _token_ordered(rows: list[tuple[bytes, bytes]]) -> list[tuple[bytes, bytes]]:
+    from cassowary_spark.sources.murmur3 import hash3_x64_128
+
+    return sorted(rows, key=lambda row: hash3_x64_128(row[0])[0])
+
+
+def _read_in_process(d: str, filters=()) -> list[tuple]:
+    """The DataSource reader's rows, every split in turn, without Spark."""
+    from cassowary_spark.sources.sstable_datasource import SSTableDataSourceReader
+
+    reader = SSTableDataSourceReader({"path": d, "schema": SCHEMA_JSON}, None)
+    assert list(reader.pushFilters(list(filters))) == []
+    rows: list[tuple] = []
+    for part in reader.partitions():
+        for batch in reader.read(part):
+            rows.extend(zip(*(c.to_pylist() for c in batch.columns)))
+    return rows
+
+
+@_TOKEN_ORDER
+def test_token_ordered_snapshot_point_lookups(tmp_path):
+    from pyspark.sql.datasource import EqualTo
+
+    d = str(tmp_path / "token")
+    _write_real_snapshot(d, _token_ordered(_std_rows(200)), "DeflateCompressor")
+    found = [i for i in range(200) if _read_in_process(d, [EqualTo(("id",), i)])]
+    assert len(found) == 200
+
+
+@_TOKEN_ORDER
+def test_token_ordered_generations_merge(tmp_path):
+    enc_k = get_validator("LongType").encode
+    enc_s = get_validator("UTF8Type").encode
+    d = str(tmp_path / "tokenmerge")
+    _write_real_snapshot(d, _token_ordered(_std_rows(200)), "DeflateCompressor")
+    updated = [
+        (enc_k(i), _real_column(b"name", enc_s(f"new{i}"), 20))
+        for i in range(0, 200, 2)
+    ]
+    _write_real_snapshot(d, _token_ordered(updated), "DeflateCompressor", generation=2)
+    got = sorted(_read_in_process(d))
+    assert got == [
+        (i, f"new{i}" if i % 2 == 0 else f"row{i}", i * 1.5) for i in range(200)
+    ]

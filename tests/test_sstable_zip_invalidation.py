@@ -118,3 +118,40 @@ def test_one_wrapper_per_process(zip_on_path, tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.strip() == "True"
+
+
+def _worker_functions():
+    from functools import partial
+
+    from cassowary_spark.operators import similarity
+    from cassowary_spark.queries import udf
+
+    return {
+        "_charge": udf._charge,
+        "wavg": udf.wavg,
+        "tokenize": udf.tokenize,
+        "block_pairs": partial(similarity._block_pairs, "id", "v", 0.5),
+    }
+
+
+@pytest.mark.parametrize("name", ["_charge", "wavg", "tokenize", "block_pairs"])
+def test_worker_function_unpickle_gates_the_worker(name, tmp_path):
+    """A worker that unpickles a UDF the package ships imports the
+    package, so its zip re-reads are gated: the function pickles by
+    reference, not by value."""
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "fn.pkl"
+    blob.write_bytes(cloudpickle.dumps(_worker_functions()[name]))
+    probe = (
+        f"import sys; sys.path.insert(0, {REPO!r}); import pickle, zipimport; "
+        f"pickle.loads(open({str(blob)!r}, 'rb').read()); "
+        "print(getattr(zipimport.zipimporter, '_stat_gated', False))"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.strip() == "True"
