@@ -166,17 +166,17 @@ def signatures_from_hashes(
     min over shingles of a seeded mix. One groupBy; the agg is
     num_hashes parallel min()s, all map-side combinable. The shingle
     string was hashed once upstream; each of the num_hashes functions
-    is a cheap (seed, int64) mix instead of a full string hash."""
-    mins = sh.groupBy(id_col).agg(
-        *[
-            F.min(F.xxhash64(F.lit(j), F.col("sh_h"))).alias(f"__m{j}")
-            for j in range(num_hashes)
-        ]
-    )
-    return mins.select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{j}") for j in range(num_hashes)]).alias("sig"),
-    )
+    is a cheap (seed, int64) mix instead of a full string hash.
+
+    The aggregate is one SQL expression, so building it is one JVM
+    call rather than a few per Column node (wide per-index lists like
+    this one and ``band_signatures``' dominate the plan-building time
+    of the LSH queries). The seed ``{j}`` must stay an INT literal:
+    xxhash64 hashes 4 bytes for an int and 8 for a long, so a ``{j}L``
+    seed would change every signature.
+    """
+    mins = ", ".join(f"min(xxhash64({j}, sh_h))" for j in range(num_hashes))
+    return sh.groupBy(id_col).agg(F.expr(f"array({mins}) AS sig"))
 
 
 def minhash_signatures(
@@ -190,6 +190,35 @@ def minhash_signatures(
     space — composition of the two shared stages."""
     return signatures_from_hashes(
         hashed_shingles(df, id_col, text_col, shingle_k), id_col, num_hashes
+    )
+
+
+def band_signatures(
+    sigs: DataFrame, id_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id, band, band_sig) — one row per band of each signature, the
+    band_sig an xxhash64 of the band's num_hashes // bands minhashes
+    seeded by the band index.
+
+    The whole band array is one SQL expression (see
+    ``signatures_from_hashes``); the band seed is an INT literal.
+    """
+    if bands <= 0 or num_hashes % bands != 0:
+        # indivisible: trailing minhashes would silently drop out of
+        # every band (wrong collision math); bands > num_hashes would
+        # make every band signature a CONSTANT, flooding one bucket
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
+    rows_per_band = num_hashes // bands
+    band_sigs = ", ".join(
+        f"xxhash64({b}, "
+        + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ")"
+        for b in range(bands)
+    )
+    return sigs.selectExpr(
+        id_col, f"posexplode(array({band_sigs})) AS (band, band_sig)"
     )
 
 
@@ -215,25 +244,7 @@ def band_candidates(
     more selective bands, and docs identical enough to flood EVERY
     band belong to exact dedup by content hash).
     """
-    if bands <= 0 or num_hashes % bands != 0:
-        # indivisible: trailing minhashes would silently drop out of
-        # every band (wrong collision math); bands > num_hashes would
-        # make every band signature a CONSTANT, flooding one bucket
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes})"
-        )
-    rows_per_band = num_hashes // bands
-    banded = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(F.lit(b), *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)])
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "band_sig"),
-    )
+    banded = band_signatures(sigs, id_col, num_hashes, bands)
     if bucket_cap is not None:
         # hot buckets only (≤ n/cap rows by construction)
         banded = drop_hot_keys(banded, ["band", "band_sig"], bucket_cap)
@@ -517,18 +528,19 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
         F.col(id_col),
         F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("__tok"),
     ).withColumn("__h", F.xxhash64("__tok"))
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"__v{i}")
+    # The vote sums and the bit packing are one aggregate SQL
+    # expression: one JVM call to build instead of several per Column
+    # node. Bit i of the fingerprint is set when the sum of ±1 votes of
+    # bit i of the token hashes is positive.
+    fp = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN sum(CASE WHEN (shiftright(__h, {i}) & 1) = 1 THEN 1 ELSE -1 END) > 0"
+            f" THEN shiftleft(CAST(1 AS BIGINT), {i}) ELSE 0 END"
             for i in range(bits)
         ]
     )
-    fp = F.lit(0).cast("long")
-    for i in range(bits):
-        fp = fp + F.when(F.col(f"__v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(0)
-    return votes.select(F.col(id_col), fp.alias("simhash"))
+    return toks.groupBy(id_col).agg(F.expr(f"{fp} AS simhash"))
 
 
 def hamming64(a: F.Column, b: F.Column) -> F.Column:

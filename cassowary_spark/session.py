@@ -4,7 +4,9 @@ One place to encode the engine's execution posture (SURVEY.md §4):
 AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), Arrow on (vectorized Python exchange), UTC session time
 zone (oracle comparability), shuffle partitions sized for the local
-rig but overridable for cluster deploys via ``SPARK_GRAFT_CPUS``.
+rig but overridable for cluster deploys via ``SPARK_GRAFT_CPUS``, and
+no per-Column call-site capture (cheaper plan building; errors lose
+their "DataFrame query context" call-site lines, see ``get_spark``).
 
 Workers get this package as one zip per SparkContext
 (``ship_package``), so every pickled function of it travels by
@@ -52,6 +54,15 @@ def get_spark(app_name: str = "cassowary_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # No per-Column call-site capture: with it on, every PySpark
+        # Column function walks the Python stack and makes about five
+        # extra py4j calls, which tripled the JVM round trips of
+        # building a plan (952 vs 262 for q_tpch_q1). The trade: an
+        # error raised in a session built here carries no "DataFrame
+        # query context" call-site lines. A SparkSession built
+        # elsewhere keeps them. PySpark caches the setting
+        # per process, at its first Column call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Cap plan-string rendering (SQL-listener events re-render the
         # physical plan per execution): an iterative job whose rounds
         # each embed a wide upstream tree can otherwise OOM the driver

@@ -1055,6 +1055,8 @@ _SPARK_TO_VALIDATOR = {
     "float": "FloatType",
     "double": "DoubleType",
     "timestamp": "TimestampType",
+    # a naive wall-clock datetime, which _enc_timestamp reads as UTC
+    "timestamp_ntz": "TimestampType",
 }
 
 

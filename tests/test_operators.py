@@ -12,9 +12,18 @@ from pyspark.sql import functions as F
 
 from cassowary_spark import registry
 from cassowary_spark.operators.asof import asof_join
-from cassowary_spark.operators.dedup import dedup_exact, hamming64, minhash_lsh_pairs, simhash
+from cassowary_spark.operators.dedup import (
+    band_signatures,
+    dedup_exact,
+    hamming64,
+    hashed_shingles,
+    minhash_lsh_pairs,
+    signatures_from_hashes,
+    simhash,
+)
 from cassowary_spark.operators.similarity import ann_lsh_topk, cosine_topk
 from cassowary_spark.operators.versions import suppress_tombstones
+from cassowary_spark.queries.llm import _docs_with_twins
 from cassowary_spark.tables import load_table
 
 registry.load_all()
@@ -60,12 +69,9 @@ def test_minhash_lsh_finds_all_twins(spark, sf_dir):
     assert len(missing) <= len(expected) * 0.02, f"missed {len(missing)} twin pairs"
 
 
-def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
-    """A planted mega-bucket (many identical docs → every band
-    signature identical) must not go quadratic: with bucket_cap below
-    the clone count the clone pairs are excluded from the candidate
-    join entirely, while a normal near-dup pair elsewhere (bucket
-    width 2 ≤ cap) still surfaces."""
+def _clone_corpus(spark):
+    """300 identical boilerplate docs (a planted mega-bucket: every band
+    signature identical) plus one normal near-dup pair."""
     clones = spark.range(300).select(
         F.col("id").alias("doc_id"),
         F.lit("the exact same boilerplate text repeated verbatim everywhere").alias("text"),
@@ -74,7 +80,16 @@ def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
     pair = spark.createDataFrame(
         [(100_000, base), (100_001, base + " tail")], ["doc_id", "text"]
     )
-    corpus = clones.unionByName(pair)
+    return clones.unionByName(pair)
+
+
+def test_lsh_bucket_cap_bounds_degenerate_buckets(spark):
+    """A planted mega-bucket (many identical docs → every band
+    signature identical) must not go quadratic: with bucket_cap below
+    the clone count the clone pairs are excluded from the candidate
+    join entirely, while a normal near-dup pair elsewhere (bucket
+    width 2 ≤ cap) still surfaces."""
+    corpus = _clone_corpus(spark)
     capped = minhash_lsh_pairs(corpus, "doc_id", "text", threshold=0.0, bucket_cap=100)
     got = {(r.id_a, r.id_b) for r in capped.collect()}
     assert (100_000, 100_001) in got, "normal near-dup pair must survive the cap"
@@ -127,6 +142,126 @@ def test_simhash_deterministic_and_twin_close(spark, sf_dir):
     # identical input -> identical fingerprint
     again = simhash(d, "doc_id", "text")
     assert fp.join(again, "doc_id").filter(fp.simhash != again.simhash).count() == 0
+
+
+# Column-API spellings of the SQL-text expressions in operators/dedup.py:
+# the reference their outputs must equal exactly. Each builds one Column
+# per minhash, band element or vote, which is what made them slow to
+# build; the seeds are F.lit INT literals.
+def _ref_signatures(sh, id_col, num_hashes):
+    mins = sh.groupBy(id_col).agg(
+        *[
+            F.min(F.xxhash64(F.lit(j), F.col("sh_h"))).alias(f"__m{j}")
+            for j in range(num_hashes)
+        ]
+    )
+    return mins.select(
+        F.col(id_col),
+        F.array(*[F.col(f"__m{j}") for j in range(num_hashes)]).alias("sig"),
+    )
+
+
+def _ref_band_signatures(sigs, id_col, num_hashes, bands):
+    rows_per_band = num_hashes // bands
+    return sigs.select(
+        F.col(id_col),
+        F.posexplode(
+            F.array(
+                *[
+                    F.xxhash64(
+                        F.lit(b),
+                        *[F.col("sig")[b * rows_per_band + r] for r in range(rows_per_band)],
+                    )
+                    for b in range(bands)
+                ]
+            )
+        ).alias("band", "band_sig"),
+    )
+
+
+def _ref_simhash(df, id_col, text_col, bits=64):
+    toks = df.select(
+        F.col(id_col),
+        F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("__tok"),
+    ).withColumn("__h", F.xxhash64("__tok"))
+    votes = toks.groupBy(id_col).agg(
+        *[
+            F.sum(
+                F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+            ).alias(f"__v{i}")
+            for i in range(bits)
+        ]
+    )
+    fp = F.lit(0).cast("long")
+    for i in range(bits):
+        fp = fp + F.when(F.col(f"__v{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(0)
+    return votes.select(F.col(id_col), fp.alias("simhash"))
+
+
+def _sorted_rows(df):
+    return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect())
+
+
+@pytest.mark.parametrize("corpus_name", ["twins", "clones"])
+def test_sql_text_expressions_match_column_api(spark, sf_dir, corpus_name):
+    """MinHash signatures, band rows and SimHash fingerprints built from
+    SQL text equal the Column-API reference exactly, on the twin corpus
+    and on the planted clone corpus."""
+    if corpus_name == "twins":
+        corpus = _docs_with_twins(spark, sf_dir)
+    else:
+        corpus = _clone_corpus(spark)
+    sh = hashed_shingles(corpus, "doc_id", "text", 3)
+    sigs = signatures_from_hashes(sh, "doc_id", 64)
+    ref_sigs = _ref_signatures(sh, "doc_id", 64)
+    assert _sorted_rows(sigs) == _sorted_rows(ref_sigs)
+    for bands in (16, 32):
+        assert _sorted_rows(band_signatures(sigs, "doc_id", 64, bands)) == _sorted_rows(
+            _ref_band_signatures(ref_sigs, "doc_id", 64, bands)
+        )
+    assert _sorted_rows(simhash(corpus, "doc_id", "text")) == _sorted_rows(
+        _ref_simhash(corpus, "doc_id", "text")
+    )
+
+
+def test_dedup_near_build_round_trips(spark, sf_dir, monkeypatch):
+    """Building q_dedup_near's plan (no job runs) costs at most 1 000
+    py4j round trips. One JVM call per SQL-text expression keeps it
+    there; one or more per Column node made about 6 000 (2 500 with
+    call-site capture off).
+
+    Only the building thread's commands count: py4j sends the detach
+    command of every freed JVM object proxy later, from its finalizer
+    thread, so those arrive whenever that thread drains its queue.
+    """
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from cassowary_spark import caches
+
+    build = registry.QUERIES["q_dedup_near"]
+    build(spark, sf_dir)  # warm-up: package shipping, table memos
+    building_thread = threading.get_ident()
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal calls
+        if threading.get_ident() == building_thread:
+            calls += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    gc.disable()
+    try:
+        build(spark, sf_dir)
+    finally:
+        gc.enable()
+        monkeypatch.undo()
+        caches.release()
+    assert calls <= 1000, f"q_dedup_near build made {calls} py4j round trips"
 
 
 def test_ann_lsh_recall(spark, sf_dir):

@@ -451,6 +451,27 @@ def test_spark_write_nulls(spark, tmp_path):
     assert got == [(1, "a", 1.0), (2, None, None), (3, "c", 3.0)]
 
 
+def test_spark_write_timestamp_ntz_roundtrip(spark, sf_dir, tmp_path):
+    """A frame read straight from the fixture parquet writes with no
+    cast: o_orderdate loads as TIMESTAMP_NTZ, is stored as a
+    TimestampType cell, and reads back as the parquet's wall-clock
+    values."""
+    import pyarrow.parquet as pq
+
+    from cassowary_spark.sources.sstable_datasource import write_sstable
+    from cassowary_spark.tables import load_table, table_path
+    from perfbench.workloads import read_in_process
+
+    orders = load_table(spark, sf_dir, "orders")
+    assert dict(orders.dtypes)["o_orderdate"] == "timestamp_ntz"
+    d = str(tmp_path / "snap")
+    write_sstable(orders, d, key="o_orderkey")
+    names, rows = read_in_process(d)
+    want = pq.read_table(table_path(sf_dir, "orders"))
+    assert names == want.column_names
+    assert sorted(rows) == sorted(zip(*(c.to_pylist() for c in want.columns)))
+
+
 def test_sink_and_fixture_writer_agree_byte_for_byte(tmp_path):
     """The DataSource sink and convert.write_snapshot write a
     generation the same way: the same rows, with a repeated key and
