@@ -21,6 +21,8 @@ land in any replica); results are identical for every assignment.
 
 from __future__ import annotations
 
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -59,28 +61,39 @@ def salted_join(
 
 
 def spread_narrow_input(df: DataFrame, key_col: str) -> DataFrame:
-    """Repartition ``df`` by ``key_col`` iff its physical input occupies
-    meaningfully fewer splits than the cluster has task slots — the
-    guide-§2.5 "input skew" mitigation (one unsplittable file, a
-    single-row-group parquet, one partition holding most of the data:
-    repartition immediately after the read).
+    """Repartition ``df`` by ``key_col`` iff the parquet row groups it
+    reads cover at most half the cluster's task slots — the guide-§2.5
+    "input skew" mitigation (one unsplittable file, a single-row-group
+    parquet: repartition immediately after the read).
 
-    The condition is what keeps this scale-safe: a corpus-sized input
-    naturally plans thousands of scan splits, so the repartition (and
-    its payload exchange) never fires at scale — it fires exactly when
-    the downstream per-row work (shingle explodes, token hashing)
-    would otherwise run on a handful of tasks while the rest of the
-    cluster idles, and in that regime the exchanged bytes are bounded
-    by what those few splits hold. Keyed (deterministic hash)
-    partitioning, never round-robin, so task retries reproduce the
-    same row placement.
+    A parquet row group is read by exactly one task, so the row-group
+    count bounds the scan's parallelism. Spark's split count does not:
+    it cuts each file into byte ranges of ``max(openCostInBytes,
+    bytes / slots)``, so a single-row-group file of a few MB plans
+    several splits of which only the one holding the row group's
+    midpoint reads any rows (sf0.1 ``lineitem``: 10.8 MB, one row
+    group, 3 splits at local[4]).
+
+    The decision reads no physical plan: ``inputFiles()`` comes from
+    the optimized plan, and every file holds at least one row group,
+    so more than ``target / 2`` files stops it before any footer is
+    read. Footer reads per call are therefore at most ``target / 2``,
+    and a corpus-sized input (thousands of files) reads none and
+    never spreads. When the spread fires, the downstream per-row work
+    (shingle explodes, token hashing) would otherwise run on a handful
+    of tasks while the rest of the cluster idles, and the exchanged
+    bytes are bounded by what those few row groups hold. Keyed
+    (deterministic hash) partitioning, never round-robin, so task
+    retries reproduce the same row placement.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        nparts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive: planning failure
+    target = df.sparkSession.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    if len(files) * 2 > target:
         return df
-    if nparts * 2 > target:  # over half the slots have a split; exactly half still spreads
+    groups = sum(
+        pq.read_metadata(path, filesystem=fs).num_row_groups
+        for fs, path in map(pafs.FileSystem.from_uri, files)
+    )
+    if groups * 2 > target:  # over half the slots have a row group; exactly half still spreads
         return df
     return df.repartition(target, key_col)

@@ -335,7 +335,9 @@ def q_source_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("source", "text")
     # persisted: the self-join's two sides AND the size table consume
-    # this frame — un-persisted each would re-run the explode+distinct
+    # this frame — un-persisted each would re-run the explode+distinct.
+    # The repartition is the distinct's own exchange on its leading
+    # key, placed before the explode, not an input spread.
     sh = persist(
         d.repartition(F.col("source"))
         .select(

@@ -553,10 +553,12 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-token language ID heuristic (C4) — deterministic argmax
     over per-language stopword counts."""
+    from cassowary_spark.operators.skew import spread_narrow_input
+
     d = load_table(spark, sf_dir, "documents")
-    # the marker-count expression tree is wide; spread it past the
-    # parquet file count (row-trivial shuffle, heavy projection after)
-    return d.repartition(F.col("doc_id")).select(
+    # the marker-count expression tree is wide: spread a few-row-group
+    # input over the task slots before it (no-op at scale)
+    return spread_narrow_input(d, "doc_id").select(
         "doc_id", "lang", lang_id(F.col("text")).alias("lang_pred")
     )
 
@@ -627,12 +629,14 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting (C4): winnowing-style min/max shingle
     hash — a stable content signature robust to reordering-free edits."""
     from cassowary_spark.operators.dedup import shingles_of_tokens
+    from cassowary_spark.operators.skew import spread_narrow_input
 
     d = load_table(spark, sf_dir, "documents")
-    # repartition before the explode: few parquet files would
-    # otherwise pin the shingle+md5 map stage to few tasks, and the
-    # id-hash partitioning is reused by the groupBy (no re-shuffle)
-    sh = d.repartition(F.col("doc_id")).withColumn("__toks", F.split("text", " ")).select(
+    # spread before the explode: a few-row-group input would otherwise
+    # pin the shingle+md5 map stage to few tasks; when the spread
+    # fires, its doc_id hash partitioning is reused by the groupBy
+    # (no re-shuffle), and at scale the scan itself is wide
+    sh = spread_narrow_input(d, "doc_id").withColumn("__toks", F.split("text", " ")).select(
         "doc_id", F.explode(shingles_of_tokens("__toks", 3)).alias("shingle")
     )
     return sh.groupBy("doc_id").agg(

@@ -17,9 +17,11 @@ unchanged zip archives (``_stat_gate_zip_invalidation``).
 from __future__ import annotations
 
 import compileall
+import contextlib
 import hashlib
 import importlib.util
 import os
+import re
 import tempfile
 import zipfile
 
@@ -95,9 +97,13 @@ def package_zip(pkg_dir: str = PACKAGE_DIR) -> str:
     tree gets a new zip and an unchanged one reuses the zip already in
     ``tempfile.gettempdir()``. A new zip is written under a
     process-unique name and moved into place, so no process ever reads
-    half a file. ``PyZipFile.writepy`` stores the ``.pyc``
-    of each module (PySpark already requires the driver's Python minor
-    version on the workers), so no worker compiles anything;
+    half a file; then the zips of earlier source states
+    (``<name>-<16 hex digits>.zip`` beside it) are deleted. A session
+    that shipped one keeps running: its workers import the copy
+    ``addPyFile`` put under their SparkFiles root.
+    ``PyZipFile.writepy`` stores the ``.pyc`` of each module (PySpark
+    already requires the driver's Python minor version on the
+    workers), so no worker compiles anything;
     ``compileall`` first refreshes any ``__pycache__`` entry whose
     recorded source stamp is out of date, because ``writepy`` trusts a
     ``.pyc`` that is merely newer than its source.
@@ -112,13 +118,19 @@ def package_zip(pkg_dir: str = PACKAGE_DIR) -> str:
                 with open(full, "rb") as fh:
                     h.update(fh.read())
     name = os.path.basename(pkg_dir.rstrip(os.sep))
-    path = os.path.join(tempfile.gettempdir(), f"{name}-{h.hexdigest()[:16]}.zip")
+    tmpdir = tempfile.gettempdir()
+    zip_name = f"{name}-{h.hexdigest()[:16]}.zip"
+    path = os.path.join(tmpdir, zip_name)
     if not os.path.exists(path):
         compileall.compile_dir(pkg_dir, quiet=1)
         tmp = f"{path}.{os.getpid()}.tmp"
         with zipfile.PyZipFile(tmp, "w") as zf:
             zf.writepy(pkg_dir)
         os.replace(tmp, path)
+        for f in os.listdir(tmpdir):
+            if f != zip_name and re.fullmatch(re.escape(name) + r"-[0-9a-f]{16}\.zip", f):
+                with contextlib.suppress(OSError):
+                    os.remove(os.path.join(tmpdir, f))
     return path
 
 
@@ -126,7 +138,8 @@ def ship_package(spark: SparkSession) -> None:
     """Put this package on the Python path of ``spark``'s workers.
 
     Idempotent per SparkContext: the zip (``package_zip``, built once
-    per process) is added with ``addPyFile`` only if that context does
+    per process, and again if another source state's build deleted
+    it) is added with ``addPyFile`` only if that context does
     not hold it yet. Call it before anything captures the context's
     Python includes: a UDF or DataSource is wrapped with the include
     list of the moment (``pyspark.sql.udf._wrap_function``). The
@@ -134,7 +147,7 @@ def ship_package(spark: SparkSession) -> None:
     the two ways a driver session reaches the engine.
     """
     global _shipped_zip
-    if _shipped_zip is None:
+    if _shipped_zip is None or not os.path.exists(_shipped_zip):
         _shipped_zip = package_zip()
     sc = spark.sparkContext
     if os.path.basename(_shipped_zip) not in sc._python_includes:

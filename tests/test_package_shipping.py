@@ -60,6 +60,27 @@ def test_package_zip_is_named_by_its_content(tmp_path, monkeypatch):
     assert edited != first and os.path.exists(edited)
 
 
+def test_package_zip_deletes_the_zips_of_earlier_source_states(tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.mkdir(tmp_path / "tmp")
+    pkg = tmp_path / "src" / "pkg"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "mod.py").write_text("X = 1\n")
+    notes = tmp_path / "tmp" / "pkg-notes.zip"
+    notes.write_bytes(b"not ours")
+
+    first = session.package_zip(str(pkg))
+    (pkg / "mod.py").write_text("X = 2\n")
+    second = session.package_zip(str(pkg))
+
+    assert second != first
+    assert sorted(os.listdir(tmp_path / "tmp")) == sorted(
+        [os.path.basename(second), "pkg-notes.zip"]
+    )
+    assert notes.read_bytes() == b"not ours"
+
+
 _CHILD = r"""
 import json, os, sys
 sys.path.insert(0, {repo!r})
